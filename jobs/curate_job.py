@@ -4,11 +4,17 @@ Chains the training-data operators over a documents table the way a real
 pretraining-data rebuild does, writing one parquet table per stage so every
 stage is independently resumable and auditable:
 
-    exact/near-dup clustering  -> keep one survivor per duplicate component
-    decontamination            -> drop docs overlapping the benchmark set
-    quality filter             -> Gopher-style word-count band (cheap gate)
-    stratified sampling        -> per-language md5-threshold downsampling
-    chunk + pack               -> training sequences with packing manifest
+    components  exact/near-dup clustering (one label per duplicate cluster)
+    curated     one survivor per component, minus the docs that overlap
+                the benchmark set (decontamination), fall outside the
+                Gopher-style word-count band (cheap quality gate) or lose
+                the per-language md5-threshold downsampling
+    sequences   chunk + pack: training sequences with packing manifest
+
+Each stage reads its predecessor's WRITTEN table, never its lazy plan: the
+survivor join reads ``components`` and chunking reads ``curated``, so no
+write re-runs the clustering, the decontamination scan or a sort that an
+earlier write already paid for.
 
 Usage (cluster):
     python jobs/make_pyfiles.py dist/deps.zip
@@ -45,11 +51,10 @@ def main(argv: list[str] | None = None) -> None:
         DECON_NGRAM,
         SAMPLE_DEFAULT_THRESHOLD,
         SAMPLE_THRESHOLDS,
-        CHUNK_STRIDE,
-        CHUNK_W,
         PACK_BUDGET,
         PACK_SHARDS,
         connected_components,
+        token_windows,
     )
     from smoldocling_ocr_spark.session import get_spark
 
@@ -57,12 +62,20 @@ def main(argv: list[str] | None = None) -> None:
     docs = spark.read.parquet(args.input)
     out = args.output.rstrip("/")
 
+    def write_table(df, name: str, *partition_cols: str):
+        """Write one stage's table and read it back with the written schema
+        (a partitionBy directory holding no files has none to infer)."""
+        writer = df.write.mode("overwrite")
+        if partition_cols:
+            writer = writer.partitionBy(*partition_cols)
+        writer.parquet(f"{out}/{name}")
+        return spark.read.schema(df.schema).parquet(f"{out}/{name}")
+
     # 1. duplicate clustering -> keep the component-min doc (the survivor)
-    comps = connected_components(docs)
+    comps = write_table(connected_components(docs), "components")
     survivors = docs.join(
         comps.filter(F.col("doc_id") == F.col("component")).select("doc_id"), "doc_id"
     )
-    comps.write.mode("overwrite").parquet(f"{out}/components")
 
     # 2. decontamination: drop docs sharing any benchmark 5-gram (the
     # benchmark rows themselves are held out of the training corpus too).
@@ -114,18 +127,10 @@ def main(argv: list[str] | None = None) -> None:
             thr = F.when(F.col("lang") == lang, F.lit(t)).otherwise(thr)
         survivors = survivors.filter(u < thr)
 
-    survivors.write.mode("overwrite").parquet(f"{out}/curated")
+    curated = write_table(survivors, "curated")
 
     # 5. chunk + pack into training sequences
-    toks = F.split(F.col("text"), " ")
-    n_chunks = (F.greatest(F.size(toks) - 1, F.lit(0)) / CHUNK_STRIDE).cast("int") + 1
-    chunks_col = F.transform(
-        F.sequence(F.lit(0), n_chunks - 1),
-        lambda i: F.slice(toks, i * CHUNK_STRIDE + 1, CHUNK_W),
-    )
-    chunks = survivors.select(
-        "doc_id", F.posexplode(chunks_col).alias("chunk_id", "ck")
-    ).select(
+    chunks = token_windows(curated).select(
         "doc_id",
         "chunk_id",
         F.col("ck"),
@@ -140,14 +145,16 @@ def main(argv: list[str] | None = None) -> None:
     packed = chunks.withColumn(
         "cum_before", F.coalesce(F.sum("n_tokens").over(w), F.lit(0))
     ).withColumn("bin", F.expr(f"cum_before div {PACK_BUDGET}"))
-    packed.select("shard", "bin", "doc_id", "chunk_id", "n_tokens", "ck").write.mode(
-        "overwrite"
-    ).partitionBy("shard").parquet(f"{out}/sequences")
+    sequences = write_table(
+        packed.select("shard", "bin", "doc_id", "chunk_id", "n_tokens", "ck"),
+        "sequences",
+        "shard",
+    )
 
     counts = {
         "input_docs": docs.count(),
-        "curated_docs": spark.read.parquet(f"{out}/curated").count(),
-        "sequences_rows": spark.read.parquet(f"{out}/sequences").count(),
+        "curated_docs": curated.count(),
+        "sequences_rows": sequences.count(),
     }
     print(counts)
     spark.stop()

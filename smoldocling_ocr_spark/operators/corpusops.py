@@ -293,6 +293,23 @@ PACK_BUDGET = 256  # tokens per packed sequence
 PACK_SHARDS = 16  # packing shards: bounded window partitions at any scale
 
 
+def token_windows(docs: DataFrame) -> DataFrame:
+    """(doc_id, chunk_id, ck): overlapping windows of CHUNK_W tokens of
+    split(text, ' ') at CHUNK_STRIDE, last window ragged — the one chunking
+    law of training_chunks, sequence_packing and the curate job. The split
+    is projected as a column first so the window lambda slices a value,
+    not the split expression (which it would re-run per window)."""
+    toks = F.col("toks")
+    n_chunks = (F.greatest(F.size(toks) - 1, F.lit(0)) / CHUNK_STRIDE).cast("int") + 1
+    chunks = F.transform(
+        F.sequence(F.lit(0), n_chunks - 1),
+        lambda i: F.slice(toks, i * CHUNK_STRIDE + 1, CHUNK_W),
+    )
+    return docs.select("doc_id", F.split(F.col("text"), " ").alias("toks")).select(
+        "doc_id", F.posexplode(chunks).alias("chunk_id", "ck")
+    )
+
+
 def register_training(query) -> None:
     @query(
         "training_chunks",
@@ -318,16 +335,8 @@ def register_training(query) -> None:
         ragged. Pure per-doc projection + explode — embarrassingly
         parallel, no shuffle except the presentation sort."""
         docs = read_table(spark, sf_dir, "documents")
-        toks = F.split(F.col("text"), " ")
-        n_chunks = (F.greatest(F.size(toks) - 1, F.lit(0)) / CHUNK_STRIDE).cast(
-            "int"
-        ) + 1
-        chunks = F.transform(
-            F.sequence(F.lit(0), n_chunks - 1),
-            lambda i: F.slice(toks, i * CHUNK_STRIDE + 1, CHUNK_W),
-        )
         return (
-            docs.select("doc_id", F.posexplode(chunks).alias("chunk_id", "ck"))
+            token_windows(docs)
             .select(
                 "doc_id",
                 "chunk_id",
@@ -375,17 +384,12 @@ def register_training(query) -> None:
         Exchange SinglePartition — forbidden); shards pack independently
         exactly as real pipelines pack per output file."""
         docs = read_table(spark, sf_dir, "documents")
-        toks = F.split(F.col("text"), " ")
-        n_chunks = (F.greatest(F.size(toks) - 1, F.lit(0)) / CHUNK_STRIDE).cast(
-            "int"
-        ) + 1
-        sizes = F.transform(
-            F.sequence(F.lit(0), n_chunks - 1),
-            lambda i: F.size(F.slice(toks, i * CHUNK_STRIDE + 1, CHUNK_W)),
+        chunks = token_windows(docs).select(
+            "doc_id",
+            "chunk_id",
+            F.size("ck").alias("n_tokens"),
+            (F.col("doc_id") % PACK_SHARDS).alias("shard"),
         )
-        chunks = docs.select(
-            "doc_id", F.posexplode(sizes).alias("chunk_id", "n_tokens")
-        ).withColumn("shard", F.col("doc_id") % PACK_SHARDS)
         w = (
             W.partitionBy("shard")
             .orderBy("doc_id", "chunk_id")

@@ -31,16 +31,21 @@ JACCARD_THRESHOLD = 0.5
 
 def word_grams(toks, n: int):
     """Array of word n-grams (space-joined) of a token-array column; EMPTY
-    — not crashing — for docs with fewer than n tokens. The unguarded form
-    sequence(0, greatest(size-n, -1)) DESCENDS to [0, -1] when size < n
-    (Spark sequence semantics) and slice(toks, 0, n) then throws
-    INVALID_PARAMETER_VALUE.START; the DuckDB oracles' range(greatest(.,0))
-    is immune, so short docs would also diverge cross-engine. One shared
-    guarded law for every gram-based operator."""
-    grams = F.transform(
-        F.sequence(F.lit(0), F.size(toks) - n),
-        lambda i: F.concat_ws(" ", F.slice(toks, i + 1, n)),
-    )
+    — not crashing — for docs with fewer than n tokens (the DuckDB oracles'
+    range(greatest(., 0)) semantics). One shared guarded law for every
+    gram-based operator.
+
+    Gram i is element i of n shifted slices zipped together: slice k holds
+    tokens k+1 .. k+m with m = size - n + 1 grams. The lambda sees only
+    the zipped struct and must never reference ``toks``: callers pass an
+    expression such as split(lower(text), ' '), and a higher-order
+    function's lambda is interpreted per element with no subexpression
+    elimination, so a lambda that slices ``toks`` re-splits the whole
+    document once per gram — quadratic in document length. Below the
+    width the guard keeps the negative slice length from being evaluated."""
+    m = F.size(toks) - n + 1
+    shifted = F.arrays_zip(*[F.slice(toks, k + 1, m) for k in range(n)])
+    grams = F.transform(shifted, lambda z: F.concat_ws(" ", *[z[str(k)] for k in range(n)]))
     return F.when(F.size(toks) >= n, grams).otherwise(F.array().cast("array<string>"))
 
 
@@ -177,7 +182,11 @@ def register(query) -> None:
         # per doc after array_distinct, and df/sz/candidates derive from
         # the identical per-doc sets (the oracle's DISTINCT is per doc_id
         # too — a shingle appearing in many docs still yields one row per
-        # doc either way).
+        # doc either way). Caveat: the dedup runs on gram strings BEFORE
+        # xxhash64, so two distinct grams of one doc that collide in 64 bits
+        # (~2^-64 per pair) give duplicate (doc_id, sh) rows and inflate that
+        # hash's df by one. That only perturbs the rarest-first prefix order,
+        # never the verified sets (collect_set/array_intersect dedup them).
         sh = (
             spread(docs)
             .select("doc_id", F.explode(F.array_distinct(word_grams(toks, n))).alias("g"))
@@ -247,15 +256,24 @@ def register(query) -> None:
         # inside `union`. With t = p/q exactly (Fraction(double) is the
         # double's exact rational; t=0.5 -> 1/2):
         #   inter/union >= p/q  <=>  (q+p)*inter >= p*(|A|+|B|)
-        # in exact arithmetic, and the double division cannot flip the
-        # comparison: inter, |A|, |B| are exact small ints and the true
-        # quotient is either >= t or <= t - 1/(q*union), a gap far wider
-        # than half an ulp at t for any feasible union — so this is
-        # bit-equivalent to the oracle's `n_common*1.0/union >= t`.
+        # in exact arithmetic. The double division cannot flip the
+        # comparison only while q is small: inter, |A|, |B| are exact ints
+        # and the true quotient is either >= t or <= t - 1/(q*union), a gap
+        # wider than half an ulp at t while q*union stays far below 2^53.
+        # A double's exact rational has a power-of-two denominator, so the
+        # assert admits only dyadic thresholds k/2^j with 2^j <= 1000 (0.5,
+        # 0.75, 0.625, ...); for those this is bit-equivalent to the
+        # oracle's `n_common*1.0/union >= t`. A decimal such as 0.8 is
+        # 3602879701896397/2^52: the equivalence fails at exact 4/5
+        # quotients and p*(|A|+|B|) overflows.
         # The emitted `jaccard` value still uses the same double division.
         from fractions import Fraction
 
         tf = Fraction(JACCARD_THRESHOLD)
+        assert tf.denominator <= 1000, (
+            f"JACCARD_THRESHOLD={JACCARD_THRESHOLD} is not a small-denominator "
+            "dyadic fraction; the integer verify filter is exact only for those"
+        )
         keep = inter * F.lit(tf.denominator + tf.numerator) >= (
             F.size("shs_a") + F.size("shs_b")
         ) * F.lit(tf.numerator)
@@ -461,7 +479,9 @@ def span_dedup_frame(
 
     A document with >= owner_enc spans would silently collide owner keys
     (wrong keep/drop decisions), so the encoding raises instead."""
-    toks = F.split(F.col("text"), " ")
+    # the lambda slices the projected `toks` column, never the split itself
+    # (see word_grams: a lambda re-evaluates outer expressions per element)
+    toks = F.col("toks")
     n_chunks = F.floor((F.size(toks) + span - 1) / span).cast("int")
     spans = F.transform(
         F.sequence(F.lit(0), n_chunks - 1),
@@ -471,7 +491,9 @@ def span_dedup_frame(
     # 2.19 s interleaved A/B at sf0.1): the ex subtree is evaluated five
     # times (owner ×2, hot/cold branches, hot list) and each evaluation
     # would repeat the width-restoring exchange of the full text column.
-    ex = docs.select("doc_id", F.posexplode(spans).alias("pos", "span"))
+    ex = docs.select("doc_id", F.split(F.col("text"), " ").alias("toks")).select(
+        "doc_id", F.posexplode(spans).alias("pos", "span")
+    )
     # owner = doc_id*owner_enc + pos, valid only while pos < owner_enc —
     # fail loudly on oversized documents instead of colliding silently
     enc = F.when(
@@ -587,15 +609,7 @@ def substring_dedup_frame(
     merge (partitioned by doc_id, bounded rows) -> doc-keyed join back for
     the token rebuild. No pairwise doc comparison anywhere."""
     toks = F.split(F.col("text"), " ")
-    n = F.size(toks)
-    grams_arr = F.when(
-        n >= L,
-        F.transform(
-            F.sequence(F.lit(0), n - L),
-            lambda i: F.concat_ws(" ", F.slice(toks, i + 1, L)),
-        ),
-    ).otherwise(F.array().cast("array<string>"))
-    ex = docs.select("doc_id", F.posexplode(grams_arr).alias("pos", "gram"))
+    ex = docs.select("doc_id", F.posexplode(word_grams(toks, L)).alias("pos", "gram"))
     enc = F.when(
         F.col("pos") >= owner_enc,
         F.raise_error(F.lit("exact_substring_dedup: pos overflows owner encoding")).cast(

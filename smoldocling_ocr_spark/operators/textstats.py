@@ -10,6 +10,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..sources.documents import read_table
+from .dedup import word_grams
 
 _EN_STOPWORDS_RE = r"\b(the|and|is|in|to|of|a|for|that|it|with|as|was|be)\b"
 # BPE-ish pre-tokenizer: letter runs, digit runs, single punctuation marks
@@ -487,15 +488,7 @@ def register(query) -> None:
         docs = read_table(spark, sf_dir, "documents")
         words = F.regexp_extract_all(F.col("text"), F.lit(r"\S+"), 0)
         lines_arr = F.split(F.col("text"), "\n")
-        nb = F.greatest(F.size(words) - 1, F.lit(0))
-        bigrams = F.when(F.size(words) < 2, F.array().cast("array<string>")).otherwise(
-            F.transform(
-                F.sequence(F.lit(1), nb),
-                lambda i: F.concat(
-                    F.element_at(words, i), F.lit(" "), F.element_at(words, i + 1)
-                ),
-            )
-        )
+        bigrams = word_grams(words, 2)
         sorted_b = F.sort_array(bigrams)
         run_fold = F.aggregate(
             sorted_b,

@@ -342,8 +342,8 @@ def test_sequence_packing_conservation_invariants(spark):
 
 def test_gram_ops_survive_short_docs(spark):
     """Docs shorter than the gram width must yield EMPTY gram sets (the
-    oracle semantics), not crash: Spark sequence(0, size-n) DESCENDS to
-    [0,-1] when size<n and slice(toks, 0, n) throws — word_grams guards
+    oracle semantics), not crash: below the width the gram slices get a
+    negative length, and Spark's slice throws on one — word_grams guards
     every gram-based operator (review r5 finding)."""
     from smoldocling_ocr_spark.operators.corpusops import connected_components
     from smoldocling_ocr_spark.operators.dedup import lsh_bands, word_grams
@@ -397,3 +397,44 @@ def test_decontamination_handles_short_docs_vs_oracle(spark):
         )
         o = _hash_frame(con.execute(oracle_queries()["decontamination_scan"]).df())
         assert s == o
+
+
+def _seed_word_grams(toks, n: int):
+    """The original word_grams formulation, kept as the reference: the
+    lambda slices ``toks`` itself, so an expression ``toks`` is re-evaluated
+    for every gram (quadratic in document length)."""
+    grams = F.transform(
+        F.sequence(F.lit(0), F.size(toks) - n),
+        lambda i: F.concat_ws(" ", F.slice(toks, i + 1, n)),
+    )
+    return F.when(F.size(toks) >= n, grams).otherwise(F.array().cast("array<string>"))
+
+
+def test_word_grams_matches_seed_formulation(spark):
+    """The zipped-slices word_grams gives the same arrays as the per-gram
+    slice form for every width 1..5: on the sf0.001 corpus, on long docs,
+    and on the edge texts (empty, NULL, one word, double and
+    leading/trailing spaces, repeated tokens)."""
+    from smoldocling_ocr_spark.operators.dedup import word_grams
+
+    edge = [
+        "",
+        None,
+        "one",
+        "two  spaces  here",
+        " leading and trailing ",
+        "  ",
+        "a a a a a a a a",
+        "x y x y x y",
+        " ".join(f"w{i % 37}" for i in range(700)),
+    ]
+    docs = spark.read.parquet(f"{SF_DIR}/documents.parquet").select("doc_id", "text")
+    docs = docs.unionByName(
+        spark.createDataFrame(
+            [(-1 - i, t) for i, t in enumerate(edge)], "doc_id long, text string"
+        )
+    )
+    for n in range(1, 6):
+        for toks in (F.split(F.lower(F.col("text")), " "), F.split(F.col("text"), " ")):
+            diff = docs.filter(~word_grams(toks, n).eqNullSafe(_seed_word_grams(toks, n)))
+            assert diff.count() == 0, (n, diff.limit(3).collect())

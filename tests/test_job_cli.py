@@ -190,3 +190,25 @@ def test_curate_job_benchmark_duplicate_contaminates_twin(spark, tmp_path):
     assert 6 not in curated_ids  # the benchmark's twin is contaminated
     assert 7 not in curated_ids  # the benchmark itself is held out
     assert 2 in curated_ids
+
+
+def test_curate_job_empty_sequences(spark, tmp_path):
+    """An input whose every doc fails the word-count gate leaves `curated`
+    and `sequences` empty. The partitioned `sequences` directory then holds
+    no parquet file, and the job must still finish: it reads its tables
+    back with the written schema instead of inferring one."""
+    rows = [
+        (1, "ok", "en", "s", 2),
+        (2, "two words", "en", "s", 9),
+        (3, "ok", "en", "s", 2),  # exact duplicate of doc 1
+    ]
+    docs = spark.createDataFrame(rows, ["doc_id", "text", "lang", "source", "n_chars"])
+    inp = str(tmp_path / "docs")
+    docs.write.parquet(inp)
+    out = str(tmp_path / "curated")
+    _run_curate(["--input", inp, "--output", out, "--cores", "8"])
+
+    assert spark.read.parquet(f"{out}/components").count() == 3
+    assert spark.read.parquet(f"{out}/curated").count() == 0
+    seq_files = [f for _, _, fs in os.walk(f"{out}/sequences") for f in fs if f.endswith(".parquet")]
+    assert seq_files == []

@@ -9,6 +9,9 @@ repartition.
 
 from __future__ import annotations
 
+import contextlib
+import re
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -156,18 +159,12 @@ def test_salted_partitioning_breaks_domain_skew(spark):
     assert max(sizes) < max(dom_sizes), "salting should beat domain partitioning"
 
 
-def test_no_unpartitioned_windows_anywhere(spark):
+def test_no_unpartitioned_windows_anywhere(catalog_plans):
     """A window with no PARTITION BY moves every row to one partition — fatal
     at 100 TB. Global scalars must use the broadcast 1-row agg pattern
     (catalog._with_global_agg). Scan every catalog query's physical plan."""
-    from smoldocling_ocr_spark.plans.catalog import spark_queries
-
     offenders = []
-    for name, fn in spark_queries().items():
-        try:
-            plan = _plan(fn(spark, SF_DIR))
-        except Exception:
-            continue  # queries needing other fixtures are covered elsewhere
+    for name, (plan, _) in catalog_plans.items():
         # an unpartitioned Window requires Exchange SinglePartition under it;
         # partitioned windows hash-partition, global aggs have no Window node
         if "Window" in plan and "SinglePartition, ENSURE_REQUIREMENTS" in plan:
@@ -444,3 +441,145 @@ def test_kmeans_assignment_is_shuffle_free(spark):
     # name in the node-detail section, so count tree entries)
     assert agg_plan.count("+- Exchange") == 1
     assert "Join" not in agg_plan and "BatchEvalPython" not in agg_plan
+
+
+# A higher-order function's lambda is interpreted per element with no
+# subexpression elimination, so a lambda body that tokenizes an OUTER value
+# (split(text#1, ...) rather than split(lambda x#5, ...), which an alias
+# renders as split(namedlambdavariable(), ...)) re-splits the whole
+# document once per element: quadratic in document length.
+_RESPLIT = re.compile(r"\bsplit\((?!lambda |namedlambdavariable\(\))")
+
+
+def _lambda_bodies(plan: str) -> list[str]:
+    """The text of every ``lambdafunction(...)`` in a plan string (nested
+    ones are also returned on their own)."""
+    bodies = []
+    start = plan.find("lambdafunction(")
+    while start >= 0:
+        depth = 0
+        for end in range(start + len("lambdafunction"), len(plan)):
+            depth += {"(": 1, ")": -1}.get(plan[end], 0)
+            if depth == 0:
+                break
+        bodies.append(plan[start : end + 1])
+        start = plan.find("lambdafunction(", start + 1)
+    return bodies
+
+
+def _resplitting_lambdas(plan: str) -> list[str]:
+    return [b for b in _lambda_bodies(plan) if _RESPLIT.search(b)]
+
+
+def _optimized(df) -> str:
+    return df._jdf.queryExecution().optimizedPlan().toString()
+
+
+@contextlib.contextmanager
+def _recording_plans(spark):
+    """Yields a list that collects (label, optimized plan) for every frame a
+    localCheckpoint (whose plan is otherwise replaced by an opaque RDD scan)
+    or a parquet write sees, with plan strings untruncated."""
+    from pyspark.sql import DataFrameWriter
+
+    plans: list[tuple[str, str]] = []
+    frame_cls = type(spark.range(1))
+    checkpoint = frame_cls.localCheckpoint
+    write = DataFrameWriter.parquet
+
+    def recording_checkpoint(df, *args, **kwargs):
+        plans.append(("localCheckpoint", _optimized(df)))
+        return checkpoint(df, *args, **kwargs)
+
+    def recording_write(writer, path, *args, **kwargs):
+        plans.append((str(path), _optimized(writer._df)))
+        return write(writer, path, *args, **kwargs)
+
+    old = spark.conf.get("spark.sql.debug.maxToStringFields")
+    spark.conf.set("spark.sql.debug.maxToStringFields", "100000")
+    try:
+        with pytest.MonkeyPatch.context() as mp:
+            mp.setattr(frame_cls, "localCheckpoint", recording_checkpoint)
+            mp.setattr(DataFrameWriter, "parquet", recording_write)
+            yield plans
+    finally:
+        spark.conf.set("spark.sql.debug.maxToStringFields", old)
+
+
+@pytest.fixture(scope="module")
+def catalog_plans(spark):
+    """name -> (formatted physical plan, optimized plans of the query and of
+    every frame it checkpoints) for each catalog query that builds here."""
+    from smoldocling_ocr_spark.plans.catalog import spark_queries
+
+    out = {}
+    with _recording_plans(spark) as recorded:
+        for name, fn in spark_queries().items():
+            del recorded[:]
+            try:
+                df = fn(spark, SF_DIR)
+                out[name] = (_plan(df), [_optimized(df)] + [p for _, p in recorded])
+            except Exception:
+                continue  # queries needing other fixtures are covered elsewhere
+    return out
+
+
+def test_lambda_body_lint_catches_resplit(spark):
+    """The lint flags the per-gram re-split form and passes the zipped form
+    and a lambda that splits its own element."""
+    from smoldocling_ocr_spark.operators.dedup import word_grams
+    from tests.test_corpusops import _seed_word_grams
+
+    docs = spark.createDataFrame([(1, "a b c d")], "doc_id long, text string")
+    toks = F.split(F.col("text"), " ")
+    assert _resplitting_lambdas(_optimized(docs.select(_seed_word_grams(toks, 2))))
+    assert not _resplitting_lambdas(_optimized(docs.select(word_grams(toks, 2))))
+    own = F.transform(F.array("text"), lambda t: F.size(F.split(t, " ")))
+    assert not _resplitting_lambdas(_optimized(docs.select(own)))
+
+
+def test_no_lambda_resplits_in_catalog_plans(catalog_plans):
+    """No catalog query — nor any frame it checkpoints on the way — has a
+    lambda that re-splits an outer column."""
+    offenders, with_lambdas = [], set()
+    for name, (_, plans) in catalog_plans.items():
+        if any("lambdafunction(" in p for p in plans):
+            with_lambdas.add(name)
+        if any(_resplitting_lambdas(p) for p in plans):
+            offenders.append(name)
+    assert not offenders, f"lambda re-splits an outer column in: {offenders}"
+    # the gram and chunk queries were seen, including checkpointed subplans
+    assert {
+        "dedup_minhash_lsh",
+        "dedup_ngram_jaccard",
+        "global_span_dedup",
+        "exact_substring_dedup",
+        "training_chunks",
+        "sequence_packing",
+        "gopher_repetition_filters",
+    } <= with_lambdas
+
+
+def test_no_lambda_resplits_in_curate_job(spark, monkeypatch, tmp_path):
+    """The curate job's gram (decontamination, clustering) and chunk
+    expressions keep their splits outside every lambda: run the job
+    in-process and lint each frame it checkpoints or writes."""
+    import importlib.util
+    import os
+
+    from pyspark.sql import SparkSession
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    spec = importlib.util.spec_from_file_location(
+        "curate_job", os.path.join(root, "jobs", "curate_job.py")
+    )
+    job = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(job)
+    monkeypatch.setattr(SparkSession, "stop", lambda self: None)
+    with _recording_plans(spark) as recorded:
+        job.main(["--input", f"{SF_DIR}/documents.parquet", "--output", str(tmp_path / "out")])
+
+    written = {os.path.basename(label) for label, _ in recorded}
+    assert {"components", "curated", "sequences"} <= written
+    offenders = [label for label, p in recorded if _resplitting_lambdas(p)]
+    assert not offenders, f"lambda re-splits an outer column in: {offenders}"
