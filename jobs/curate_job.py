@@ -16,6 +16,12 @@ survivor join reads ``components`` and chunking reads ``curated``, so no
 write re-runs the clustering, the decontamination scan or a sort that an
 earlier write already paid for.
 
+The stages are the catalog's corpus operators (``operators.corpusops``):
+``connected_components``, ``benchmark_hits`` (the ``decontamination_scan``
+core), ``stratified_sample`` (``stratified_sample_by_lang``) and
+``packed_chunks`` (``sequence_packing``) — the job composes them and owns
+only the survivor choice, the benchmark hold-out and the word-count gate.
+
 Usage (cluster):
     python jobs/make_pyfiles.py dist/deps.zip
     spark-submit --py-files dist/deps.zip jobs/curate_job.py \
@@ -43,18 +49,14 @@ def main(argv: list[str] | None = None) -> None:
     parser.add_argument("--cores", default=None, help="local[N] cores (local mode only)")
     args = parser.parse_args(argv)
 
-    from pyspark.sql import Window as W, functions as F
+    from pyspark.sql import functions as F
 
     from smoldocling_ocr_spark.operators.corpusops import (
-        BENCH_MOD,
-        BENCH_REM,
-        DECON_NGRAM,
-        SAMPLE_DEFAULT_THRESHOLD,
-        SAMPLE_THRESHOLDS,
-        PACK_BUDGET,
-        PACK_SHARDS,
+        benchmark_hits,
         connected_components,
-        token_windows,
+        is_bench,
+        packed_chunks,
+        stratified_sample,
     )
     from smoldocling_ocr_spark.session import get_spark
 
@@ -77,37 +79,15 @@ def main(argv: list[str] | None = None) -> None:
         comps.filter(F.col("doc_id") == F.col("component")).select("doc_id"), "doc_id"
     )
 
-    # 2. decontamination: drop docs sharing any benchmark 5-gram (the
-    # benchmark rows themselves are held out of the training corpus too).
-    # The benchmark gram index is built from ALL input docs, NOT from the
-    # dedup survivors: a benchmark doc removed by duplicate clustering
-    # must still contaminate its surviving twin (building the index from
-    # survivors would let the benchmark's own text ship in the training
-    # set through a duplicate). word_grams guards docs shorter than the
-    # gram width.
-    # The benchmark split is held out of the training corpus UNCONDITIONALLY
-    # (r6, ADVICE r5: the ~is_bench filter used to live inside the branch, so
-    # --skip-decontamination shipped the held-out benchmark docs into the
-    # curated output); the flag skips only the n-gram overlap scan.
-    is_bench = F.col("doc_id") % BENCH_MOD == BENCH_REM
-    survivors = survivors.filter(~is_bench)
+    # 2. decontamination: drop docs sharing any benchmark 5-gram. The
+    # benchmark split is held out of the training corpus UNCONDITIONALLY
+    # (r6, ADVICE r5: --skip-decontamination used to ship the held-out
+    # benchmark docs); the flag skips only the n-gram overlap scan, whose
+    # benchmark index comes from ALL input docs, so a benchmark doc removed
+    # by duplicate clustering still contaminates its surviving twin.
+    survivors = survivors.filter(~is_bench())
     if not args.skip_decontamination:
-        from smoldocling_ocr_spark.operators.dedup import word_grams
-
-        toks = F.split(F.lower(F.col("text")), " ")
-        bench = (
-            docs.filter(is_bench)
-            .select(F.explode(F.array_distinct(word_grams(toks, DECON_NGRAM))).alias("gram"))
-            .distinct()
-        )
-        surv_grams = survivors.select(
-            "doc_id",
-            F.explode(F.array_distinct(word_grams(toks, DECON_NGRAM))).alias("gram"),
-        )
-        contaminated = (
-            surv_grams.join(F.broadcast(bench), "gram").select("doc_id").distinct()
-        )
-        survivors = survivors.join(contaminated, "doc_id", "left_anti")
+        survivors = survivors.join(benchmark_hits(survivors, docs), "doc_id", "left_anti")
 
     # 3. cheap quality gate (full Gopher bank lives in textstats; the word
     # band is the stage-gate form)
@@ -119,37 +99,12 @@ def main(argv: list[str] | None = None) -> None:
 
     # 4. per-language deterministic downsampling
     if not args.skip_sampling:
-        u = F.substring(
-            F.md5(F.concat(F.lit("smpl:"), F.col("doc_id").cast("string"))), 1, 8
-        )
-        thr = F.lit(SAMPLE_DEFAULT_THRESHOLD)
-        for lang, t in reversed(list(SAMPLE_THRESHOLDS.items())):
-            thr = F.when(F.col("lang") == lang, F.lit(t)).otherwise(thr)
-        survivors = survivors.filter(u < thr)
+        survivors = stratified_sample(survivors)
 
     curated = write_table(survivors, "curated")
 
     # 5. chunk + pack into training sequences
-    chunks = token_windows(curated).select(
-        "doc_id",
-        "chunk_id",
-        F.col("ck"),
-        F.size("ck").alias("n_tokens"),
-        (F.col("doc_id") % PACK_SHARDS).alias("shard"),
-    )
-    w = (
-        W.partitionBy("shard")
-        .orderBy("doc_id", "chunk_id")
-        .rowsBetween(W.unboundedPreceding, -1)
-    )
-    packed = chunks.withColumn(
-        "cum_before", F.coalesce(F.sum("n_tokens").over(w), F.lit(0))
-    ).withColumn("bin", F.expr(f"cum_before div {PACK_BUDGET}"))
-    sequences = write_table(
-        packed.select("shard", "bin", "doc_id", "chunk_id", "n_tokens", "ck"),
-        "sequences",
-        "shard",
-    )
+    sequences = write_table(packed_chunks(curated), "sequences", "shard")
 
     counts = {
         "input_docs": docs.count(),

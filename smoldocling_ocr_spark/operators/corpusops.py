@@ -28,6 +28,11 @@ training-data rebuild needs around it).
   threshold STRING so both engines decide membership with a pure string
   compare (no float arithmetic anywhere). A pure narrow projection+filter:
   zero shuffles at any corpus size, deterministic across reruns/resumes.
+
+The decontamination, sampling and packing queries are thin wrappers around
+DataFrame→DataFrame cores (:func:`benchmark_hits`, :func:`stratified_sample`,
+:func:`packed_chunks`) that ``jobs/curate_job.py`` calls too, so the catalog
+query, the job and the tests run one implementation of each operator.
 """
 
 from __future__ import annotations
@@ -148,6 +153,51 @@ def connected_components(docs: DataFrame, max_iters: int = CC_MAX_ITERS) -> Data
     )
 
 
+def is_bench():
+    """The held-out benchmark split: every BENCH_MOD-th doc_id."""
+    return F.col("doc_id") % BENCH_MOD == BENCH_REM
+
+
+def benchmark_hits(cands: DataFrame, docs: DataFrame) -> DataFrame:
+    """(doc_id, matched_ngrams) for each candidate doc sharing a distinct
+    word DECON_NGRAM-gram with the benchmark split of ``docs``.
+
+    The benchmark index is built from ``docs`` as given, not from the
+    candidates: a benchmark doc dropped upstream (e.g. as a duplicate) must
+    still contaminate its surviving twin. Benchmarks are small by nature, so
+    the distinct benchmark grams ride as one explicit broadcast and the scan
+    is a map-side join; the only shuffle is the per-doc hit count. Grams are
+    deduped per doc with array_distinct before the explode (the oracle's
+    SELECT DISTINCT (doc_id, gram) with zero shuffle), and word_grams
+    yields none for docs shorter than the gram width."""
+    toks = F.split(F.lower(F.col("text")), " ")
+
+    def grams(df: DataFrame) -> DataFrame:
+        return df.select(
+            "doc_id", F.explode(F.array_distinct(word_grams(toks, DECON_NGRAM))).alias("gram")
+        )
+
+    bench = grams(docs.filter(is_bench())).select("gram").distinct()
+    return (
+        grams(cands)
+        .join(F.broadcast(bench), "gram")
+        .groupBy("doc_id")
+        .agg(F.count("*").alias("matched_ngrams"))
+    )
+
+
+def stratified_sample(docs: DataFrame) -> DataFrame:
+    """The docs kept by the per-language downsampling: a string compare
+    between the doc's md5-uniform (first 8 hex nibbles of 'smpl:<doc_id>')
+    and the language's exact hex threshold — reproducible across reruns,
+    engines and resume boundaries, zero shuffles."""
+    u = F.substring(F.md5(F.concat(F.lit("smpl:"), F.col("doc_id").cast("string"))), 1, 8)
+    thr = F.lit(SAMPLE_DEFAULT_THRESHOLD)
+    for lang, t in reversed(list(SAMPLE_THRESHOLDS.items())):
+        thr = F.when(F.col("lang") == lang, F.lit(t)).otherwise(thr)
+    return docs.filter(u < thr)
+
+
 def register(query) -> None:
     seed_sql = ",".join(str(s) for s in range(MINHASH_SEEDS))
 
@@ -223,32 +273,13 @@ def register(query) -> None:
         """,
     )
     def decon_query(spark: SparkSession, sf_dir: str) -> DataFrame:
-        """Benchmark n-gram decontamination: the benchmark's distinct
-        5-grams are a bounded relation (benchmarks are small by nature) →
-        explicit broadcast → map-side inner join against per-doc grams;
-        the only shuffle is the per-doc hit count."""
+        """Benchmark n-gram decontamination of every non-benchmark doc:
+        :func:`benchmark_hits`, zero-filled for docs with no hit."""
         docs = read_table(spark, sf_dir, "documents")
-        toks = F.split(F.lower(F.col("text")), " ")
-        # per-doc dedup via array_distinct BEFORE the explode: the oracle's
-        # SELECT DISTINCT (doc_id, gram) semantics with ZERO shuffle — a
-        # global .distinct() here would shuffle the corpus-sized gram
-        # relation for nothing; word_grams guards docs shorter than the
-        # gram width (empty array, matching the oracle)
-        grams = docs.select(
-            "doc_id",
-            F.explode(F.array_distinct(word_grams(toks, DECON_NGRAM))).alias("gram"),
-        )
-        is_bench = F.col("doc_id") % BENCH_MOD == BENCH_REM
-        bench = grams.filter(is_bench).select("gram").distinct()
-        hits = (
-            grams.filter(~is_bench)
-            .join(F.broadcast(bench), "gram")
-            .groupBy("doc_id")
-            .agg(F.count("*").alias("matched_ngrams"))
-        )
+        train = docs.filter(~is_bench())
+        hits = benchmark_hits(train, docs)
         return (
-            docs.filter(~is_bench)
-            .select("doc_id")
+            train.select("doc_id")
             .join(hits, "doc_id", "left")
             .select(
                 "doc_id",
@@ -272,17 +303,10 @@ def register(query) -> None:
         """,
     )
     def sample_query(spark: SparkSession, sf_dir: str) -> DataFrame:
-        """Deterministic language-stratified downsampling: membership is a
-        string compare between the doc's md5-uniform (first 8 hex nibbles)
-        and the language's exact hex threshold — reproducible across
-        reruns, engines, and resume boundaries, zero shuffles."""
+        """Deterministic language-stratified downsampling
+        (:func:`stratified_sample`)."""
         docs = read_table(spark, sf_dir, "documents")
-        u = F.substring(F.md5(F.concat(F.lit("smpl:"), F.col("doc_id").cast("string"))), 1, 8)
-        thr = F.col("lang")
-        expr = F.lit(SAMPLE_DEFAULT_THRESHOLD)
-        for lang, t in reversed(list(SAMPLE_THRESHOLDS.items())):
-            expr = F.when(thr == lang, F.lit(t)).otherwise(expr)
-        return docs.filter(u < expr).select("doc_id", "lang").orderBy("doc_id")
+        return stratified_sample(docs).select("doc_id", "lang").orderBy("doc_id")
 
 
 # --- training-sequence production (chunking + packing) ----------------------
@@ -307,6 +331,34 @@ def token_windows(docs: DataFrame) -> DataFrame:
     )
     return docs.select("doc_id", F.split(F.col("text"), " ").alias("toks")).select(
         "doc_id", F.posexplode(chunks).alias("chunk_id", "ck")
+    )
+
+
+def packed_chunks(docs: DataFrame) -> DataFrame:
+    """(shard, bin, doc_id, chunk_id, n_tokens, ck): GPT-style
+    concat-then-cut sequence packing of the :func:`token_windows` chunks.
+    Chunks stream in deterministic (doc_id, chunk_id) order within a shard
+    and land in bin = floor(cumulative_tokens_before / PACK_BUDGET).
+    Sharding by doc_id % PACK_SHARDS keeps every packing window partition
+    bounded at any corpus size (a single global cumsum would be an Exchange
+    SinglePartition — forbidden); shards pack independently exactly as real
+    pipelines pack per output file."""
+    chunks = token_windows(docs).select(
+        "doc_id",
+        "chunk_id",
+        "ck",
+        F.size("ck").alias("n_tokens"),
+        (F.col("doc_id") % PACK_SHARDS).alias("shard"),
+    )
+    w = (
+        W.partitionBy("shard")
+        .orderBy("doc_id", "chunk_id")
+        .rowsBetween(W.unboundedPreceding, -1)
+    )
+    return (
+        chunks.withColumn("cum_before", F.coalesce(F.sum("n_tokens").over(w), F.lit(0)))
+        .withColumn("bin", F.expr(f"cum_before div {PACK_BUDGET}"))
+        .select("shard", "bin", "doc_id", "chunk_id", "n_tokens", "ck")
     )
 
 
@@ -376,33 +428,11 @@ def register_training(query) -> None:
         """,
     )
     def sequence_packing(spark: SparkSession, sf_dir: str) -> DataFrame:
-        """GPT-style concat-then-cut sequence packing: chunks stream in
-        deterministic (doc_id, chunk_id) order within a shard and land in
-        bin = floor(cumulative_tokens_before / budget). Sharding by
-        doc_id % PACK_SHARDS keeps every packing window partition bounded
-        at any corpus size (a single global cumsum would be an
-        Exchange SinglePartition — forbidden); shards pack independently
-        exactly as real pipelines pack per output file."""
+        """Per-(shard, bin) manifest of :func:`packed_chunks`."""
         docs = read_table(spark, sf_dir, "documents")
-        chunks = token_windows(docs).select(
-            "doc_id",
-            "chunk_id",
-            F.size("ck").alias("n_tokens"),
-            (F.col("doc_id") % PACK_SHARDS).alias("shard"),
-        )
-        w = (
-            W.partitionBy("shard")
-            .orderBy("doc_id", "chunk_id")
-            .rowsBetween(W.unboundedPreceding, -1)
-        )
-        placed = chunks.withColumn(
-            "cum_before", F.coalesce(F.sum("n_tokens").over(w), F.lit(0))
-        )
         return (
-            placed.groupBy(
-                F.col("shard").cast("long").alias("shard"),
-                F.expr(f"cum_before div {PACK_BUDGET}").alias("bin"),
-            )
+            packed_chunks(docs)
+            .groupBy(F.col("shard").cast("long").alias("shard"), "bin")
             .agg(
                 F.count("*").alias("n_chunks"),
                 F.sum("n_tokens").alias("n_tokens"),

@@ -11,9 +11,26 @@
   Candidate pairs only form within a bucket, turning the O(n²) cross join
   into a bucket-local join whose per-bucket work is bounded at any N; a
   fixed bit width would instead concentrate ~N/2^bits rows per bucket and
-  go quadratic at 10⁹ vectors.
-* embedding-cosine near-dup — threshold pair scan (dedup family's fifth
-  member; BASELINE task list)
+  go quadratic at 10⁹ vectors. Banded, with an exact cosine verify, it is
+  the LSH near-dup (:func:`lsh_verified_pairs`).
+* embedding-cosine near-dup — threshold pair scan via tiled GEMM (dedup
+  family's fifth member; BASELINE task list)
+* IVF — a coarse quantizer prunes each query to its nprobe nearest
+  inverted lists: per-label centroids (:func:`ivf_topk`) or learned
+  k-means lists (:func:`kmeans_fit`, :func:`ivf_kmeans_topk`)
+* PQ — per-subspace k-means codebooks (:func:`pq_fit`), vectors stored as
+  code ids, queries answered by asymmetric distance computation over
+  per-query tables (:func:`pq_topk`; the fixed-integer-codebook twin
+  :func:`pq_topk_fixed_books` is oracle-checked)
+* IVF-PQ — list pruning in front of the ADC scan (:func:`ivf_pq_topk`)
+
+The IVF/PQ family shares one implementation of each stage: one Lloyd kernel
+(:func:`_lloyd`: k-means is one subspace with a cosine argmax, PQ is m
+subspaces with an L2 argmin), the query relation (:func:`_queries`), the
+per-label centroids, the query × broadcast-centroid probe (:func:`_probe`),
+the nearest-code expression, the ADC tables and sum, and the per-query
+top-k window (:func:`_topk`). Each stage is a single JVM expression or
+plan fragment, so sharing it adds no boundary.
 """
 
 from __future__ import annotations
@@ -183,15 +200,23 @@ def parquet_row_count(sf_dir: str, name: str) -> int:
     return sum(pq.ParquetFile(f).metadata.num_rows for f in files)
 
 
-def _cosine(a, b):
-    dot = F.aggregate(
+def _dot(a, b):
+    """Double-precision dot product, folded left to right."""
+    return F.aggregate(
         F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")),
         F.lit(0.0),
         lambda acc, v: acc + v,
     )
-    na = F.sqrt(F.aggregate(a, F.lit(0.0), lambda acc, v: acc + v.cast("double") * v.cast("double")))
-    nb = F.sqrt(F.aggregate(b, F.lit(0.0), lambda acc, v: acc + v.cast("double") * v.cast("double")))
-    return dot / (na * nb)
+
+
+def _norm(a):
+    """Row norm sqrt(Σv²), the same sequential double fold everywhere, so a
+    norm hoisted into its own projection is bit-identical to an inline one."""
+    return F.sqrt(F.aggregate(a, F.lit(0.0), lambda acc, v: acc + v.cast("double") * v.cast("double")))
+
+
+def _cosine(a, b):
+    return _dot(a, b) / (_norm(a) * _norm(b))
 
 
 def bits_sql(min_bits: int) -> str:
@@ -296,29 +321,21 @@ def lsh_verified_pairs(
         .repartition(p, "vec_a", "vec_b")
         .dropDuplicates(["vec_a", "vec_b"])
     )
-    # per-VECTOR norms, hoisted out of the per-PAIR verify: sqrt-of-fold is
-    # the exact expression _cosine uses, so dot/(na*nb) is bit-identical to
-    # the per-pair form while paying the two norm folds N times, not |cand|
+    # per-VECTOR norms, hoisted out of the per-PAIR verify: _norm is the
+    # exact expression _cosine uses, so dot/(na*nb) is bit-identical to the
+    # per-pair form while paying the two norm folds N times, not |cand|
     # times (2/3 of the verify flops gone)
-    norm = lambda col: F.sqrt(  # noqa: E731
-        F.aggregate(col, F.lit(0.0), lambda acc, v: acc + v.cast("double") * v.cast("double"))
-    )
     ea = emb.select(
         F.col("vec_id").alias("vec_a"),
         F.col("embedding").alias("ea"),
-        norm(F.col("embedding")).alias("na"),
+        _norm(F.col("embedding")).alias("na"),
     )
     eb = emb.select(
         F.col("vec_id").alias("vec_b"),
         F.col("embedding").alias("eb"),
-        norm(F.col("embedding")).alias("nb"),
+        _norm(F.col("embedding")).alias("nb"),
     )
-    dot = F.aggregate(
-        F.zip_with(F.col("ea"), F.col("eb"), lambda x, y: x.cast("double") * y.cast("double")),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
-    sim = dot / (F.col("na") * F.col("nb"))
+    sim = _dot(F.col("ea"), F.col("eb")) / (F.col("na") * F.col("nb"))
     return (
         cand.join(ea, "vec_a")
         .join(eb, "vec_b")
@@ -345,7 +362,7 @@ def _matrix_expr(matrix):
     return F.expr(fmt(matrix))
 
 
-def _scores_expr(centroids: list[list[float]], ne=None):
+def _scores_expr(centroids: list[list[float]], ne):
     """Per-row cosine scores against all centroids via ONE k×DIM matrix
     literal and a higher-order zip_with. One Literal node instead of k×DIM
     expression nodes, so the generated code has the SAME shape on every
@@ -355,47 +372,18 @@ def _scores_expr(centroids: list[list[float]], ne=None):
 
     r6: centroid norms are precomputed driver-side (same IEEE-double
     sequential fold as the JVM expression, so sqrt(Σv²) is bit-identical)
-    and ride as a k-array literal; pass ``ne`` (an expression for the ROW's
-    norm, evaluated once in a prior projection) to stop re-folding the
-    row's 64 squares once per centroid. Scores equal the old
-    ``_cosine``-per-centroid form bit for bit: same dot fold, same norms,
-    same dot/(na·nb) arithmetic."""
+    and ride as a k-array literal; ``ne`` is an expression for the ROW's
+    norm, evaluated once in a prior projection, so the row's 64 squares are
+    not re-folded once per centroid. Scores equal the ``_cosine``-per-
+    centroid form bit for bit: same dot fold, same norms, same dot/(na·nb)
+    arithmetic."""
     import math
 
     matrix = _matrix_expr([[float(v) for v in c] for c in centroids])
     norms = _matrix_expr(
         [math.sqrt(sum(float(v) * float(v) for v in c)) for c in centroids]
     )
-    if ne is None:  # self-contained form (ne re-evaluated per centroid)
-        ne = F.sqrt(
-            F.aggregate(
-                F.col("embedding"),
-                F.lit(0.0),
-                lambda acc, v: acc + v.cast("double") * v.cast("double"),
-            )
-        )
-
-    def dot(c):
-        return F.aggregate(
-            F.zip_with(
-                F.col("embedding"), c, lambda x, y: x.cast("double") * y.cast("double")
-            ),
-            F.lit(0.0),
-            lambda acc, v: acc + v,
-        )
-
-    return F.zip_with(matrix, norms, lambda c, nc: dot(c) / (ne * nc))
-
-
-def _assign_expr(centroids: list[list[float]]):
-    """Nearest-centroid (max cosine) assignment as ONE JVM-side expression:
-    scores = [cos(embedding, c_j)]; list_id = first argmax. No shuffle, no
-    N×k row explosion — the broadcastable state is the centroid matrix
-    literal. :func:`assign_lists` switches to the broadcast-join form past
-    KMEANS_LITERAL_MAX_K (VERDICT r3 item 4)."""
-    scores = _scores_expr(centroids)
-    # array_position is 1-based; ties resolve to the first (deterministic)
-    return (F.array_position(scores, F.array_max(scores)) - 1).cast("int")
+    return F.zip_with(matrix, norms, lambda c, nc: _dot(F.col("embedding"), c) / (ne * nc))
 
 
 # past this k the literal expression tree (k×DIM literal nodes) would choke
@@ -404,34 +392,30 @@ KMEANS_LITERAL_MAX_K = 64
 
 
 def assign_lists(emb: DataFrame, centroids: list[list[float]]) -> DataFrame:
-    """(vec_id, embedding, list_id, best) — nearest-centroid assignment
-    under the k-appropriate strategy:
+    """(vec_id, embedding, list_id, best) — nearest-centroid (max cosine)
+    assignment under the k-appropriate strategy:
 
-    * k ≤ KMEANS_LITERAL_MAX_K: the shuffle-free literal-expression form
-      (:func:`_assign_expr`'s scores array, evaluated once per row).
+    * k ≤ KMEANS_LITERAL_MAX_K: ONE JVM-side projection, no shuffle, no N×k
+      row explosion — the row norm is hoisted into its own projection, the
+      :func:`_scores_expr` array is evaluated once per row and list_id is
+      its first argmax (ties resolve to the lowest list id).
     * k > KMEANS_LITERAL_MAX_K: centroids become a broadcast relation —
       emb × broadcast(k rows) → per-pair JVM cosine → per-vec argmax
       (max over (sim, −list_id) structs: highest sim, ties to the lowest
       list id — byte-identical semantics to the literal form). One
       exchange for the argmax groupBy; expression tree stays O(DIM)
-      regardless of k, so k=4096 plans as fast as k=10.
+      regardless of k, so k=4096 plans as fast as k=10 (VERDICT r3 item 4).
     """
     if len(centroids) <= KMEANS_LITERAL_MAX_K:
-        ne = F.sqrt(
-            F.aggregate(
-                F.col("embedding"),
-                F.lit(0.0),
-                lambda acc, v: acc + v.cast("double") * v.cast("double"),
-            )
-        )
-        scored = emb.select("vec_id", "embedding", ne.alias("_ne")).select(
+        scored = emb.select("vec_id", "embedding", _norm(F.col("embedding")).alias("_ne")).select(
             "vec_id",
             "embedding",
-            _scores_expr(centroids, ne=F.col("_ne")).alias("scores"),
+            _scores_expr(centroids, F.col("_ne")).alias("scores"),
         )
         return scored.select(
             "vec_id",
             "embedding",
+            # array_position is 1-based; ties resolve to the first
             (F.array_position(F.col("scores"), F.array_max("scores")) - 1)
             .cast("int")
             .alias("list_id"),
@@ -460,64 +444,137 @@ def assign_lists(emb: DataFrame, centroids: list[list[float]]) -> DataFrame:
     )
 
 
+def _lloyd(emb: DataFrame, cols: list, m: int, k: int, iters: int, assign, keys, extra=()):
+    """The one Lloyd loop, the Spark-iterative shape: per iteration ONE
+    partial-aggregating groupBy job (one avg aggregate per dimension,
+    map-side combine — no N×k shuffle rows) plus a small driver collect that
+    becomes the next literal.
+
+    * seeds: the k lowest vec_ids' vectors, each cut into ``m`` subspaces,
+      so ``books[s][c]`` is centroid c of subspace s;
+    * the iterated relation ``cols`` (a projection of ``emb`` whose
+      (sub)vector column is named ``embedding``) is spread to full
+      parallelism and persisted for the fit — every iteration re-reads it
+      (the MLlib-KMeans pattern) — and unpersisted in ``finally``, so no
+      cached block outlives the fit, whether it returns or raises;
+    * each iteration: ``assign(work, books)`` adds the cell ``keys``, then
+      ``groupBy(keys).agg(*extra, avg per dim)`` → collect; a cell is
+      (sub_id, code) when m > 1, else the single key; an empty cell keeps
+      its old centroid.
+
+    Returns (books, the collected rows of every iteration). At 10⁹ vectors
+    this is m·k·(DIM/m) partial states per executor and m·k rows to the
+    driver per iteration — the same plan shape at any scale."""
+    d = DIM // m
+    seeds = emb.orderBy("vec_id").limit(k).select("embedding").collect()
+    books = [[[float(v) for v in r.embedding[s * d : (s + 1) * d]] for r in seeds] for s in range(m)]
+    # iteration-invariant aggregate columns, built ONCE: each Column costs
+    # py4j round trips, which inside the loop were pure driver overhead
+    aggs = [
+        *extra,
+        *[F.avg(F.element_at("embedding", i + 1).cast("double")).alias(f"c{i}") for i in range(d)],
+    ]
+    rounds = []
+    # spread first, project after: pruning pushes the projection below the
+    # round-robin repartition, whose pre-sort orders rows by their bytes, so
+    # each fit's own column set decides the partitions — and with them the
+    # partial-aggregate order and the last bits of every avg
+    work = spread(emb).select(*cols).persist()
+    try:
+        for _ in range(iters):
+            rows = assign(work, books).groupBy(*keys).agg(*aggs).collect()
+            books = [list(b) for b in books]
+            for r in rows:
+                books[r[keys[0]] if m > 1 else 0][r[keys[-1]]] = [r[f"c{i}"] for i in range(d)]
+            rounds.append(rows)
+    finally:
+        work.unpersist()
+    return books, rounds
+
+
 def kmeans_fit(
     emb: DataFrame, k: int = IVF_N_LISTS, iters: int = 4
 ) -> tuple[list[list[float]], list[float]]:
-    """Lloyd's k-means over the embedding column, the Spark-iterative shape:
-    per iteration ONE partial-aggregating groupBy job (k×DIM avg aggregates,
-    map-side combine — no explode, no N×k shuffle rows) plus a k-row driver
-    collect that becomes the next broadcast. Deterministic: seeds are the k
-    lowest vec_ids, assignment ties take the lowest list id.
+    """Lloyd's k-means over the embedding column: :func:`_lloyd` with one
+    subspace, cells keyed by ``list_id`` and assigned by cosine argmax
+    (:func:`assign_lists` — literal scores array under
+    KMEANS_LITERAL_MAX_K, broadcast-join argmax above it). Deterministic:
+    seeds are the k lowest vec_ids, assignment ties take the lowest list id.
 
     Returns (centroids, inertia_history) where inertia is the mean cosine
     DISTANCE (1 − similarity) to the assigned centroid — monotone
     non-increasing under Lloyd iterations up to the mean-vs-cosine
-    re-normalization (asserted with tolerance in tests).
+    re-normalization (asserted with tolerance in tests)."""
+    books, rounds = _lloyd(
+        emb,
+        ["vec_id", "embedding"],
+        m=1,
+        k=k,
+        iters=iters,
+        assign=lambda work, books: assign_lists(work, books[0]),
+        keys=["list_id"],
+        extra=[F.count("*").alias("members"), F.avg(F.lit(1.0) - F.col("best")).alias("mean_dist")],
+    )
+    history = [
+        sum(r["mean_dist"] * r["members"] for r in rows) / sum(r["members"] for r in rows)
+        for rows in rounds
+    ]
+    return books[0], history
 
-    At 10⁹ vectors this is k·DIM·P partial states per executor and k rows
-    to the driver per iteration — the same plan shape at any scale.
 
-    r6: the iterated input is spread to full parallelism and persisted for
-    the duration of the fit (the MLlib-KMeans pattern — every Lloyd
-    iteration re-reads it), then unpersisted before returning so nothing
-    cached leaks past the fit."""
-    work = spread(emb.select("vec_id", "embedding")).persist()
-    try:
-        seed_rows = work.orderBy("vec_id").limit(k).select("embedding").collect()
-        centroids = [[float(v) for v in r.embedding] for r in seed_rows]
-        history: list[float] = []
-        # iteration-invariant aggregate columns, built ONCE: Column objects
-        # are immutable expression wrappers, and constructing these 66
-        # aggregates costs ~260 py4j round trips — inside the loop that was
-        # pure per-iteration driver overhead
-        agg_cols = [
-            F.count("*").alias("members"),
-            F.avg(F.lit(1.0) - F.col("best")).alias("mean_dist"),
+def _queries(emb: DataFrame, n: int = N_QUERIES) -> DataFrame:
+    """(query_id, qe): the query vectors — the n lowest vec_ids."""
+    return emb.filter(F.col("vec_id") < n).select(
+        F.col("vec_id").alias("query_id"), F.col("embedding").alias("qe")
+    )
+
+
+def _label_centroids(emb: DataFrame) -> DataFrame:
+    """(label, cvec): the per-label coarse quantizer — DIM per-dim avg
+    aggregates in ONE groupBy pass, map-side combine, no explode."""
+    return emb.groupBy("label").agg(
+        F.array(
             *[
-                F.avg(F.element_at("embedding", i + 1).cast("double")).alias(f"c{i}")
+                F.round(F.avg(F.element_at("embedding", i + 1).cast("double")), 6)
                 for i in range(DIM)
-            ],
-        ]
-        for _ in range(iters):
-            # assignment strategy is k-dependent (assign_lists): literal
-            # scores array under KMEANS_LITERAL_MAX_K (shuffle-free, cosine
-            # evaluated once per row), broadcast-join argmax above it
-            # (codegen-safe at large k)
-            agg = (
-                assign_lists(work, centroids)
-                .groupBy("list_id")
-                .agg(*agg_cols)
-                .collect()
-            )
-            total = sum(r["members"] for r in agg)
-            history.append(sum(r["mean_dist"] * r["members"] for r in agg) / total)
-            new_centroids = list(centroids)  # empty lists keep their old centroid
-            for r in agg:
-                new_centroids[r["list_id"]] = [r[f"c{i}"] for i in range(DIM)]
-            centroids = new_centroids
-    finally:
-        work.unpersist()
-    return centroids, history
+            ]
+        ).alias("cvec")
+    )
+
+
+def _probe(q: DataFrame, cent: DataFrame, key: str, nprobe: int, *keep: str) -> DataFrame:
+    """(query_id, *keep, key): each query's nprobe nearest coarse lists —
+    queries × broadcast centroids (``key``, ``cvec``), ranked by rounded
+    cosine, ties to the lowest list key."""
+    psim = F.round(_cosine(F.col("qe"), F.col("cvec")), 5)
+    wprobe = W.partitionBy("query_id").orderBy(F.desc("psim"), F.asc(key))
+    return (
+        q.crossJoin(F.broadcast(cent))
+        .select("query_id", "qe", key, psim.alias("psim"))
+        .withColumn("pr", F.row_number().over(wprobe))
+        .filter(F.col("pr") <= nprobe)
+        .select("query_id", *keep, key)
+    )
+
+
+def _topk(cand: DataFrame, score, order, topk: int = TOPK) -> DataFrame:
+    """Per-query top-k window over candidate (query_id, vec_id, …) rows, the
+    query itself excluded: rank by ``order`` of ``score``, ties to the
+    lowest neighbor id."""
+    w = W.partitionBy("query_id").orderBy(order("score"), F.asc("neighbor_id"))
+    return (
+        cand.filter(F.col("vec_id") != F.col("query_id"))
+        .select("query_id", F.col("vec_id").alias("neighbor_id"), score.alias("score"))
+        .withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= topk)
+        .select("query_id", "neighbor_id", "rank")
+        .orderBy("query_id", "rank")
+    )
+
+
+def _cosine_score():
+    """Rounded query↔candidate cosine, the score of every cosine top-k."""
+    return F.round(_cosine(F.col("qe"), F.col("embedding")), 5)
 
 
 def ivf_kmeans_topk(
@@ -540,79 +597,26 @@ def ivf_kmeans_topk(
     # spread: the assignment + per-candidate exact cosine otherwise run on
     # the single-task scan of the tiny parquet (no-op on pre-split inputs)
     listed = assign_lists(spread(emb), centroids).select("vec_id", "embedding", "list_id")
-    q = emb.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("qe")
-    )
-    psim = F.round(_cosine(F.col("qe"), F.col("cvec")), 5)
-    wprobe = W.partitionBy("query_id").orderBy(F.desc("psim"), F.asc("list_id"))
-    probes = (
-        q.crossJoin(F.broadcast(cent))
-        .select("query_id", "qe", "list_id", psim.alias("psim"))
-        .withColumn("pr", F.row_number().over(wprobe))
-        .filter(F.col("pr") <= nprobe)
-        .select("query_id", "qe", "list_id")
-    )
-    cand = listed.join(F.broadcast(probes), on="list_id").filter(
-        F.col("vec_id") != F.col("query_id")
-    )
-    sim = F.round(_cosine(F.col("qe"), F.col("embedding")), 5)
-    w = W.partitionBy("query_id").orderBy(F.desc("sim"), F.asc("neighbor_id"))
-    return (
-        cand.select("query_id", F.col("vec_id").alias("neighbor_id"), sim.alias("sim"))
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= TOPK)
-        .select("query_id", "neighbor_id", "rank")
-        .orderBy("query_id", "rank")
-    )
+    probes = _probe(_queries(emb), cent, "list_id", nprobe, "qe")
+    return _topk(listed.join(F.broadcast(probes), on="list_id"), _cosine_score(), F.desc)
 
 
 def ivf_topk(spark: SparkSession, sf_dir: str, nprobe: int = IVF_NPROBE) -> DataFrame:
     """IVF search — the ANN scale path: a coarse quantizer (per-label
-    centroids, computed as DIM per-dim avg aggregates in ONE groupBy
-    pass, map-side combine, no explode) prunes the corpus to nprobe
-    inverted lists per query; only those lists are scanned. Plan shape:
-    centroids (10 rows) broadcast to queries → top-nprobe probe → tiny
-    probe relation broadcast into an equi-join on label (partition-pruned
-    list scan at scale) → per-query top-k window. Search cost drops from
-    O(N) per query to O(N * nprobe / n_lists). With nprobe = IVF_N_LISTS
-    the search is exhaustive and must equal brute force exactly — the
-    invariant tests/test_simsearch.py pins."""
+    centroids) prunes the corpus to nprobe inverted lists per query; only
+    those lists are scanned. Plan shape: centroids (10 rows) broadcast to
+    queries → top-nprobe probe → tiny probe relation broadcast into an
+    equi-join on label (partition-pruned list scan at scale) → per-query
+    top-k window. Search cost drops from O(N) per query to
+    O(N * nprobe / n_lists). With nprobe = IVF_N_LISTS the search is
+    exhaustive and must equal brute force exactly — the invariant
+    tests/test_simsearch.py pins."""
     emb = read_table(spark, sf_dir, "embeddings")
-    cent = emb.groupBy("label").agg(
-        F.array(
-            *[
-                F.round(F.avg(F.element_at("embedding", i + 1).cast("double")), 6)
-                for i in range(DIM)
-            ]
-        ).alias("cvec")
-    )
-    q = emb.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("qe")
-    )
-    psim = F.round(_cosine(F.col("qe"), F.col("cvec")), 5)
-    wprobe = W.partitionBy("query_id").orderBy(F.desc("psim"), F.asc("label"))
-    probes = (
-        q.crossJoin(F.broadcast(cent))
-        .select("query_id", "qe", "label", psim.alias("psim"))
-        .withColumn("pr", F.row_number().over(wprobe))
-        .filter(F.col("pr") <= nprobe)
-        .select("query_id", "qe", "label")
-    )
+    probes = _probe(_queries(emb), _label_centroids(emb), "label", nprobe, "qe")
     # spread the list-scan side: per-candidate exact cosine is the dominant
     # cost and otherwise rides the single-task scan (centroids/queries stay
     # on the raw scan — their float accumulation order is unchanged)
-    cand = spread(emb).join(F.broadcast(probes), on="label").filter(
-        F.col("vec_id") != F.col("query_id")
-    )
-    sim = F.round(_cosine(F.col("qe"), F.col("embedding")), 5)
-    w = W.partitionBy("query_id").orderBy(F.desc("sim"), F.asc("neighbor_id"))
-    return (
-        cand.select("query_id", F.col("vec_id").alias("neighbor_id"), sim.alias("sim"))
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= TOPK)
-        .select("query_id", "neighbor_id", "rank")
-        .orderBy("query_id", "rank")
-    )
+    return _topk(spread(emb).join(F.broadcast(probes), on="label"), _cosine_score(), F.desc)
 
 
 def register(query) -> None:
@@ -633,26 +637,9 @@ def register(query) -> None:
     )
     def ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         emb = read_table(spark, sf_dir, "embeddings")
-        q = emb.filter(F.col("vec_id") < N_QUERIES).select(
-            F.col("vec_id").alias("query_id"), F.col("embedding").alias("qe")
-        )
         # spread the corpus side: N_QUERIES × N exact cosines otherwise all
         # evaluate on the single-task scan
-        c = spread(emb).select(
-            F.col("vec_id").alias("neighbor_id"), F.col("embedding").alias("ce")
-        )
-        sim = F.round(_cosine(F.col("qe"), F.col("ce")), 5)
-        scored = (
-            q.join(c, F.col("query_id") != F.col("neighbor_id"))
-            .select("query_id", "neighbor_id", sim.alias("sim"))
-        )
-        w = W.partitionBy("query_id").orderBy(F.desc("sim"), F.asc("neighbor_id"))
-        return (
-            scored.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= TOPK)
-            .select("query_id", "neighbor_id", "rank")
-            .orderBy("query_id", "rank")
-        )
+        return _topk(_queries(emb).crossJoin(spread(emb)), _cosine_score(), F.desc)
 
     @query(
         "embedding_cosine_neardup",
@@ -694,9 +681,8 @@ def register(query) -> None:
     def lsh_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
         emb = read_table(spark, sf_dir, "embeddings")
         bits = band_bits(parquet_row_count(sf_dir, "embeddings"), min_bits=MIN_SIGN_BITS)
-        bucket = F.concat(*[_plane_bit(i) for i in range(bits)]).alias("bucket")
         return (
-            emb.select(bucket)
+            emb.select(_band_key(0, bits).alias("bucket"))
             .groupBy("bucket")
             .agg(F.count("*").alias("vectors"))
             .filter(F.col("vectors") >= 2)
@@ -724,8 +710,7 @@ def register(query) -> None:
     def lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         emb = read_table(spark, sf_dir, "embeddings")
         bits = band_bits(parquet_row_count(sf_dir, "embeddings"), min_bits=MIN_SIGN_BITS)
-        bucket = F.concat(*[_plane_bit(i) for i in range(bits)])
-        b = emb.select("vec_id", bucket.alias("bucket"))
+        b = emb.select("vec_id", _band_key(0, bits).alias("bucket"))
         a = b.alias("a")
         c = b.alias("c")
         return (
@@ -860,90 +845,90 @@ PQ_M = 8  # subspaces (DIM/PQ_M dims each)
 PQ_K = 16  # codes per subspace
 
 
+def _nearest_code(sub, book, t: str = "double"):
+    """First-argmin squared-L2 code of subvector ``sub`` against ``book``
+    (an array<array> codebook expression), summed in SQL type ``t`` — DOUBLE
+    for fitted codebooks, BIGINT (exact) for the integer twin."""
+    dists = F.transform(
+        book,
+        lambda c: F.aggregate(
+            F.zip_with(sub, c, lambda x, y: (x.cast(t) - y) * (x.cast(t) - y)),
+            F.lit(0).cast(t),
+            lambda acc, v: acc + v,
+        ),
+    )
+    return (F.array_position(dists, F.array_min(dists)) - 1).cast("int")
+
+
 def pq_fit(
     emb: DataFrame, m: int = PQ_M, k: int = PQ_K, iters: int = 3
 ) -> list[list[list[float]]]:
-    """Per-subspace Lloyd k-means, ALL subspaces in each single job: explode
-    every vector into (sub_id, subvec) rows once per iteration, assign via
-    the broadcast codebook matrix literal, and update every (sub_id, code)
-    centroid in one groupBy with map-side combine. Per iteration: one job,
-    m·k rows to the driver. Deterministic seeds (first k vectors' slices)
-    and first-argmin tie-break, so the codebook is a pure corpus function."""
+    """Per-subspace Lloyd k-means, ALL subspaces in each single job:
+    :func:`_lloyd` with m subspaces over the (sub_id, subvector) rows of a
+    posexplode, assigned by L2 argmin against the codebook matrix literal,
+    every (sub_id, code) centroid updated in one groupBy with map-side
+    combine. Per iteration: one job, m·k rows to the driver. Deterministic
+    seeds (first k vectors' slices) and first-argmin tie-break, so the
+    codebook is a pure corpus function."""
     d = DIM // m
-    seed_rows = emb.orderBy("vec_id").limit(k).select("embedding").collect()
-    books = [
-        [[float(v) for v in r.embedding[s * d : (s + 1) * d]] for r in seed_rows]
-        for s in range(m)
-    ]
-    # r6: spread + persist for the duration of the fit (every iteration
-    # re-reads the exploded subvector relation), released before returning
-    subs = spread(emb).select(
-        F.posexplode(
-            F.array(*[F.slice("embedding", s * d + 1, d) for s in range(m)])
-        ).alias("sub_id", "subvec")
-    ).persist()
-    for _ in range(iters):
-        matrix = _matrix_expr([[[float(v) for v in c] for c in book] for book in books])
-        dists = F.transform(
-            F.element_at(matrix, F.col("sub_id") + 1),
-            lambda c: F.aggregate(
-                F.zip_with(
-                    F.col("subvec"),
-                    c,
-                    lambda x, y: (x.cast("double") - y) * (x.cast("double") - y),
-                ),
-                F.lit(0.0),
-                lambda acc, v: acc + v,
-            ),
-        )
-        agg = (
-            subs.select(
-                "sub_id",
-                (F.array_position(dists, F.array_min(dists)) - 1)
-                .cast("int")
-                .alias("code"),
-                "subvec",
-            )
-            .groupBy("sub_id", "code")
-            .agg(
-                *[
-                    F.avg(F.element_at("subvec", i + 1).cast("double")).alias(f"c{i}")
-                    for i in range(d)
-                ]
-            )
-            .collect()
-        )
-        new_books = [list(b) for b in books]  # empty cells keep old centroid
-        for r in agg:
-            new_books[r.sub_id][r.code] = [r[f"c{i}"] for i in range(d)]
-        books = new_books
-    subs.unpersist()
+
+    def assign(work, books):
+        book = F.element_at(_matrix_expr(books), F.col("sub_id") + 1)
+        return work.select("sub_id", _nearest_code(F.col("embedding"), book).alias("code"), "embedding")
+
+    slices = F.array(*[F.slice("embedding", s * d + 1, d) for s in range(m)])
+    books, _ = _lloyd(
+        emb,
+        [F.posexplode(slices).alias("sub_id", "embedding")],
+        m=m,
+        k=k,
+        iters=iters,
+        assign=assign,
+        keys=["sub_id", "code"],
+    )
     return books
 
 
-def _pq_codes_expr(books: list[list[list[float]]]):
-    """array<int> of PQ_M nearest-code ids per row — one matrix literal,
-    shuffle-free, constant codegen shape across refits."""
-    m = len(books)
-    d = DIM // m
-    matrix = _matrix_expr([[[float(v) for v in c] for c in book] for book in books])
-    def code_for(s: int):
-        sub = F.slice("embedding", s * d + 1, d)
-        dists = F.transform(
-            F.element_at(matrix, s + 1),
-            lambda c: F.aggregate(
-                F.zip_with(sub, c, lambda x, y: (x.cast("double") - y) * (x.cast("double") - y)),
-                F.lit(0.0),
-                lambda acc, v: acc + v,
-            ),
-        )
-        return (F.array_position(dists, F.array_min(dists)) - 1).cast("int")
-    return F.array(*[code_for(s) for s in range(m)])
+def _pq_codes_expr(books: list[list[list[float]]], vec: str = "embedding", t: str = "double"):
+    """array<int> of the m nearest-code ids of column ``vec`` — one matrix
+    literal, shuffle-free, constant codegen shape across refits."""
+    d = DIM // len(books)
+    matrix = _matrix_expr(books)
+    return F.array(
+        *[
+            _nearest_code(F.slice(vec, s * d + 1, d), F.element_at(matrix, s + 1), t)
+            for s in range(len(books))
+        ]
+    )
 
 
 def pq_encode(emb: DataFrame, books: list[list[list[float]]]) -> DataFrame:
     """(vec_id, codes array<int>) — the 8-byte-per-vector representation."""
     return emb.select("vec_id", _pq_codes_expr(books).alias("codes"))
+
+
+def _adc_tables(spark: SparkSession, queries: list, books, t: str = "double") -> DataFrame:
+    """(query_id, tab): per query row (id, vector), the m×k table of squared
+    L2 distances from each query subvector to every code — exact Python
+    arithmetic, int or float alike — as a broadcastable relation."""
+    d = len(books[0][0])
+    tables = [
+        (
+            int(qid),
+            [[sum((qv[s * d + i] - c[i]) ** 2 for i in range(d)) for c in book] for s, book in enumerate(books)],
+        )
+        for qid, qv in queries
+    ]
+    return spark.createDataFrame(tables, f"query_id long, tab array<array<{t}>>")
+
+
+def _adc(t: str = "double"):
+    """ADC distance of a candidate: Σ_s tab[s][codes[s]], folded in type t."""
+    return F.aggregate(
+        F.zip_with(F.col("codes"), F.col("tab"), lambda c, tab: F.element_at(tab, c + 1)),
+        F.lit(0).cast(t),
+        lambda acc, v: acc + v,
+    )
 
 
 def pq_topk(
@@ -967,44 +952,10 @@ def pq_topk(
     emb = read_table(spark, sf_dir, "embeddings")
     if books is None:
         books = pq_fit(emb, m=m, k=k, iters=iters)
-    d = DIM // m
     # spread: the m×k×(DIM/m) nearest-code encode is the heavy per-row step
     encoded = pq_encode(spread(emb), books)
-    q_rows = (
-        emb.filter(F.col("vec_id") < n_queries)
-        .select("vec_id", "embedding")
-        .collect()
-    )
-    tables = []  # (query_id, M×K double table) as rows of a broadcast df
-    for r in q_rows:
-        qv = [float(v) for v in r.embedding]
-        tab = [
-            [
-                sum((qv[s * d + i] - c[i]) ** 2 for i in range(d))
-                for c in books[s]
-            ]
-            for s in range(m)
-        ]
-        tables.append((int(r.vec_id), tab))
-    qdf = spark.createDataFrame(tables, "query_id long, tab array<array<double>>")
-    adc = F.round(
-        F.aggregate(
-            F.zip_with(F.col("codes"), F.col("tab"), lambda c, t: F.element_at(t, c + 1)),
-            F.lit(0.0),
-            lambda acc, v: acc + v,
-        ),
-        6,
-    )
-    w = W.partitionBy("query_id").orderBy(F.asc("adist"), F.asc("neighbor_id"))
-    return (
-        encoded.crossJoin(F.broadcast(qdf))
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .select("query_id", F.col("vec_id").alias("neighbor_id"), adc.alias("adist"))
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= topk)
-        .select("query_id", "neighbor_id", "rank")
-        .orderBy("query_id", "rank")
-    )
+    qdf = _adc_tables(spark, _queries(emb, n_queries).collect(), books)
+    return _topk(encoded.crossJoin(F.broadcast(qdf)), F.round(_adc(), 6), F.asc, topk)
 
 
 PQ_QUANT = 64  # fixed-books twin: floor(x*64) int quantization, exact cross-engine
@@ -1035,56 +986,16 @@ def pq_topk_fixed_books(
     per-query ADC tables → per-query top-k window. All distances are exact
     BIGINT sums, so ranks are engine-independent without rounding."""
     emb = read_table(spark, sf_dir, "embeddings")
-    d = DIM // m
-    books = _fixed_books_int(m, k, d)
+    books = _fixed_books_int(m, k, DIM // m)
     qe = F.transform(
         F.col("embedding"), lambda x: F.floor(x.cast("double") * PQ_QUANT).cast("long")
     )
     quant = emb.select("vec_id", qe.alias("qe"))
-    matrix = _matrix_expr(books)
-
-    def code_for(s: int):
-        sub = F.slice("qe", s * d + 1, d)
-        dists = F.transform(
-            F.element_at(matrix, s + 1),
-            lambda c: F.aggregate(
-                F.zip_with(sub, c, lambda x, y: (x - y) * (x - y)),
-                F.lit(0).cast("long"),
-                lambda acc, v: acc + v,
-            ),
-        )
-        return (F.array_position(dists, F.array_min(dists)) - 1).cast("int")
-
     # spread: integer encode (m×k×d squared-diff folds per row) off the
     # single-task scan; all-BIGINT arithmetic, so values are unaffected
-    encoded = spread(quant).select(
-        "vec_id", F.array(*[code_for(s) for s in range(m)]).alias("codes")
-    )
-    q_rows = quant.filter(F.col("vec_id") < n_queries).collect()
-    tables = []
-    for r in q_rows:
-        qv = [int(v) for v in r.qe]
-        tab = [
-            [sum((qv[s * d + i] - books[s][c][i]) ** 2 for i in range(d)) for c in range(k)]
-            for s in range(m)
-        ]
-        tables.append((int(r.vec_id), tab))
-    qdf = spark.createDataFrame(tables, "query_id long, tab array<array<long>>")
-    adc = F.aggregate(
-        F.zip_with(F.col("codes"), F.col("tab"), lambda c, t: F.element_at(t, c + 1)),
-        F.lit(0).cast("long"),
-        lambda acc, v: acc + v,
-    )
-    w = W.partitionBy("query_id").orderBy(F.asc("adist"), F.asc("neighbor_id"))
-    return (
-        encoded.crossJoin(F.broadcast(qdf))
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .select("query_id", F.col("vec_id").alias("neighbor_id"), adc.alias("adist"))
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= topk)
-        .select("query_id", "neighbor_id", "rank")
-        .orderBy("query_id", "rank")
-    )
+    encoded = spread(quant).select("vec_id", _pq_codes_expr(books, "qe", "long").alias("codes"))
+    qdf = _adc_tables(spark, quant.filter(F.col("vec_id") < n_queries).collect(), books, "long")
+    return _topk(encoded.crossJoin(F.broadcast(qdf)), _adc("long"), F.asc, topk)
 
 
 def register_pq(query) -> None:
@@ -1167,57 +1078,12 @@ def ivf_pq_topk(
     emb = read_table(spark, sf_dir, "embeddings")
     if books is None:
         books = pq_fit(emb, m=m, k=k)
-    d = DIM // m
     encoded = spread(emb).select("vec_id", "label", _pq_codes_expr(books).alias("codes"))
-    cent = emb.groupBy("label").agg(
-        F.array(
-            *[
-                F.round(F.avg(F.element_at("embedding", i + 1).cast("double")), 6)
-                for i in range(DIM)
-            ]
-        ).alias("cvec")
+    q = _queries(emb, n_queries)
+    probes = _probe(q, _label_centroids(emb), "label", nprobe).join(
+        _adc_tables(spark, q.collect(), books), "query_id"
     )
-    q = emb.filter(F.col("vec_id") < n_queries).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("qe")
-    )
-    psim = F.round(_cosine(F.col("qe"), F.col("cvec")), 5)
-    wprobe = W.partitionBy("query_id").orderBy(F.desc("psim"), F.asc("label"))
-    q_rows = q.collect()
-    tables = []
-    for r in q_rows:
-        qv = [float(v) for v in r.qe]
-        tab = [
-            [sum((qv[s * d + i] - c[i]) ** 2 for i in range(d)) for c in books[s]]
-            for s in range(m)
-        ]
-        tables.append((int(r.query_id), tab))
-    qtab = spark.createDataFrame(tables, "query_id long, tab array<array<double>>")
-    probes = (
-        q.crossJoin(F.broadcast(cent))
-        .select("query_id", "label", psim.alias("psim"))
-        .withColumn("pr", F.row_number().over(wprobe))
-        .filter(F.col("pr") <= nprobe)
-        .select("query_id", "label")
-        .join(qtab, "query_id")
-    )
-    adc = F.round(
-        F.aggregate(
-            F.zip_with(F.col("codes"), F.col("tab"), lambda c, t: F.element_at(t, c + 1)),
-            F.lit(0.0),
-            lambda acc, v: acc + v,
-        ),
-        6,
-    )
-    w = W.partitionBy("query_id").orderBy(F.asc("adist"), F.asc("neighbor_id"))
-    return (
-        encoded.join(F.broadcast(probes), on="label")
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .select("query_id", F.col("vec_id").alias("neighbor_id"), adc.alias("adist"))
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= topk)
-        .select("query_id", "neighbor_id", "rank")
-        .orderBy("query_id", "rank")
-    )
+    return _topk(encoded.join(F.broadcast(probes), on="label"), F.round(_adc(), 6), F.asc, topk)
 
 
 def register_ivf_pq(query) -> None:

@@ -158,6 +158,18 @@ def test_curate_job_cli(spark, tmp_path):
     assert curated.join(heads, "doc_id", "left_anti").count() == 0
     seqs = spark.read.parquet(f"{out}/sequences")
     assert seqs.count() > 0 and set(seqs.select("shard").distinct().toPandas()["shard"]) <= set(range(16))
+    # the job composes the oracle-backed catalog operators: curated =
+    # component heads ∩ uncontaminated ∩ sampled ∩ the word-count gate
+    from smoldocling_ocr_spark.plans.catalog import spark_queries
+
+    q = spark_queries()
+    sf = "/root/testdata/sf0.001"
+    clean = {r.doc_id for r in q["decontamination_scan"](spark, sf).collect() if not r.contaminated}
+    sampled = {r.doc_id for r in q["stratified_sample_by_lang"](spark, sf).collect()}
+    wordy = {r.doc_id for r in docs.collect() if r.text and len([w for w in r.text.split(" ") if w]) >= 3}
+    curated_ids = [r.doc_id for r in curated.collect()]
+    assert len(curated_ids) == len(set(curated_ids))
+    assert set(curated_ids) == {r.doc_id for r in heads.collect()} & clean & sampled & wordy
 
     # determinism: a re-run writes the identical curated set
     out2 = str(tmp_path / "curated2")

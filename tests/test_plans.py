@@ -428,11 +428,11 @@ def test_kmeans_assignment_is_shuffle_free(spark):
     """Nearest-centroid assignment is a pure projection over broadcast
     centroid literals: the per-iteration job is Scan → Project → partial agg
     → single exchange → final agg. No join, no extra exchange, no UDF."""
-    from smoldocling_ocr_spark.operators.simsearch import DIM, _assign_expr
+    from smoldocling_ocr_spark.operators.simsearch import DIM, assign_lists
 
     emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
     centroids = [[float(i == j) for i in range(DIM)] for j in range(4)]
-    assigned = emb.select(_assign_expr(centroids).alias("list_id"), "embedding")
+    assigned = assign_lists(emb, centroids).select("list_id", "embedding")
     plan = _plan(assigned)
     assert "Exchange" not in plan  # assignment itself never shuffles
     agg = assigned.groupBy("list_id").count()
@@ -522,6 +522,38 @@ def catalog_plans(spark):
             except Exception:
                 continue  # queries needing other fixtures are covered elsewhere
     return out
+
+
+# Shuffle Exchange nodes in the physical plan of every similarity-search
+# query and of the corpus operators the curate job shares, read before
+# their stages were merged into shared helpers: a change to a shared stage
+# must not add (or drop) a shuffle anywhere it is used.
+_PINNED_EXCHANGES = {
+    "ann_cosine_topk": 3,
+    "ann_ivf_kmeans_topk": 4,
+    "ann_ivf_pq_topk": 6,
+    "ann_ivf_topk": 5,
+    "ann_lsh_buckets": 2,
+    "ann_lsh_candidate_pairs": 1,
+    "ann_lsh_verified_neardup": 4,
+    "ann_pq_topk": 3,
+    "ann_pq_topk_fixed_books": 3,
+    "embedding_cosine_neardup": 3,
+    "embedding_label_centroids": 2,
+    "decontamination_scan": 3,
+    "stratified_sample_by_lang": 1,
+    "sequence_packing": 2,
+}
+
+
+def test_exchange_counts_pinned(catalog_plans):
+    pinned = {n for n in catalog_plans if n.startswith(("ann_", "embedding_"))}
+    assert pinned <= set(_PINNED_EXCHANGES), "pin the Exchange count of every ANN query"
+    got = {
+        name: len(re.findall(r"\bExchange \(\d+\)", catalog_plans[name][0].split("\n\n(")[0]))
+        for name in _PINNED_EXCHANGES
+    }
+    assert got == _PINNED_EXCHANGES
 
 
 def test_lambda_body_lint_catches_resplit(spark):

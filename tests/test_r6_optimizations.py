@@ -70,6 +70,7 @@ def test_scores_expr_bit_identical_to_cosine_transform(spark):
         DIM,
         _cosine,
         _matrix_expr,
+        _norm,
         _scores_expr,
     )
     from smoldocling_ocr_spark.sources.documents import read_table
@@ -84,9 +85,10 @@ def test_scores_expr_bit_identical_to_cosine_transform(spark):
         lambda c: _cosine(F.col("embedding"), c),
     )
     old_rows = emb.select("vec_id", old.alias("s")).orderBy("vec_id").collect()
+    # the production form: the row norm hoisted into its own projection
     new_rows = (
-        emb.select("vec_id", "embedding", _scores_expr(centroids).alias("s"))
-        .select("vec_id", "s")
+        emb.select("vec_id", "embedding", _norm(F.col("embedding")).alias("_ne"))
+        .select("vec_id", _scores_expr(centroids, F.col("_ne")).alias("s"))
         .orderBy("vec_id")
         .collect()
     )

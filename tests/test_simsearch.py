@@ -7,6 +7,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import DataFrame
 
+from smoldocling_ocr_spark.operators.corpusops import _persistent_rdd_ids
 from smoldocling_ocr_spark.operators.simsearch import (
     NEARDUP_THRESHOLD,
     blocked_cosine_pairs,
@@ -14,6 +15,16 @@ from smoldocling_ocr_spark.operators.simsearch import (
 )
 
 SF_DIR = "/root/testdata/sf0.001"
+
+
+@pytest.fixture(autouse=True)
+def no_leaked_blocks(spark):
+    """Fail any test here that returns with a persisted RDD it did not
+    start with: every fit releases what it persists."""
+    before = _persistent_rdd_ids(spark)
+    yield
+    leaked = _persistent_rdd_ids(spark) - before
+    assert not leaked, f"persisted RDDs leaked: {sorted(leaked)}"
 
 
 @pytest.fixture(scope="module")
@@ -364,7 +375,7 @@ def test_kmeans_ivf_invariants(spark):
     from smoldocling_ocr_spark.operators.simsearch import (
         DIM,
         IVF_N_LISTS,
-        _assign_expr,
+        assign_lists,
         ivf_kmeans_topk,
         kmeans_fit,
     )
@@ -397,12 +408,38 @@ def test_kmeans_ivf_invariants(spark):
         rows.append(Row(vec_id=i, label=c, embedding=[float(x) for x in v]))
     toy = spark.createDataFrame(rows)
     centroids, hist = kmeans_fit(toy, k=3, iters=3)
-    assigned = toy.select(
-        "label", _assign_expr(centroids).alias("list_id")
-    ).collect()
+    labels = {r.vec_id: r.label for r in rows}
     # every true cluster maps to exactly one learned list
     mapping: dict[int, set[int]] = {}
-    for r in assigned:
-        mapping.setdefault(r.label, set()).add(r.list_id)
+    for r in assign_lists(toy, centroids).collect():
+        mapping.setdefault(labels[r.vec_id], set()).add(r.list_id)
     assert all(len(v) == 1 for v in mapping.values())
     assert len({next(iter(v)) for v in mapping.values()}) == 3
+
+
+@pytest.mark.parametrize(
+    "fit, step",
+    [("kmeans_fit", "assign_lists"), ("pq_fit", "_matrix_expr")],
+)
+def test_fit_releases_input_when_an_iteration_raises(spark, emb, monkeypatch, fit, step):
+    """A Lloyd fit whose second iteration raises must still unpersist the
+    input it persisted. Each iteration builds its assignment once (k-means:
+    ``assign_lists``; PQ: the codebook matrix literal its argmin reads);
+    the second build raises."""
+    import smoldocling_ocr_spark.operators.simsearch as ss
+
+    original = getattr(ss, step)
+    calls = []
+
+    def raise_on_second(*args, **kwargs):
+        calls.append(1)
+        if len(calls) == 2:
+            raise RuntimeError("assignment failed")
+        return original(*args, **kwargs)
+
+    before = _persistent_rdd_ids(spark)
+    monkeypatch.setattr(ss, step, raise_on_second)
+    with pytest.raises(RuntimeError, match="assignment failed"):
+        getattr(ss, fit)(emb, iters=3)
+    assert len(calls) == 2
+    assert _persistent_rdd_ids(spark) == before
