@@ -7,7 +7,7 @@ Usage (cluster):
         --output <extracted table path>    \
         --lineage <lineage table path>     \
         [--resume]          # anti-join urls already present in --output
-        [--partitions N]    # salted repartition width (default 2x parallelism)
+        [--partitions N]    # salted repartition width (default: one task per core)
 
 The package is pure Python (stdlib + pyspark/pandas/numpy which executors
 already have), so the deps zip is all that ships — no native wheels
@@ -32,21 +32,33 @@ def main(argv: list[str] | None = None) -> None:
 
     import uuid
 
-    from pyspark.sql import functions as F
+    from pyspark.errors import AnalysisException
+    from pyspark.sql import functions as F, types as T
 
     from smoldocling_ocr_spark.operators.lineage import extraction_lineage, extraction_metrics
-    from smoldocling_ocr_spark.operators.pipeline import extract_documents, split_by_tier
+    from smoldocling_ocr_spark.operators.pipeline import EXTRACTED_SCHEMA, extract_documents, split_by_tier
     from smoldocling_ocr_spark.session import get_spark
 
     spark = get_spark(app_name="extract_job", cores=args.cores)
+
+    # every read of --output uses the schema this job writes: no footer-merge
+    # job (mergeSchema), and columns missing from parts that an older package
+    # version appended read as null, as they would under mergeSchema
+    output_schema = T.StructType(
+        EXTRACTED_SCHEMA.fields
+        + [T.StructField("run_id", T.StringType()), T.StructField("extract_pass", T.StringType())]
+    )
 
     docs = spark.read.parquet(args.input)
     already = None
     if args.resume:
         try:
-            already = spark.read.option("mergeSchema", "true").parquet(args.output).select("url")
-        except Exception:
-            already = None  # first run — nothing extracted yet
+            already = spark.read.schema(output_schema).parquet(args.output).select("url")
+        except AnalysisException as e:
+            # first run — nothing extracted yet. Any other error (an
+            # unreadable output) must fail the job, not re-extract everything
+            if e.getCondition() != "PATH_NOT_FOUND":
+                raise
 
     # TaskContext partition ids restart at 0 per pass and per run; the
     # (run_id, extract_pass) stamp keeps lineage rows from distinct
@@ -62,7 +74,7 @@ def main(argv: list[str] | None = None) -> None:
     extracted.write.mode("append").parquet(args.output)
 
     # dedicated low-parallelism pass for oversized payloads (north_rule)
-    if oversized.limit(1).count():
+    if not oversized.isEmpty():
         big = (
             extract_documents(oversized, num_partitions=4, already_extracted=already)
             .withColumn("run_id", F.lit(run_id))
@@ -70,9 +82,7 @@ def main(argv: list[str] | None = None) -> None:
         )
         big.write.mode("append").parquet(args.output)
 
-    # mergeSchema: an output dir appended by an older package version may
-    # lack the newer lineage columns; merging footers keeps the read stable
-    result = spark.read.option("mergeSchema", "true").parquet(args.output)
+    result = spark.read.schema(output_schema).parquet(args.output)
     if args.lineage:
         # lineage over the WRITTEN table: certifies exactly which partitions
         # committed (north_rule checkpoint-resume), no second input scan.

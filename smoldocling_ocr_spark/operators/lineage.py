@@ -71,7 +71,11 @@ def extraction_lineage(extracted: DataFrame) -> DataFrame:
     when the table carries run/pass discriminators (stamped by
     jobs/extract_job.py) they join the grouping key — otherwise rows from the
     normal and oversized passes (or two resume runs) would conflate under the
-    same partition_id."""
+    same partition_id.
+
+    The relation holds one row per task partition, so it is sorted in a
+    single partition: a global ``orderBy`` would add a range-partition
+    sampling job and a second shuffle for the same rows in the same order."""
     keys = [c for c in ("run_id", "extract_pass") if c in extracted.columns] + ["partition_id"]
     return (
         extracted.groupBy(*keys)
@@ -88,7 +92,8 @@ def extraction_lineage(extracted: DataFrame) -> DataFrame:
             F.min("url").alias("min_url"),
             F.max("url").alias("max_url"),
         )
-        .orderBy(*keys)
+        .coalesce(1)
+        .sortWithinPartitions(*keys)
     )
 
 

@@ -4,6 +4,8 @@ Runs the CLI twice in subprocesses (each owns its SparkSession — main()
 calls spark.stop()): a fresh extraction, then a --resume re-run over the
 same input, which must anti-join every url away and append nothing. This
 is the checkpoint-resume contract from the north rule at job level.
+In-process runs (``SparkSession.stop`` held off) cover the resume over an
+older package version's output and pin the job's Spark-job count.
 """
 
 from __future__ import annotations
@@ -18,9 +20,9 @@ import pytest
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
-def _run_job(args: list[str]) -> None:
+def _job_process(args: list[str]) -> subprocess.CompletedProcess:
     env = dict(os.environ, PYTHONPATH=ROOT)
-    proc = subprocess.run(
+    return subprocess.run(
         [sys.executable, os.path.join(ROOT, "jobs", "extract_job.py"), *args],
         capture_output=True,
         text=True,
@@ -28,7 +30,29 @@ def _run_job(args: list[str]) -> None:
         env=env,
         cwd=ROOT,
     )
+
+
+def _run_job(args: list[str]) -> None:
+    proc = _job_process(args)
     assert proc.returncode == 0, proc.stderr[-3000:]
+
+
+def _part_files(path: str) -> set[str]:
+    return {f for f in os.listdir(path) if f.startswith("part-")}
+
+
+@pytest.fixture
+def extract_main(monkeypatch):
+    """``extract_job.main`` run in this process, on the test session."""
+    from pyspark.sql import SparkSession
+
+    sys.path.insert(0, os.path.join(ROOT, "jobs"))
+    try:
+        from extract_job import main
+    finally:
+        sys.path.pop(0)
+    monkeypatch.setattr(SparkSession, "stop", lambda self: None)
+    return main
 
 
 @pytest.mark.slow
@@ -48,6 +72,78 @@ def test_extract_job_cli_then_resume(spark, cc_docs, tmp_path):
     _run_job(["--input", inp, "--output", out, "--resume", "--cores", "8"])
     again = spark.read.parquet(out)
     assert again.count() == 10, "resume run must not re-extract or duplicate"
+
+
+@pytest.mark.slow
+def test_extract_job_resume_fails_on_unreadable_output(spark, cc_docs, tmp_path):
+    """--resume over an output dir that cannot be read must fail the job,
+    not take the output for empty and append every url a second time."""
+    inp = str(tmp_path / "docs_in")
+    out = str(tmp_path / "extracted")
+    cc_docs.limit(6).write.parquet(inp)
+    _run_job(["--input", inp, "--output", out, "--cores", "4"])
+
+    with open(os.path.join(out, "part-99999-not-parquet.parquet"), "wb") as f:
+        f.write(b"this is not a parquet file")
+    committed = _part_files(out)
+
+    proc = _job_process(["--input", inp, "--output", out, "--resume", "--cores", "4"])
+    assert proc.returncode != 0, "resume over an unreadable output must fail"
+    assert _part_files(out) == committed, "a failed resume must commit no part file"
+
+
+def test_extract_job_resume_over_older_output(spark, cc_docs, tmp_path, extract_main):
+    """An output dir appended by an older package version lacks run_id,
+    extract_pass, partition_id and payload_bytes. --resume reads it with the
+    job's schema: its urls are not re-extracted, and the lineage equals
+    ``extraction_lineage`` over a mergeSchema read of the same dir."""
+    from smoldocling_ocr_spark.operators.lineage import extraction_lineage
+    from smoldocling_ocr_spark.operators.pipeline import extract_documents
+
+    inp = str(tmp_path / "docs_in")
+    out = str(tmp_path / "extracted")
+    lineage = str(tmp_path / "lineage")
+    cc_docs.limit(12).write.parquet(inp)
+    old = spark.read.parquet(inp).orderBy("url").limit(5)
+    old_urls = {r["url"] for r in old.select("url").collect()}
+    extract_documents(old, num_partitions=1).drop("partition_id", "payload_bytes").write.parquet(out)
+
+    extract_main(["--input", inp, "--output", out, "--resume", "--lineage", lineage])
+
+    rows = spark.read.option("mergeSchema", "true").parquet(out).select("url", "run_id").collect()
+    urls = [r["url"] for r in rows]
+    assert len(urls) == 12 and len(set(urls)) == 12
+    assert {r["url"] for r in rows if r["run_id"] is None} == old_urls
+    want = extraction_lineage(spark.read.option("mergeSchema", "true").parquet(out))
+    got = spark.read.parquet(lineage)
+    # a parquet read marks every column nullable; names and types must agree
+    assert [(f.name, f.dataType) for f in got.schema] == [(f.name, f.dataType) for f in want.schema]
+    assert got.collect() == want.collect()
+
+
+def test_extract_job_spark_job_count(spark, cc_docs, tmp_path, extract_main):
+    """Pins the number of Spark jobs one extract_job run starts on a small
+    input with no oversized payload: the salted write (scan, exchange,
+    write) plus a tail of the oversized probe (``isEmpty``), the read-back
+    with the job's schema (no footer-merge job), the lineage write (one
+    aggregate, sorted in a single partition) and the metrics summary.
+    The tail was 9 jobs before: ``limit(1).count()``, a ``mergeSchema``
+    read and a global ``orderBy`` gave 12 jobs in all."""
+    import uuid
+
+    inp = str(tmp_path / "docs_in")
+    cc_docs.limit(16).write.parquet(inp)
+    sc = spark.sparkContext
+    group = f"extract_job_count_{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "extract_job job count")
+    try:
+        extract_main(
+            ["--input", inp, "--output", str(tmp_path / "out"), "--lineage", str(tmp_path / "lineage")]
+        )
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 8
 
 
 def test_make_pyfiles_zip(tmp_path):

@@ -445,6 +445,46 @@ def test_extraction_lineage_run_pass_discriminators(spark, cc_docs):
     assert sum(r["doc_count"] for r in rows) == 16
 
 
+def test_extraction_lineage_matches_global_sort(spark, cc_docs):
+    """The lineage relation is sorted inside one partition; its rows, their
+    order and its schema equal the global ``orderBy`` formulation on a
+    two-run, two-pass input."""
+    from smoldocling_ocr_spark.operators.lineage import extraction_lineage
+    from smoldocling_ocr_spark.operators.pipeline import extract_documents
+
+    base = extract_documents(cc_docs.limit(8), num_partitions=2).cache()
+    base.count()
+    stamped = [
+        base.withColumn("run_id", F.lit(run)).withColumn("extract_pass", F.lit(pass_))
+        for run in ("r2", "r1")
+        for pass_ in ("oversized", "normal")
+    ]
+    both = stamped[0]
+    for df in stamped[1:]:
+        both = both.unionByName(df)
+    keys = ["run_id", "extract_pass", "partition_id"]
+    want = (
+        both.groupBy(*keys)
+        .agg(
+            F.count("*").alias("doc_count"),
+            F.sum(F.when(F.col("parse_failed"), 1).otherwise(0)).alias("parse_failure_count"),
+            F.sum(F.when(F.col("method") == "pdf_parse_failed", 1).otherwise(0)).alias(
+                "pdf_parse_failure_count"
+            ),
+            F.sum("payload_bytes").alias("bytes_processed"),
+            F.min("url").alias("min_url"),
+            F.max("url").alias("max_url"),
+        )
+        .orderBy(*keys)
+    )
+    got = extraction_lineage(both)
+    assert got.schema == want.schema
+    rows = got.collect()
+    assert len(rows) == 8
+    assert rows == want.collect()
+    base.unpersist()
+
+
 def test_scan_path_emits_grid_figures_in_flow():
     """Grid-detected figure regions reach the markdown on the scan path:
     appended AFTER layout analysis with no reading_order (structure_engine.py

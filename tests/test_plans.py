@@ -96,6 +96,36 @@ def test_fused_pipeline_single_exchange(spark):
     assert "MapInPandas" in plan
 
 
+def test_salted_width_is_one_task_per_core(spark):
+    """One wave of Python tasks: each pays a fixed start-up, so the default
+    salted width is one task per core."""
+    from smoldocling_ocr_spark.operators.pipeline import extract_documents
+    from smoldocling_ocr_spark.sources.documents import read_cc_documents
+
+    docs = read_cc_documents(spark, SF_DIR)
+    assert extract_documents(docs).rdd.getNumPartitions() == spark.sparkContext.defaultParallelism
+
+
+def test_extraction_lineage_sorts_without_range_exchange(spark):
+    """The lineage relation (one row per task partition) is sorted in one
+    partition: its executed plan has no range-partitioning Exchange, so no
+    sampling job and no second shuffle."""
+    from smoldocling_ocr_spark.operators.lineage import extraction_lineage
+
+    extracted = spark.createDataFrame(
+        [
+            ("r1", "normal", p, f"https://x/{p}/{i}", i % 3 == 0, "html_dom", 100 + i)
+            for p in range(4)
+            for i in range(5)
+        ],
+        "run_id string, extract_pass string, partition_id int, url string, "
+        "parse_failed boolean, method string, payload_bytes long",
+    )
+    lineage = extraction_lineage(extracted)
+    assert len(lineage.collect()) == 4
+    assert "rangepartitioning" not in _plan(lineage).lower()
+
+
 def test_resume_anti_join_shape(spark):
     from smoldocling_ocr_spark.operators.pipeline import extract_documents, resume_filter
     from smoldocling_ocr_spark.sources.documents import read_cc_documents
