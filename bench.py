@@ -328,7 +328,7 @@ def _skew_split_evidence(scale_path: str) -> dict:
 
 def main() -> None:
     from smoldocling_ocr_spark.plans.catalog import spark_queries
-    from smoldocling_ocr_spark.session import get_spark
+    from smoldocling_ocr_spark.session import get_spark, owned_blocks
     from smoldocling_ocr_spark.sources.documents import corpus_parquet_path
 
     corpus_parquet_path(SF_DIR)  # synthesize corpus outside the timed region
@@ -347,10 +347,12 @@ def main() -> None:
     for name in BENCH_QUERIES:
         # warm the plan shape (codegen compile, worker pools) at the smallest
         # scale so the timed run measures steady-state data-proportional work
-        catalog[name](spark, warm_dir).count()
-        t0 = time.time()
-        catalog[name](spark, SF_DIR).count()
-        queries[name] = round(time.time() - t0, 3)
+        with owned_blocks(spark):
+            catalog[name](spark, warm_dir).count()
+        with owned_blocks(spark):
+            t0 = time.time()
+            catalog[name](spark, SF_DIR).count()
+            queries[name] = round(time.time() - t0, 3)
 
     result = {
         "metric": "extract_docs_per_sec",

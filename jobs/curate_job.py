@@ -58,7 +58,7 @@ def main(argv: list[str] | None = None) -> None:
         packed_chunks,
         stratified_sample,
     )
-    from smoldocling_ocr_spark.session import get_spark
+    from smoldocling_ocr_spark.session import get_spark, owned_blocks
 
     spark = get_spark(app_name="curate_job", cores=args.cores)
     docs = spark.read.parquet(args.input)
@@ -73,8 +73,10 @@ def main(argv: list[str] | None = None) -> None:
         writer.parquet(f"{out}/{name}")
         return spark.read.schema(df.schema).parquet(f"{out}/{name}")
 
-    # 1. duplicate clustering -> keep the component-min doc (the survivor)
-    comps = write_table(connected_components(docs), "components")
+    # 1. duplicate clustering -> keep the component-min doc (the survivor);
+    # the write is the action that reads clustering's checkpoints
+    with owned_blocks(spark):
+        comps = write_table(connected_components(docs), "components")
     survivors = docs.join(
         comps.filter(F.col("doc_id") == F.col("component")).select("doc_id"), "doc_id"
     )

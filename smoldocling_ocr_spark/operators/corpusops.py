@@ -39,6 +39,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, Window as W, functions as F
 
+from ..session import release
 from ..sources.documents import read_table
 from .dedup import BAND_SIZE, MINHASH_SEEDS, _SHINGLES_SQL, lsh_bands, word_grams
 
@@ -63,20 +64,6 @@ SAMPLE_THRESHOLDS = {
 SAMPLE_DEFAULT_THRESHOLD = "80000000"  # 0.5 for unlisted languages
 
 
-def _persistent_rdd_ids(spark) -> set[int]:
-    jmap = spark.sparkContext._jsc.getPersistentRDDs()
-    return {int(i) for i in jmap.keySet().toArray()}
-
-
-def _unpersist_rdd_ids(spark, ids: set[int]) -> None:
-    """Free specific checkpoint/persist blocks by RDD id (non-blocking)."""
-    jmap = spark.sparkContext._jsc.getPersistentRDDs()
-    for i in ids:
-        jrdd = jmap.get(i)
-        if jrdd is not None:
-            jrdd.unpersist(False)
-
-
 def connected_components(docs: DataFrame, max_iters: int = CC_MAX_ITERS) -> DataFrame:
     """(doc_id, component, csize) for every document: component = min doc_id
     reachable through shared LSH buckets, csize = component population.
@@ -95,14 +82,18 @@ def connected_components(docs: DataFrame, max_iters: int = CC_MAX_ITERS) -> Data
     materialized once with an eager localCheckpoint — instead of
     re-joining the md5-string-keyed band relation twice per round; the
     convergence test rides a ``chg`` column on the label update (one
-    action per round, no separate old⨝new join); and each round's
-    checkpoint blocks are freed as soon as the next round lands (the
-    GraphFrames-between-Pregel-rounds pattern, ADVICE r5). On a real
-    cluster with a checkpoint dir, reliable checkpointing replaces the
-    local variant."""
-    spark = docs.sparkSession
-    bands = lsh_bands(docs).persist()
-    before_edges = _persistent_rdd_ids(spark)
+    action per round, no separate old⨝new join).
+
+    Block lifetime (``session.owned_blocks``): each block is released as
+    soon as nothing reads it — ``bands`` once the eager ``edges``
+    checkpoint exists, a round's labels once the next round has landed
+    (the GraphFrames-between-Pregel-rounds pattern, ADVICE r5), ``edges``
+    after the loop — so at most ``edges`` and the two latest rounds are
+    held at once. The last round's labels back the returned frame, and on
+    a raise ``edges`` and the last round are still held: both are freed by
+    the scope of the caller that runs the action. On a real cluster with a
+    checkpoint dir, reliable checkpointing replaces the local variant."""
+    bands = lsh_bands(docs).localCheckpoint(eager=False)
     roots = bands.groupBy("band", "bucket").agg(F.min("doc_id").alias("root"))
     edges = (
         bands.join(roots, ["band", "bucket"])
@@ -110,10 +101,9 @@ def connected_components(docs: DataFrame, max_iters: int = CC_MAX_ITERS) -> Data
         .distinct()
         .localCheckpoint()  # eager: signature pipeline runs exactly once
     )
-    bands.unpersist()
-    edge_ids = _persistent_rdd_ids(spark) - before_edges
+    release(bands)
     labels = docs.select("doc_id", F.col("doc_id").alias("label"))
-    prev_ids: set[int] = set()
+    prev = None
     for _ in range(max_iters):
         rmin = (
             edges.join(labels, "doc_id")
@@ -126,7 +116,6 @@ def connected_components(docs: DataFrame, max_iters: int = CC_MAX_ITERS) -> Data
             .agg(F.min("rlabel").alias("nlabel"))
         )
         nlabel = F.least(F.col("label"), F.coalesce("nlabel", "label"))
-        before_round = _persistent_rdd_ids(spark)
         new_labels = (
             labels.join(pulled, "doc_id", "left")
             .select("doc_id", nlabel.alias("label"), (nlabel < F.col("label")).alias("chg"))
@@ -136,15 +125,16 @@ def connected_components(docs: DataFrame, max_iters: int = CC_MAX_ITERS) -> Data
         # convergence count (the old form paid a second join + job for it)
         changed = new_labels.filter("chg").count()
         labels = new_labels.select("doc_id", "label")
-        _unpersist_rdd_ids(spark, prev_ids)
-        prev_ids = _persistent_rdd_ids(spark) - before_round
+        if prev is not None:
+            release(prev)
+        prev = new_labels
         if changed == 0:
             break
     else:
         raise RuntimeError(
             f"connected_components did not converge in {max_iters} rounds"
         )
-    _unpersist_rdd_ids(spark, edge_ids)
+    release(edges)
     sizes = labels.groupBy("label").agg(F.count("*").alias("csize"))
     return (
         labels.join(sizes, "label")

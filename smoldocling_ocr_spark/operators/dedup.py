@@ -170,7 +170,9 @@ def register(query) -> None:
         # evaluated THREE more times — prefix, verify-a, verify-b — each a
         # full explode→distinct→agg rerun). Lazy localCheckpoints pin each
         # shared relation to one evaluation inside the timed action, and the
-        # scan is spread off the single-task tiny-file partition.
+        # scan is spread off the single-task tiny-file partition. The
+        # returned frame reads both checkpoints, so the scope of the caller
+        # that runs the action frees them (``session.owned_blocks``).
         docs = read_table(spark, sf_dir, "documents")
         toks = F.split(F.lower(F.col("text")), " ")
         n = 3
@@ -325,7 +327,9 @@ def register(query) -> None:
         # shows the whole explode→agg subtree twice). A lazy localCheckpoint
         # materializes the signatures ONCE inside the timed action and both
         # join sides read the checkpointed partitions; RDD-level storage, so
-        # no CacheManager entry can leak into other queries' plans.
+        # no CacheManager entry can leak into other queries' plans. The
+        # returned frame reads the checkpoint, so the scope of the caller
+        # that runs the action frees it (``session.owned_blocks``).
         docs = read_table(spark, sf_dir, "documents")
         bands = lsh_bands(docs).localCheckpoint(eager=False)
         a = bands.alias("a")

@@ -10,53 +10,7 @@ splits completed and anti-join the rest (exact checkpoint-resume).
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
-import pandas as pd
-from pyspark.sql import DataFrame, functions as F, types as T
-from pyspark import TaskContext
-
-LINEAGE_SCHEMA = T.StructType(
-    [
-        T.StructField("partition_id", T.IntegerType(), False),
-        T.StructField("doc_count", T.LongType(), False),
-        T.StructField("bytes_processed", T.LongType(), False),
-        T.StructField("min_url", T.StringType(), True),
-        T.StructField("max_url", T.StringType(), True),
-    ]
-)
-
-
-def partition_lineage(docs: DataFrame) -> DataFrame:
-    """One row per partition of the *input* — (split id, doc count, bytes)."""
-
-    def summarize(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        ctx = TaskContext.get()
-        pid = ctx.partitionId() if ctx else -1
-        docs_n = 0
-        total_bytes = 0
-        min_url = None
-        max_url = None
-        for pdf in batches:
-            docs_n += len(pdf)
-            total_bytes += int(pdf["html"].map(len).sum()) if len(pdf) else 0
-            if len(pdf):
-                lo, hi = pdf["url"].min(), pdf["url"].max()
-                min_url = lo if min_url is None else min(min_url, lo)
-                max_url = hi if max_url is None else max(max_url, hi)
-        yield pd.DataFrame(
-            [
-                {
-                    "partition_id": pid,
-                    "doc_count": docs_n,
-                    "bytes_processed": total_bytes,
-                    "min_url": min_url,
-                    "max_url": max_url,
-                }
-            ]
-        )
-
-    return docs.select("url", "html").mapInPandas(summarize, schema=LINEAGE_SCHEMA)
+from pyspark.sql import DataFrame, functions as F
 
 
 def extraction_lineage(extracted: DataFrame) -> DataFrame:

@@ -9,8 +9,10 @@ shuffle partitions sized to cores not the 200 default.
 from __future__ import annotations
 
 import os
+from collections.abc import Iterator
+from contextlib import contextmanager
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 # html blobs average tens of KB; keep Arrow batches ~8-32 MB
 ARROW_BATCH_ROWS = 256
@@ -52,6 +54,41 @@ def get_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def persisted_rdd_ids(spark: SparkSession) -> set[int]:
+    """Ids of every RDD the session holds persisted blocks for (checkpoints
+    and ``DataFrame.cache()`` buffers alike)."""
+    return {int(i) for i in spark.sparkContext._jsc.getPersistentRDDs().keySet().toArray()}
+
+
+@contextmanager
+def owned_blocks(spark: SparkSession) -> Iterator[None]:
+    """Frees, on exit or raise, every checkpoint made inside the block.
+
+    Block lifetime has one rule: the code that runs the action owns the
+    scope. An operator may return a frame that reads a lazy
+    ``localCheckpoint`` it made, so it cannot free that block itself; its
+    caller wraps build and action in one scope. Only checkpoints are
+    released (materialized or not — a lazy one is registered as soon as it
+    is made): a ``DataFrame.cache()``/``persist()`` buffer backs a
+    CacheManager entry, and unpersisting it by RDD id would leave a stale
+    entry whose plan silently recomputes, so those stay with the
+    CacheManager and their owner's ``DataFrame.unpersist``."""
+    before = persisted_rdd_ids(spark)
+    try:
+        yield
+    finally:
+        for rdd_id, jrdd in spark.sparkContext._jsc.getPersistentRDDs().items():
+            if int(rdd_id) not in before and jrdd.rdd().checkpointData().isDefined():
+                jrdd.unpersist(False)
+
+
+def release(frame: DataFrame) -> None:
+    """Free the checkpoint ``frame`` reads now, inside a scope, once nothing
+    will read it again. ``frame`` must be the checkpointed DataFrame itself
+    (its logical plan is the ``LogicalRDD`` over the checkpointed RDD)."""
+    frame._jdf.logicalPlan().rdd().unpersist(False)
 
 
 def cluster_conf(executors: int = 1000, executor_cores: int = 8) -> dict[str, str]:

@@ -40,7 +40,7 @@ def _hash_frame(pdf) -> tuple[int, str, str]:
 def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     import __spark_entry__ as entrymod
-    from smoldocling_ocr_spark.session import get_spark
+    from smoldocling_ocr_spark.session import get_spark, owned_blocks
 
     spark = get_spark(app_name="driver_mimic", cores=16)
     con = duckdb.connect()
@@ -55,7 +55,8 @@ def main() -> int:
             print(f"[{i:2d}] {name}: rows-only (no oracle)")
             continue
         try:
-            s_rows, s_cols, s_hash = _hash_frame(fn(spark, sf_dir).toPandas())
+            with owned_blocks(spark):
+                s_rows, s_cols, s_hash = _hash_frame(fn(spark, sf_dir).toPandas())
             o_rows, o_cols, o_hash = _hash_frame(con.execute(oracles[name]).df())
         except Exception as exc:  # pragma: no cover
             failures.append(name)

@@ -10,7 +10,13 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
+from smoldocling_ocr_spark.session import owned_blocks
+
 SF_DIR = "/root/testdata/sf0.001"
+
+# connected_components' checkpoints back the frame it returns: each test
+# runs build and action in one scope, and the guard checks nothing leaks
+pytestmark = pytest.mark.usefixtures("no_leaked_blocks")
 
 
 def test_cc_identical_docs_form_components(spark):
@@ -22,7 +28,8 @@ def test_cc_identical_docs_form_components(spark):
         [(10, text_a), (11, text_a), (12, text_b), (13, text_b), (14, "lone words here only")],
         ["doc_id", "text"],
     )
-    rows = {r.doc_id: (r.component, r.csize) for r in connected_components(docs).collect()}
+    with owned_blocks(spark):
+        rows = {r.doc_id: (r.component, r.csize) for r in connected_components(docs).collect()}
     assert rows[10] == (10, 2) and rows[11] == (10, 2)
     assert rows[12] == (12, 2) and rows[13] == (12, 2)
     assert rows[14] == (14, 1)
@@ -34,7 +41,7 @@ def test_cc_nonconvergence_raises(spark):
     docs = spark.createDataFrame(
         [(1, "same text body here"), (2, "same text body here")], ["doc_id", "text"]
     )
-    with pytest.raises(RuntimeError, match="did not converge"):
+    with pytest.raises(RuntimeError, match="did not converge"), owned_blocks(spark):
         # max_iters=0 -> the loop body never runs -> loud failure, never a
         # silent partial labeling
         connected_components(docs, max_iters=0)
@@ -47,7 +54,8 @@ def test_cc_label_is_component_min(spark):
     from smoldocling_ocr_spark.sources.documents import read_table
 
     docs = read_table(spark, SF_DIR, "documents")
-    rows = connected_components(docs).collect()
+    with owned_blocks(spark):
+        rows = connected_components(docs).collect()
     by_comp: dict[int, list[int]] = {}
     for r in rows:
         by_comp.setdefault(r.component, []).append(r.doc_id)
@@ -304,12 +312,13 @@ def test_cc_vs_unionfind_reference(spark):
         for did in members
     }
 
-    got = {
-        r.doc_id: (r.component, r.csize)
-        for r in connected_components(
-            spark.createDataFrame(docs, ["doc_id", "text"])
-        ).collect()
-    }
+    with owned_blocks(spark):
+        got = {
+            r.doc_id: (r.component, r.csize)
+            for r in connected_components(
+                spark.createDataFrame(docs, ["doc_id", "text"])
+            ).collect()
+        }
     assert got == expected
     assert any(v[1] > 2 for v in expected.values())  # a multi-doc chain exists
 
@@ -363,7 +372,8 @@ def test_gram_ops_survive_short_docs(spark):
     assert bands.filter(F.col("doc_id").isin(0, 1, 2)).count() == 0
     assert bands.filter(F.col("doc_id") == 3).count() > 0
     # CC over a corpus containing short docs: every doc labeled, no crash
-    comps = {r.doc_id: r.component for r in connected_components(docs).collect()}
+    with owned_blocks(spark):
+        comps = {r.doc_id: r.component for r in connected_components(docs).collect()}
     assert set(comps) == {0, 1, 2, 3, 7}
     # direct word_grams law: empty arrays below the width
     rows = docs.select("doc_id", word_grams(F.split(F.col("text"), " "), 5).alias("g")).collect()

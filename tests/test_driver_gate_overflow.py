@@ -15,7 +15,10 @@ from __future__ import annotations
 import duckdb
 import pytest
 
+from smoldocling_ocr_spark.session import owned_blocks
 from tests.driver_mimic import TABLES, _hash_frame
+
+pytestmark = pytest.mark.usefixtures("no_leaked_blocks")
 
 SF_DIR = "/root/testdata/sf0.001"
 
@@ -39,7 +42,8 @@ def _displaced():
 def test_displaced_query_hash_matches_oracle(spark, duck, name):
     from smoldocling_ocr_spark.plans.catalog import oracle_queries, spark_queries
 
-    s_rows, s_cols, s_hash = _hash_frame(spark_queries()[name](spark, SF_DIR).toPandas())
+    with owned_blocks(spark):
+        s_rows, s_cols, s_hash = _hash_frame(spark_queries()[name](spark, SF_DIR).toPandas())
     o_rows, o_cols, o_hash = _hash_frame(duck.execute(oracle_queries()[name]).df())
     assert s_rows == o_rows, f"{name}: row count {s_rows} != oracle {o_rows}"
     assert s_cols == o_cols, f"{name}: columns {s_cols} != oracle {o_cols}"

@@ -5,7 +5,8 @@ calls spark.stop()): a fresh extraction, then a --resume re-run over the
 same input, which must anti-join every url away and append nothing. This
 is the checkpoint-resume contract from the north rule at job level.
 In-process runs (``SparkSession.stop`` held off) cover the resume over an
-older package version's output and pin the job's Spark-job count.
+older package version's output, pin the job's Spark-job count, and show
+that a curate_job run leaves no persisted block behind in the session.
 """
 
 from __future__ import annotations
@@ -18,6 +19,8 @@ import zipfile
 import pytest
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+pytestmark = pytest.mark.usefixtures("no_leaked_blocks")
 
 
 def _job_process(args: list[str]) -> subprocess.CompletedProcess:
@@ -41,18 +44,29 @@ def _part_files(path: str) -> set[str]:
     return {f for f in os.listdir(path) if f.startswith("part-")}
 
 
-@pytest.fixture
-def extract_main(monkeypatch):
-    """``extract_job.main`` run in this process, on the test session."""
+def _in_process(monkeypatch, job: str):
+    """``<job>.main`` run in this process, on the test session."""
+    import importlib
+
     from pyspark.sql import SparkSession
 
     sys.path.insert(0, os.path.join(ROOT, "jobs"))
     try:
-        from extract_job import main
+        main = importlib.import_module(job).main
     finally:
         sys.path.pop(0)
     monkeypatch.setattr(SparkSession, "stop", lambda self: None)
     return main
+
+
+@pytest.fixture
+def extract_main(monkeypatch):
+    return _in_process(monkeypatch, "extract_job")
+
+
+@pytest.fixture
+def curate_main(monkeypatch):
+    return _in_process(monkeypatch, "curate_job")
 
 
 @pytest.mark.slow
@@ -320,3 +334,23 @@ def test_curate_job_empty_sequences(spark, tmp_path):
     assert spark.read.parquet(f"{out}/curated").count() == 0
     seq_files = [f for _, _, fs in os.walk(f"{out}/sequences") for f in fs if f.endswith(".parquet")]
     assert seq_files == []
+
+
+def test_curate_job_in_process(spark, tmp_path, curate_main):
+    """curate_job in the test session, the way a long-lived driver runs it
+    again and again: the checkpoints behind the components write are freed
+    when the write returns (the guard checks the session's blocks), and
+    the tables match the subprocess job's laws."""
+    import pyspark.sql.functions as F
+
+    inp = "/root/testdata/sf0.001/documents.parquet"
+    docs = spark.read.parquet(inp)
+    out = str(tmp_path / "curated")
+    curate_main(["--input", inp, "--output", out])
+
+    comps = spark.read.parquet(f"{out}/components")
+    assert comps.count() == docs.count()
+    heads = comps.filter(F.col("doc_id") == F.col("component")).select("doc_id")
+    curated = spark.read.parquet(f"{out}/curated")
+    assert 0 < curated.count() < docs.count()
+    assert curated.join(heads, "doc_id", "left_anti").count() == 0

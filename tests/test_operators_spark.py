@@ -234,16 +234,13 @@ def test_export_formats():
 
 
 def test_resume_and_lineage(spark, cc_docs):
-    from smoldocling_ocr_spark.operators.lineage import extraction_metrics, partition_lineage
+    from smoldocling_ocr_spark.operators.lineage import extraction_metrics
     from smoldocling_ocr_spark.operators.pipeline import extract_documents
 
     extracted = extract_documents(cc_docs.limit(10), num_partitions=4).cache()
     metrics = extraction_metrics(extracted).collect()[0]
     assert metrics["docs"] == 10
     assert metrics["parse_failures"] == 0
-    lineage = partition_lineage(cc_docs.limit(10)).collect()
-    assert sum(r["doc_count"] for r in lineage) == 10
-    assert all(r["bytes_processed"] > 0 for r in lineage if r["doc_count"])
 
 
 def test_extraction_lineage_same_pass(spark, cc_docs):

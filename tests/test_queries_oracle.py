@@ -12,6 +12,10 @@ import math
 import duckdb
 import pytest
 
+from smoldocling_ocr_spark.session import owned_blocks
+
+pytestmark = pytest.mark.usefixtures("no_leaked_blocks")
+
 SF_DIR = "/root/testdata/sf0.001"
 TABLES = (
     "region nation customer supplier part orders lineitem events documents embeddings".split()
@@ -69,9 +73,10 @@ QUERY_NAMES = sorted(_queries()[0].keys())
 @pytest.mark.parametrize("name", QUERY_NAMES)
 def test_query_matches_oracle(name, spark, duck):
     queries, oracles = _queries()
-    sdf = queries[name](spark, SF_DIR)
-    spark_cols = sdf.columns
-    spark_rows = [tuple(r) for r in sdf.collect()]
+    with owned_blocks(spark):
+        sdf = queries[name](spark, SF_DIR)
+        spark_cols = sdf.columns
+        spark_rows = [tuple(r) for r in sdf.collect()]
 
     if name not in oracles:
         # rows-only check (non-SQL-expressible op): must run and be non-empty

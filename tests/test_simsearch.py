@@ -7,24 +7,17 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import DataFrame
 
-from smoldocling_ocr_spark.operators.corpusops import _persistent_rdd_ids
 from smoldocling_ocr_spark.operators.simsearch import (
     NEARDUP_THRESHOLD,
     blocked_cosine_pairs,
     parquet_row_count,
 )
+from smoldocling_ocr_spark.session import persisted_rdd_ids
 
 SF_DIR = "/root/testdata/sf0.001"
 
-
-@pytest.fixture(autouse=True)
-def no_leaked_blocks(spark):
-    """Fail any test here that returns with a persisted RDD it did not
-    start with: every fit releases what it persists."""
-    before = _persistent_rdd_ids(spark)
-    yield
-    leaked = _persistent_rdd_ids(spark) - before
-    assert not leaked, f"persisted RDDs leaked: {sorted(leaked)}"
+# every fit releases what it persists
+pytestmark = pytest.mark.usefixtures("no_leaked_blocks")
 
 
 @pytest.fixture(scope="module")
@@ -437,9 +430,9 @@ def test_fit_releases_input_when_an_iteration_raises(spark, emb, monkeypatch, fi
             raise RuntimeError("assignment failed")
         return original(*args, **kwargs)
 
-    before = _persistent_rdd_ids(spark)
+    before = persisted_rdd_ids(spark)
     monkeypatch.setattr(ss, step, raise_on_second)
     with pytest.raises(RuntimeError, match="assignment failed"):
         getattr(ss, fit)(emb, iters=3)
     assert len(calls) == 2
-    assert _persistent_rdd_ids(spark) == before
+    assert persisted_rdd_ids(spark) == before
