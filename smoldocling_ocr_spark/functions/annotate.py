@@ -5,8 +5,8 @@ Reference semantics: /root/reference/semantic_annotator.py — pattern banks
 (:197-283), annotated emission with reading-order / role / confidence
 comments and the uncertain / low-confidence wraps (:139-195), table/figure
 emission (:285-341), per-page emission with the ``<!-- page:N -->`` marker
-and (reading_order, y) sort (:343-371), and document structure summary
-(:373-431).
+and (reading_order, y) sort (:343-371), and the table/figure flags of the
+document structure summary (:373-431).
 """
 
 from __future__ import annotations
@@ -109,7 +109,9 @@ _EQUATION_SUFFIX = EQUATION_RES[3]
 
 
 class PageContext:
-    """Per-page means used by the role ladder (semantic_annotator.py:12-40)."""
+    """Per-page context the role ladder reads (semantic_annotator.py:12-40):
+    the mean text font size and the page height. The reference's mean text
+    length is read by no rule, so it is not computed."""
 
     def __init__(self, elements: list[dict[str, Any]], page_num: int, page_height: float = 800.0):
         self.page_num = page_num
@@ -120,8 +122,6 @@ class PageContext:
             if e.get("type") == "text" and e.get("font_size")
         ]
         self.avg_font_size = sum(sizes) / len(sizes) if sizes else 12.0
-        lengths = [len(e.get("content") or "") for e in elements if e.get("type") == "text"]
-        self.avg_text_length = sum(lengths) / len(lengths) if lengths else 50.0
 
 
 def classify_text_role(elem: dict[str, Any], ctx: PageContext) -> tuple[str, dict[str, Any]]:
@@ -292,40 +292,10 @@ def render_page(elements: list[dict[str, Any]], page_num: int, page_height: floa
     return "".join(parts)
 
 
-def document_structure(pages: list[list[dict[str, Any]]]) -> dict[str, Any]:
-    """Cross-page structure summary (TOC, section counts, feature flags)."""
-    headings: list[dict[str, Any]] = []
-    flags = {
-        "has_footnotes": False,
-        "has_equations": False,
-        "has_tables": False,
-        "has_figures": False,
-    }
-    for page_num, elements in enumerate(pages, 1):
-        ctx = PageContext(elements, page_num)
-        for elem in elements:
-            kind = elem.get("type")
-            if kind == "table":
-                flags["has_tables"] = True
-            elif kind == "figure":
-                flags["has_figures"] = True
-            elif kind == "text":
-                role, attrs = classify_text_role(elem, ctx)
-                if role == "heading":
-                    headings.append(
-                        {
-                            "text": (elem.get("content") or "")[:50],
-                            "level": attrs.get("level", 2),
-                            "page": page_num,
-                        }
-                    )
-                elif role == "footnote":
-                    flags["has_footnotes"] = True
-                elif role == "equation":
-                    flags["has_equations"] = True
-    return {
-        **flags,
-        "heading_hierarchy": headings,
-        "section_count": sum(1 for h in headings if h["level"] <= 2),
-        "has_toc": len([h for h in headings if h["page"] <= 2]) > 5,
-    }
+def document_structure(pages: list[list[dict[str, Any]]]) -> dict[str, bool]:
+    """Document feature flags the frontmatter carries, from element types
+    alone: ``has_tables`` and ``has_figures``. The reference's TOC, heading
+    hierarchy and footnote/equation flags (semantic_annotator.py:373-431)
+    reach no output, so they are not computed."""
+    kinds = {elem.get("type") for elements in pages for elem in elements}
+    return {"has_tables": "table" in kinds, "has_figures": "figure" in kinds}

@@ -1,14 +1,14 @@
 """Confidence aggregation core.
 
 Reference semantics: /root/reference/confidence_tracker.py — document stats
-(avg/min/max/median/stdev, uncertain < 0.7 and low < 0.5 counts/percentages,
-:103-144), per-page stats (:146-160), page quality tiers (:241-275), the
-overall quality score ``0.6*avg + 0.2*min + 0.2*(1 - uncertain%)`` (:277-306)
-and the YAML dict (:308-324).
+(avg/min, uncertain < 0.7 and low < 0.5 counts/percentages, :103-144), page
+quality tiers (:241-275), the overall quality score ``0.6*avg + 0.2*min +
+0.2*(1 - uncertain%)`` (:277-306) and the YAML dict (:308-324).
 
-In the Spark relational twin these are plain groupBy aggregations
-(SURVEY.md §2.4); this form feeds the per-document render UDF.
-"""
+The per-document pass computes only what the frontmatter emits: avg, min,
+and the uncertain and low counts. The reference's max/median/stdev live in
+the catalog twins ``confidence_statistics`` and ``median_confidence`` (plain
+groupBy aggregations, SURVEY.md §2.4)."""
 
 from __future__ import annotations
 
@@ -27,32 +27,21 @@ def _clamp(value: Any) -> float:
     return max(0.0, min(1.0, conf))
 
 
-def collect_scores(pages: list[list[dict[str, Any]]]) -> list[tuple[int, float, str]]:
-    """Flatten (page_num, clamped confidence, element type) records."""
-    records = []
-    for page_num, elements in enumerate(pages, 1):
-        for elem in elements:
-            records.append((page_num, _clamp(elem.get("confidence", 1.0)), elem.get("type", "text")))
-    return records
-
-
 def document_statistics(pages: list[list[dict[str, Any]]]) -> dict[str, Any]:
-    records = collect_scores(pages)
-    if not records:
+    """avg/min of the clamped element confidences, element total, and the
+    uncertain (< 0.7) and low (< 0.5) counts and percentages."""
+    scores = [_clamp(elem.get("confidence", 1.0)) for elements in pages for elem in elements]
+    if not scores:
         return {
-            "avg": 1.0, "min": 1.0, "max": 1.0, "median": 1.0, "std_dev": 0.0,
+            "avg": 1.0, "min": 1.0,
             "total_elements": 0, "uncertain_count": 0, "uncertain_percentage": 0.0,
             "low_confidence_count": 0, "low_confidence_percentage": 0.0,
         }
-    scores = [r[1] for r in records]
     uncertain = sum(1 for s in scores if s < LOW_THRESHOLD)
     low = sum(1 for s in scores if s < CRITICAL_THRESHOLD)
     return {
         "avg": round(statistics.mean(scores), 4),
         "min": round(min(scores), 4),
-        "max": round(max(scores), 4),
-        "median": round(statistics.median(scores), 4),
-        "std_dev": round(statistics.stdev(scores), 4) if len(scores) > 1 else 0.0,
         "total_elements": len(scores),
         "uncertain_count": uncertain,
         "uncertain_percentage": round(uncertain / len(scores) * 100, 2),

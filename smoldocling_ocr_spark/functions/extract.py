@@ -3,10 +3,10 @@
 Stage order mirrors /root/reference/enhanced_pipeline.py:75-174 +
 structure_engine.py:326-481:
 
-  decode payload → per-page layout analysis (layout path only) → noise
-  tagging → caption/footnote linking → confidence stats → per-page annotated
-  render → loose hyphen merge → language detection → schema enforcement →
-  validation + quality gate.
+  decode payload → per-page reading order + figure regions (layout and PDF
+  paths) → noise tagging → caption/footnote linking → confidence stats →
+  per-page annotated render → loose hyphen merge → language detection →
+  schema enforcement → validation + quality gate.
 
 This single function is the byte-parity source of truth: golden fixtures are
 frozen from it, and the Spark pipeline invokes the very same code inside an
@@ -17,7 +17,11 @@ from __future__ import annotations
 
 from typing import Any
 
-from . import annotate, captions, confidence, langid, layout, layoutcodec, metadata, noise, textnorm, validate
+from . import (
+    annotate, captions, confidence, langid, layout, layoutcodec, metadata, noise, pdftext, schema_enforce, textnorm,
+    validate,
+)
+from .figures import detect_figure_regions
 from .htmlstrip import extract_elements as html_extract_elements
 
 DEFAULT_PAGE_HEIGHT = 800.0
@@ -55,14 +59,12 @@ def decode_payload(payload: bytes, text_fallback: str | None) -> tuple[list[list
         # stream parser yields positioned line elements, so the same layout
         # pass applies; scanned/encrypted PDFs raise → text-column fallback,
         # mirroring the reference's digital-vs-scan router (:914-928)
-        from . import pdftext
-
         try:
-            pages, dims = pdftext.extract_pdf_pages(payload)
-            # document-information dict → frontmatter fields, the fitz
-            # doc.metadata analog; the D: date is parsed exactly where the
-            # reference parses it (metadata_extractor.py:97-123)
-            info = pdftext.pdf_info(payload)
+            # one object map gives pages, dims and the document-information
+            # dict (frontmatter fields, the fitz doc.metadata analog); the D:
+            # date is parsed exactly where the reference parses it
+            # (metadata_extractor.py:97-123)
+            pages, dims, info = pdftext.extract_pdf_pages(payload)
             if "creation_date" in info:
                 info["creation_date"] = metadata.parse_pdf_date(info["creation_date"])
             return pages, dims, info, "pdf_text"
@@ -104,38 +106,31 @@ def decode_payload(payload: bytes, text_fallback: str | None) -> tuple[list[list
 
 def run_layout_analysis(
     pages: list[list[dict[str, Any]]],
-    page_dims: list[tuple[float, float]] | None = None,
-    detect_figures: bool = True,
+    page_dims: list[tuple[float, float]],
 ) -> tuple[list[list[dict[str, Any]]], int]:
-    """Per-page geometric pass for bbox-bearing (layout) payloads.
+    """Per-page geometric pass for bbox-bearing (layout) payloads: reading
+    order (``layout.order_page``), then the occupancy-grid empty-region
+    detector (structure_engine.py:384 calls it on every scan page). Roles
+    are left to the render, which classifies every text element itself.
 
-    ``detect_figures`` runs the occupancy-grid empty-region detector
-    (structure_engine.py:384 calls it on every scan page) before analysis —
-    ON by default to match the reference. Sparse pages can flood the
-    connected margin region into one page-sized candidate; the reference has
-    the same behavior, filtered only by the >=100px-per-dimension size gate
-    (structure_engine.py:240-249, mirrored in figures.py), so goldens encode
-    it rather than avoid it.
+    Sparse pages can flood the connected margin region into one page-sized
+    figure candidate; the reference has the same behavior, filtered only by
+    the >=100px-per-dimension size gate (structure_engine.py:240-249,
+    mirrored in figures.py), so goldens encode it rather than avoid it.
     """
     out: list[list[dict[str, Any]]] = []
     max_columns = 0
-    for page_idx, elements in enumerate(pages):
+    for elements, (width, height) in zip(pages, page_dims, strict=True):
         with_bbox = [e for e in elements if e.get("bbox")]
         if with_bbox and len(with_bbox) == len(elements):
-            result = layout.analyze_page(elements)
-            analyzed = result["elements"]
-            if detect_figures and page_dims:
-                # reference order: the analyzer sees only the original
-                # elements; grid-detected figure regions are appended AFTER
-                # analysis with no reading_order (structure_engine.py:384-411)
-                # and the (reading_order or 0, y) render sort places them
-                # first on the page, y-ordered (semantic_annotator.py:360-364)
-                from .figures import detect_figure_regions
-
-                width, height = page_dims[page_idx]
-                boxes = [tuple(e["bbox"]) for e in elements if e.get("type") == "text"]
-                analyzed = analyzed + detect_figure_regions(width, height, boxes)
-            out.append(analyzed)
+            result = layout.order_page(elements)
+            # reference order: the analyzer sees only the original elements;
+            # grid-detected figure regions are appended AFTER analysis with
+            # no reading_order (structure_engine.py:384-411) and the
+            # (reading_order or 0, y) render sort places them first on the
+            # page, y-ordered (semantic_annotator.py:360-364)
+            boxes = [tuple(e["bbox"]) for e in elements if e.get("type") == "text"]
+            out.append(result["elements"] + detect_figure_regions(width, height, boxes))
             max_columns = max(max_columns, result["column_count"])
         else:
             out.append(elements)
@@ -203,7 +198,7 @@ def extract_document(
     # enhanced_pipeline.py:136-174 handles the OCR path).
     if method in ("text_layer", "pdf_text", "pdf_parse_failed"):
         body = textnorm.normalize_markdown(body)
-    markdown = validate_and_enforce(body, meta)
+    markdown = schema_enforce.enforce_schema(body, meta)
 
     report = validate.validate_markdown(markdown)
     gate = validate.quality_gate(markdown, report)
@@ -231,9 +226,3 @@ def extract_document(
         + noise_report["artifacts_tagged"],
         "document_id": meta["document_id"],
     }
-
-
-def validate_and_enforce(markdown: str, meta: dict[str, Any]) -> str:
-    from . import schema_enforce
-
-    return schema_enforce.enforce_schema(markdown, meta)

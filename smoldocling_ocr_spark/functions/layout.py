@@ -7,6 +7,11 @@ reading order (:112-151), multi-signal role classifier (:153-323 with the
 split at 0.7 with low-confidence postfix (:396-426, :479-483), and the
 page-level orchestration (:428-493).
 
+The fused extraction path (``functions.extract``) calls only ``order_page``:
+its render classifies text with ``annotate.classify_text_role`` and never
+reads ``semantic_role``. The multi-signal role ladder in ``analyze_page``
+feeds the staged path (``operators.stages.analyze_layout``).
+
 Relational twins of the window-function formulations live in
 ``smoldocling_ocr_spark.plans.catalog`` (lag/cumsum gap clustering,
 row_number XY-cut) so the DuckDB oracle can check them.
@@ -236,40 +241,17 @@ def classify_role_enhanced(
     return "paragraph", 1.0 - heading_score
 
 
-def analyze_page(
-    elements: list[dict[str, Any]],
-    confidence_threshold: float = CONFIDENCE_THRESHOLD,
-) -> dict[str, Any]:
-    """Full per-page layout pass: confidence split → columns → XY-cut → roles,
-    with low-confidence elements re-appended after the ordered run."""
-    if not elements:
-        return {"elements": [], "columns": [], "column_count": 0}
-
-    high, low = split_by_confidence(elements, confidence_threshold)
+def order_page(elements: list[dict[str, Any]]) -> dict[str, Any]:
+    """Per-page ordering pass: confidence split → columns → XY-cut, with
+    low-confidence elements re-appended after the ordered run, each one
+    reading_order past the previous one. Assigns no roles."""
+    high, low = split_by_confidence(elements)
     columns = detect_columns(high)
     assign_columns(high, columns)
     ordered = xy_cut_order(high)
-
-    stats = _page_stats(ordered)
-    for i, elem in enumerate(ordered):
-        if elem.get("type") == "figure" and elem.get("semantic_role"):
-            # occupancy-grid figure regions carry their role from the
-            # detector (structure_engine.py:245-249 emits semantic_role=
-            # 'figure'); the reference never re-classifies them — image
-            # regions are appended after analyze_page_layout runs (:384-411)
-            elem.setdefault("role_confidence", 1.0)
-            continue
-        prev_elem = ordered[i - 1] if i > 0 else None
-        next_elem = ordered[i + 1] if i < len(ordered) - 1 else None
-        role, conf = classify_role_enhanced(elem, stats, prev_elem, next_elem)
-        elem["semantic_role"] = role
-        elem["role_confidence"] = conf
-
     for elem in low:
         elem["reading_order"] = len(ordered) + 1
-        elem["semantic_role"] = "paragraph"
         ordered.append(elem)
-
     return {
         "elements": ordered,
         "columns": columns,
@@ -277,3 +259,29 @@ def analyze_page(
         "high_confidence_count": len(high),
         "low_confidence_count": len(low),
     }
+
+
+def analyze_page(elements: list[dict[str, Any]]) -> dict[str, Any]:
+    """Full per-page layout pass (the staged path): ``order_page``, then
+    multi-signal roles over the high-confidence run; low-confidence
+    elements are plain paragraphs."""
+    result = order_page(elements)
+    n_high = result["high_confidence_count"]
+    high = result["elements"][:n_high]
+    stats = _page_stats(high)
+    for i, elem in enumerate(high):
+        if elem.get("type") == "figure" and elem.get("semantic_role"):
+            # occupancy-grid figure regions carry their role from the
+            # detector (structure_engine.py:245-249 emits semantic_role=
+            # 'figure'); the reference never re-classifies them — image
+            # regions are appended after analyze_page_layout runs (:384-411)
+            elem.setdefault("role_confidence", 1.0)
+            continue
+        prev_elem = high[i - 1] if i > 0 else None
+        next_elem = high[i + 1] if i < n_high - 1 else None
+        role, conf = classify_role_enhanced(elem, stats, prev_elem, next_elem)
+        elem["semantic_role"] = role
+        elem["role_confidence"] = conf
+    for elem in result["elements"][n_high:]:
+        elem["semantic_role"] = "paragraph"
+    return result

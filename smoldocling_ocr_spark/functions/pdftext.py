@@ -419,8 +419,11 @@ def _parse_content(data: bytes) -> list[tuple[float, float, float, str]]:
     return shows
 
 
-def extract_pdf_pages(payload: bytes) -> tuple[list[list[dict[str, Any]]], list[tuple[float, float]]]:
-    """PDF bytes → (pages of line elements with bboxes, page dims).
+def extract_pdf_pages(
+    payload: bytes,
+) -> tuple[list[list[dict[str, Any]]], list[tuple[float, float]], dict[str, str]]:
+    """PDF bytes → (pages of line elements with bboxes, page dims, info dict),
+    all from one scan of the indirect objects.
 
     Shows are grouped into lines by y proximity (<2pt), y is flipped to the
     top-left origin the rest of the pipeline uses, and each line becomes a
@@ -482,7 +485,7 @@ def extract_pdf_pages(payload: bytes) -> tuple[list[list[dict[str, Any]]], list[
         dims.append((width, height))
     if not any(pages):
         raise ValueError("PDF has no extractable text layer (scanned?)")
-    return pages, dims
+    return pages, dims, _info(payload, objects)
 
 
 _INFO_REF_RE = re.compile(rb"/Info\s+(\d+)\s+\d+\s+R")
@@ -493,20 +496,17 @@ _INFO_FIELD_RES = {
 }
 
 
-def pdf_info(payload: bytes) -> dict[str, str]:
+def _info(payload: bytes, objects: dict[int, tuple[bytes, bytes | None]]) -> dict[str, str]:
     """Document-information dictionary (trailer /Info → Title/Author/
     CreationDate), the fields metadata_extractor.py:97-123 reads via
-    fitz ``doc.metadata`` for the YAML frontmatter. Literal-string values
+    fitz ``doc.metadata`` for the YAML frontmatter, looked up in the
+    object map with object streams already expanded. Literal-string values
     only (the overwhelmingly common form); raw D: dates are returned as-is
     for metadata.parse_pdf_date."""
     m = _INFO_REF_RE.search(payload)
     if not m:
         return {}
-    objects = _objects(payload)
     obj = objects.get(int(m.group(1)))
-    if obj is None:
-        _expand_object_streams(objects)
-        obj = objects.get(int(m.group(1)))
     if obj is None:
         return {}
     body = obj[0]

@@ -22,7 +22,6 @@ HALLUCINATION_PATTERNS = (
     r"from what I can (see|tell)",
     r"this (appears|seems) to be",
 )
-HALLUCINATION_RES = [re.compile("(?i)" + p) for p in HALLUCINATION_PATTERNS]
 # single alternation — one C-speed scan per line instead of eight
 _HALLUCINATION_ANY = re.compile("(?i)" + "|".join(f"(?:{p})" for p in HALLUCINATION_PATTERNS))
 # literal pre-filter: every _HALLUCINATION_ANY match necessarily contains one

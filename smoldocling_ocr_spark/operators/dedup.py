@@ -49,13 +49,6 @@ def word_grams(toks, n: int):
     return F.when(F.size(toks) >= n, grams).otherwise(F.array().cast("array<string>"))
 
 
-def _shingles(docs: DataFrame, n: int = 3) -> DataFrame:
-    """Distinct (doc_id, shingle) word n-grams of lower(text)."""
-    toks = F.split(F.lower(F.col("text")), " ")
-    shingle = F.explode(word_grams(toks, n)).alias("shingle")
-    return docs.select("doc_id", shingle).distinct()
-
-
 _SHINGLES_SQL = """
       SELECT DISTINCT doc_id,
              toks[i+1] || ' ' || toks[i+2] || ' ' || toks[i+3] AS shingle

@@ -46,10 +46,6 @@ def write_bucketed(
     )
 
 
-def read_bucketed(spark: SparkSession, table: str) -> DataFrame:
-    return spark.table(table)
-
-
 def colocated_resume_pending(spark: SparkSession, docs_table: str, extracted_table: str) -> DataFrame:
     """Checkpoint-resume pending set via a co-located left-anti join: when
     both tables are bucketed by url with the same bucket count, the plan has

@@ -486,10 +486,11 @@ def test_scan_path_emits_grid_figures_in_flow():
     """Grid-detected figure regions reach the markdown on the scan path:
     appended AFTER layout analysis with no reading_order (structure_engine.py
     :384-411), so the (reading_order or 0, y) render sort places them first
-    on their page, and text reading order / column count are unperturbed."""
+    on their page. Before them, each page holds exactly analyze_page's
+    ordering (its roles aside), with the same column count."""
     from smoldocling_ocr_spark.functions.extract import extract_document, decode_payload, run_layout_analysis
     from smoldocling_ocr_spark.sources.corpus import generate_rows
-    from smoldocling_ocr_spark.functions import layoutcodec
+    from smoldocling_ocr_spark.functions import layout, layoutcodec
 
     rows = [r for r in generate_rows(60) if layoutcodec.is_layout_payload(bytes(r["html"]))]
     assert rows
@@ -502,16 +503,35 @@ def test_scan_path_emits_grid_figures_in_flow():
     page1 = md.split("<!-- page:1 -->")[1].split("<!-- page:2 -->")[0]
     assert page1.index("role:figure") < page1.index("reading-order:1")
 
-    # figure regions never perturb the analyzer: columns and text order are
-    # identical with detection on and off
-    pages, dims, _, _ = decode_payload(bytes(r["html"]), r["text"])
-    on, ncol_on = run_layout_analysis([list(p) for p in pages], page_dims=dims, detect_figures=True)
-    pages2, _, _, _ = decode_payload(bytes(r["html"]), r["text"])
-    off, ncol_off = run_layout_analysis([list(p) for p in pages2], page_dims=dims, detect_figures=False)
-    assert ncol_on == ncol_off
-    texts_on = [[(e.get("content"), e.get("reading_order")) for e in p if "bbox" in e and e.get("type") == "text"] for p in on]
-    texts_off = [[(e.get("content"), e.get("reading_order")) for e in p if "bbox" in e and e.get("type") == "text"] for p in off]
-    assert texts_on == texts_off
+    # the fused layout pass is layout.analyze_page's ordering without its
+    # roles: on every layout and PDF page, the elements before the appended
+    # grid figures match analyze_page's in order, reading_order and every
+    # other field, and the column count is the same
+    n_pages = 0
+    for r in generate_rows(600):
+        pages, dims, _, method = decode_payload(bytes(r["html"]), r["text"])
+        if method not in ("layout_ocr", "pdf_text"):
+            continue
+        want_pages, _, _, _ = decode_payload(bytes(r["html"]), r["text"])
+        got, ncol = run_layout_analysis(pages, page_dims=dims)
+        want_ncol = 0
+        for got_page, want_page in zip(got, want_pages, strict=True):
+            if not (want_page and all(e.get("bbox") for e in want_page)):
+                assert got_page == want_page
+                want_ncol = max(want_ncol, 1)
+                continue
+            result = layout.analyze_page(want_page)
+            want_ncol = max(want_ncol, result["column_count"])
+            want = [
+                {k: v for k, v in e.items() if k not in ("semantic_role", "role_confidence")}
+                for e in result["elements"]
+            ]
+            assert got_page[: len(want)] == want
+            grid = got_page[len(want):]
+            assert all(e["type"] == "figure" and "reading_order" not in e for e in grid)
+            n_pages += 1
+        assert ncol == want_ncol
+    assert n_pages > 100
 
 
 def _exif_tiff(bo: str = "<") -> bytes:

@@ -60,7 +60,7 @@ def _two_page_pdf() -> bytes:
 def test_pdf_two_pages_positions_and_strings():
     payload = _two_page_pdf()
     assert is_pdf(payload)
-    pages, dims = extract_pdf_pages(payload)
+    pages, dims, _ = extract_pdf_pages(payload)
     assert len(pages) == 2
     assert dims == [(612.0, 792.0), (595.0, 842.0)]
 
@@ -158,7 +158,6 @@ def test_pdf_info_metadata_to_frontmatter():
     import datetime as dt
 
     from smoldocling_ocr_spark.functions.extract import extract_document
-    from smoldocling_ocr_spark.functions.pdftext import pdf_info
 
     base = _two_page_pdf()
     info = (
@@ -167,7 +166,7 @@ def test_pdf_info_metadata_to_frontmatter():
         b"trailer\n<< /Root 1 0 R /Info 9 0 R >>\n"
     )
     payload = base.replace(b"%%EOF", info + b"%%EOF")
-    assert pdf_info(payload) == {
+    assert extract_pdf_pages(payload)[2] == {
         "title": "Q1 (Draft)", "author": "A. Writer",
         "creation_date": "D:20230506070809",
     }
@@ -175,7 +174,7 @@ def test_pdf_info_metadata_to_frontmatter():
     assert 'title: "Q1 (Draft)"' in md
     assert 'author: "A. Writer"' in md
     assert 'creation_date: "2023-05-06T07:08:09"' in md
-    assert pdf_info(base) == {}  # no Info dict → empty
+    assert extract_pdf_pages(base)[2] == {}  # no Info dict → empty
 
 
 def test_pdf_kids_order_overrides_object_numbering():
@@ -193,7 +192,7 @@ def test_pdf_kids_order_overrides_object_numbering():
             8: _content_obj(b"BT /F1 12 Tf 72 700 Td (First page text body) Tj ET"),
         }
     ) + b"\ntrailer\n<< /Root 1 0 R >>\n"
-    pages, _ = extract_pdf_pages(payload)
+    pages, _, _ = extract_pdf_pages(payload)
     assert [p[0]["content"] for p in pages] == [
         "First page text body",
         "Second page text body",
@@ -213,7 +212,7 @@ def test_pdf_intermediate_pages_nodes_recursed():
             6: _content_obj(b"BT /F1 12 Tf 72 700 Td (Top level kid page) Tj ET"),
         }
     ) + b"\ntrailer\n<< /Root 1 0 R >>\n"
-    pages, _ = extract_pdf_pages(payload)
+    pages, _, _ = extract_pdf_pages(payload)
     assert [p[0]["content"] for p in pages] == ["Nested kid page", "Top level kid page"]
 
 
@@ -237,7 +236,7 @@ def test_pdf_length_delimits_stream_with_embedded_keywords():
     from smoldocling_ocr_spark.functions.pdftext import _objects
 
     assert 5 in _objects(payload)
-    pages, _ = extract_pdf_pages(payload)
+    pages, _, _ = extract_pdf_pages(payload)
     texts = [e["content"] for e in pages[0]]
     assert "contains endstream inside" in texts
     assert "and endobj too" in texts
@@ -255,7 +254,7 @@ def test_pdf_flate_without_length_falls_back():
             4: b"<< /Filter /FlateDecode /Length 9 0 R >>\nstream\n" + data + b"\nendstream",
         }
     )
-    pages, _ = extract_pdf_pages(payload)
+    pages, _, _ = extract_pdf_pages(payload)
     assert pages[0][0]["content"] == "no length entry"
 
 
@@ -278,8 +277,6 @@ def test_pdf_undecodable_contents_is_parse_failure():
 def test_pdf_info_utf16be_strings():
     """UTF-16BE text strings (BOM FE FF) in the Info dict decode to real
     text instead of one-char-per-byte mojibake."""
-    from smoldocling_ocr_spark.functions.pdftext import pdf_info
-
     title = "Résumé – Übersicht"
     raw = b"\xfe\xff" + title.encode("utf-16-be")
     # escape PDF literal-string specials in the raw bytes
@@ -289,7 +286,7 @@ def test_pdf_info_utf16be_strings():
         b"9 0 obj\n<< /Title (" + esc + b") /Author (Plain) >>\nendobj\n"
         b"trailer\n<< /Root 1 0 R /Info 9 0 R >>\n%%EOF",
     )
-    assert pdf_info(payload) == {"title": title, "author": "Plain"}
+    assert extract_pdf_pages(payload)[2] == {"title": title, "author": "Plain"}
 
 
 def test_pdf_info_octal_overflow_never_fails_page_extraction():
@@ -299,18 +296,15 @@ def test_pdf_info_octal_overflow_never_fails_page_extraction():
     try, a metadata-only quirk silently discarded a successful text-layer
     parse (ADVICE r3 #1). The Info parse must survive and pages must still
     extract."""
-    from smoldocling_ocr_spark.functions.pdftext import pdf_info
-
     # \777 & 0xFF = 0xFF; paired inside a BOM'd string it stays decodable
     payload = _two_page_pdf().replace(
         b"%%EOF",
         b"9 0 obj\n<< /Title (\\376\\377\\000T\\777) /Author (Plain) >>\nendobj\n"
         b"trailer\n<< /Root 1 0 R /Info 9 0 R >>\n%%EOF",
     )
-    info = pdf_info(payload)  # must not raise
+    pages, _, info = extract_pdf_pages(payload)  # must not raise
     assert info["author"] == "Plain"
     assert info["title"].startswith("T")
-    pages, _ = extract_pdf_pages(payload)
     assert len(pages) == 2
     assert "Annual Report" in [e["content"] for e in pages[0]]
 
@@ -319,28 +313,27 @@ def test_pdf_title_ending_in_stream_keyword_not_misparsed():
     """A literal string ending in 'stream' followed by a newline inside a
     non-stream object dict must not be treated as stream data (ADVICE r3
     #4) — the stream keyword only counts after the dict's closing >>."""
-    from smoldocling_ocr_spark.functions.pdftext import pdf_info
-
     payload = _two_page_pdf().replace(
         b"%%EOF",
         b"9 0 obj\n<< /Title (All about stream\ns) /Author (Keeps) >>\nendobj\n"
         b"trailer\n<< /Root 1 0 R /Info 9 0 R >>\n%%EOF",
     )
-    info = pdf_info(payload)
+    pages, _, info = extract_pdf_pages(payload)
     assert info == {"title": "All about stream\ns", "author": "Keeps"}
-    pages, _ = extract_pdf_pages(payload)
     assert len(pages) == 2
 
 
 def test_pdf_object_streams_expanded():
     """PDF 1.5+ object streams: catalog/pages/page dictionaries live inside
     a Flate-compressed /Type /ObjStm; only the content stream is a
-    top-level object — the overwhelmingly common modern-writer shape."""
+    top-level object — the overwhelmingly common modern-writer shape. The
+    /Info dictionary can sit there too."""
     inner = {
         1: b"<< /Type /Catalog /Pages 2 0 R >>",
         2: b"<< /Type /Pages /Kids [3 0 R 5 0 R] /Count 2 /MediaBox [0 0 612 792] >>",
         3: b"<< /Type /Page /Parent 2 0 R /Contents 4 0 R >>",
         5: b"<< /Type /Page /Parent 2 0 R /Contents 6 0 R /MediaBox [0 0 595 842] >>",
+        9: b"<< /Title (Packed title) /Author (Packed author) >>",
     }
     header = bytearray()
     bodies = bytearray()
@@ -356,8 +349,9 @@ def test_pdf_object_streams_expanded():
             4: _content_obj(b"BT /F1 14 Tf 72 700 Td (From objstm page one) Tj ET", flate=True),
             6: _content_obj(b"BT /F1 14 Tf 72 700 Td (From objstm page two) Tj ET"),
         }
-    ) + b"\ntrailer\n<< /Root 1 0 R >>\n"
-    pages, dims = extract_pdf_pages(payload)
+    ) + b"\ntrailer\n<< /Root 1 0 R /Info 9 0 R >>\n"
+    pages, dims, info = extract_pdf_pages(payload)
+    assert info == {"title": "Packed title", "author": "Packed author"}
     assert [p[0]["content"] for p in pages] == [
         "From objstm page one",
         "From objstm page two",
@@ -375,5 +369,5 @@ def test_pdf_mediabox_inherited_from_parent():
             4: _content_obj(b"BT /F1 12 Tf 72 600 Td (inherited box) Tj ET"),
         }
     ) + b"\ntrailer\n<< /Root 1 0 R >>\n"
-    _, dims = extract_pdf_pages(payload)
+    _, dims, _ = extract_pdf_pages(payload)
     assert dims == [(500.0, 700.0)]
