@@ -1,14 +1,15 @@
 """Confidence aggregation core.
 
 Reference semantics: /root/reference/confidence_tracker.py — document stats
-(avg/min, uncertain < 0.7 and low < 0.5 counts/percentages, :103-144), page
-quality tiers (:241-275), the overall quality score ``0.6*avg + 0.2*min +
-0.2*(1 - uncertain%)`` (:277-306) and the YAML dict (:308-324).
+(avg/min, uncertain < 0.7 count/percentage, :103-144), the overall quality
+score ``0.6*avg + 0.2*min + 0.2*(1 - uncertain%)`` (:277-306) and the YAML
+dict (:308-324).
 
-The per-document pass computes only what the frontmatter emits: avg, min,
-and the uncertain and low counts. The reference's max/median/stdev live in
-the catalog twins ``confidence_statistics`` and ``median_confidence`` (plain
-groupBy aggregations, SURVEY.md §2.4)."""
+The per-document pass computes only what the frontmatter emits: the score,
+avg, min and the uncertain count. The reference's max/median/stdev, its
+low (< 0.5) counts and its page quality tiers live in the catalog twins
+``confidence_statistics``, ``median_confidence`` and ``quality_tiers``
+(plain groupBy aggregations, SURVEY.md §2.4)."""
 
 from __future__ import annotations
 
@@ -16,7 +17,6 @@ import statistics
 from typing import Any
 
 LOW_THRESHOLD = 0.7
-CRITICAL_THRESHOLD = 0.5
 
 
 def _clamp(value: Any) -> float:
@@ -29,37 +29,21 @@ def _clamp(value: Any) -> float:
 
 def document_statistics(pages: list[list[dict[str, Any]]]) -> dict[str, Any]:
     """avg/min of the clamped element confidences, element total, and the
-    uncertain (< 0.7) and low (< 0.5) counts and percentages."""
+    uncertain (< 0.7) count and percentage."""
     scores = [_clamp(elem.get("confidence", 1.0)) for elements in pages for elem in elements]
     if not scores:
         return {
             "avg": 1.0, "min": 1.0,
             "total_elements": 0, "uncertain_count": 0, "uncertain_percentage": 0.0,
-            "low_confidence_count": 0, "low_confidence_percentage": 0.0,
         }
     uncertain = sum(1 for s in scores if s < LOW_THRESHOLD)
-    low = sum(1 for s in scores if s < CRITICAL_THRESHOLD)
     return {
         "avg": round(statistics.mean(scores), 4),
         "min": round(min(scores), 4),
         "total_elements": len(scores),
         "uncertain_count": uncertain,
         "uncertain_percentage": round(uncertain / len(scores) * 100, 2),
-        "low_confidence_count": low,
-        "low_confidence_percentage": round(low / len(scores) * 100, 2),
     }
-
-
-def quality_tier(avg_conf: float) -> str:
-    if avg_conf >= 0.9:
-        return "excellent"
-    if avg_conf >= 0.8:
-        return "good"
-    if avg_conf >= 0.7:
-        return "acceptable"
-    if avg_conf >= 0.5:
-        return "poor"
-    return "very_poor"
 
 
 def overall_quality_score(stats: dict[str, Any]) -> float:
@@ -81,6 +65,4 @@ def to_frontmatter_fields(pages: list[list[dict[str, Any]]]) -> dict[str, Any]:
         "confidence_avg": stats["avg"],
         "confidence_min": stats["min"],
         "uncertain_regions": stats["uncertain_count"],
-        "uncertain_percentage": stats["uncertain_percentage"],
-        "low_confidence_regions": stats["low_confidence_count"],
     }

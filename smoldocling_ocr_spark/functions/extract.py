@@ -53,7 +53,7 @@ def decode_payload(payload: bytes, text_fallback: str | None) -> tuple[list[list
             for p in doc.get("pages", [])
         ]
         return pages, dims, doc.get("meta", {}), "layout_ocr"
-    if payload[:5] == b"%PDF-":
+    if pdftext.is_pdf(payload):
         # digital-PDF route (structure_engine.py:67-110 sends text-layer
         # PDFs through pymupdf4llm instead of OCR): the pure-Python content-
         # stream parser yields positioned line elements, so the same layout

@@ -60,9 +60,8 @@ ARTIFACT_RES = [
     )
 ]
 
-_CONSONANT_RUN = re.compile(r"[bcdfghjklmnpqrstvwxz]{5,}", re.IGNORECASE)
-_CHAR_REPEAT = re.compile(r"(.)\1{4,}")
-# one scan for either garble signal (existence check — OR of the two)
+# one scan for either garble signal (existence check): a run of 5+
+# consonants, or one character repeated 5+ times
 _GARBLE_RUN_ANY = re.compile(r"(?i:[bcdfghjklmnpqrstvwxz]{5,})|(.)\1{4,}")
 # C-speed count of chars that are neither alphanumeric nor whitespace
 _SPECIAL_CHAR = re.compile(r"[^\w\s]|_")

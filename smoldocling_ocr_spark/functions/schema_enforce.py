@@ -13,7 +13,6 @@ import re
 from typing import Any
 
 PAGE_MARKER_RE = re.compile(r"<!--\s*page:\s*(\d+)\s*-->")
-ROLE_ANNOTATION_RE = re.compile(r"<!--\s*role:(\w+)(?:\s+[^>]+)?\s*-->")
 HEADING_RE = re.compile(r"^(#{1,6})\s+(.+)$", re.MULTILINE)
 _IMPLICIT_PAGE_RE = re.compile(r"^##\s+Page\s+(\d+)\s*$", re.MULTILINE)
 _SEPARATOR_CELL_RE = re.compile(r"^:?-+:?$")

@@ -44,8 +44,7 @@ VALID_ROLES = frozenset(
 )
 
 _PAGE_MARKER_RE = re.compile(r"<!--\s*page:\s*(\d+)\s*-->")
-_ROLE_RE = re.compile(r"<!--\s*role:\w+")
-_HEADING_LINE_RE = re.compile(r"^#{1,6}\s+", re.MULTILINE)
+_ROLE_RE = re.compile(r"<!--\s*role:(\w+)")
 _TABLE_LINE_RE = re.compile(r"^\|", re.MULTILINE)
 _HEADING_LEVELS_RE = re.compile(r"^(#{1,6})\s+", re.MULTILINE)
 
@@ -83,37 +82,23 @@ def validate_markdown(text: str) -> dict[str, Any]:
         if missing:
             issues.append(_issue("warning", "schema", f"Missing page markers: {sorted(missing)}"))
 
-    role_count = len(_ROLE_RE.findall(text))
-    headings = len(_HEADING_LINE_RE.findall(text))
+    roles = _ROLE_RE.findall(text)
+    levels = _HEADING_LEVELS_RE.findall(text)
     tables = len(_TABLE_LINE_RE.findall(text)) // 2
-    if role_count < (headings + tables) * 0.5:
+    if len(roles) < (len(levels) + tables) * 0.5:
         issues.append(
-            _issue("warning", "schema", f"Low annotation coverage: {role_count} annotations for {headings} headings and {tables} tables")
+            _issue("warning", "schema", f"Low annotation coverage: {len(roles)} annotations for {len(levels)} headings and {tables} tables")
         )
 
-    # --- content ---
+    # --- one pass over the lines: content count, hallucinations, format ---
+    # content lines start on the line after the frontmatter's closing ---
     content_start = 0
     if text.startswith("---"):
         fm_end = text.find("---", 3)
         if fm_end > 0:
             content_start = text.find("\n", fm_end) + 1
-    content_lines = text[content_start:].split("\n")
-    non_empty = [l for l in content_lines if l.strip() and not l.strip().startswith("<!--")]
-    if len(non_empty) < 3:
-        issues.append(_issue("error", "content", "Document appears to have very little content"))
-
-    uncertain = text.count("[uncertain:")
-    low_conf = text.count("[low-confidence:")
-    if uncertain > len(non_empty) * 0.3:
-        issues.append(_issue("warning", "content", f"High uncertainty: {uncertain} uncertain regions"))
-    if low_conf > len(non_empty) * 0.1:
-        issues.append(_issue("warning", "content", f"Many low-confidence regions: {low_conf}"))
-
-    levels = _HEADING_LEVELS_RE.findall(text)
-    if levels and len(levels[0]) != 1:
-        issues.append(_issue("info", "content", f"Document does not start with H1 (starts with H{len(levels[0])})"))
-
-    # --- hallucinations + format (one pass over the lines) ---
+    content_from = text.count("\n", 0, content_start) + 1
+    non_empty = 0
     # whole-text pre-check: almost no document trips the phrase bank, so one
     # C-speed scan replaces a per-line search in the common case; the
     # literal pre-filter skips even that scan unless a candidate substring
@@ -122,36 +107,52 @@ def validate_markdown(text: str) -> dict[str, Any]:
     any_hallucination = any(
         lit in lowered for lit in _HALLUCINATION_LITERALS
     ) and _HALLUCINATION_ANY.search(text) is not None
-    bracket_reported = False
-    bracket_issue_pos = None
+    # line issues follow the content issues in the report
+    line_issues: list[dict[str, Any]] = []
+    bracket_line = None
     for i, line in enumerate(text.split("\n"), 1):
-        if any_hallucination and _HALLUCINATION_ANY.search(line):
-            issues.append(_issue("error", "hallucination", "Potential hallucination detected", i))
-        if len(line) > 500 and not line.startswith("|"):
-            issues.append(_issue("info", "format", f"Very long line ({len(line)} chars)", i))
         stripped_line = line.strip()
+        if i >= content_from and stripped_line and not stripped_line.startswith("<!--"):
+            non_empty += 1
+        if any_hallucination and _HALLUCINATION_ANY.search(line):
+            line_issues.append(_issue("error", "hallucination", "Potential hallucination detected", i))
+        if len(line) > 500 and not line.startswith("|"):
+            line_issues.append(_issue("info", "format", f"Very long line ({len(line)} chars)", i))
         if stripped_line.startswith("|") and not stripped_line.endswith("|"):
-            issues.append(_issue("warning", "format", "Incomplete table row", i))
+            line_issues.append(_issue("warning", "format", "Incomplete table row", i))
         if (
-            not bracket_reported
+            bracket_line is None
             and not stripped_line.startswith("<!--")
             and line.count("[") != line.count("]")
         ):
-            bracket_reported = True
-            bracket_issue_pos = (len(issues), i)
+            bracket_line = i
+
+    # --- content ---
+    if non_empty < 3:
+        issues.append(_issue("error", "content", "Document appears to have very little content"))
+
+    uncertain = text.count("[uncertain:")
+    low_conf = text.count("[low-confidence:")
+    if uncertain > non_empty * 0.3:
+        issues.append(_issue("warning", "content", f"High uncertainty: {uncertain} uncertain regions"))
+    if low_conf > non_empty * 0.1:
+        issues.append(_issue("warning", "content", f"Many low-confidence regions: {low_conf}"))
+
+    if levels and len(levels[0]) != 1:
+        issues.append(_issue("info", "content", f"Document does not start with H1 (starts with H{len(levels[0])})"))
+    issues.extend(line_issues)
 
     # --- markdown syntax (validator.py:19-84 semantics) ---
     if text.count("```") % 2 != 0:
         issues.append(_issue("warning", "format", "Unclosed code fence (odd ``` count)"))
     if re.search(r"\[([^\]]*)\]\(\s*\)", text):
         issues.append(_issue("warning", "format", "Empty link target"))
-    if bracket_reported:
+    if bracket_line is not None:
         # one report per document is enough signal
-        issues.append(_issue("info", "format", "Unmatched square brackets", bracket_issue_pos[1]))
+        issues.append(_issue("info", "format", "Unmatched square brackets", bracket_line))
 
     # --- role whitelist (rapidocr_validator.py:99 / openrouter_validator.py:110-114) ---
-    found_roles = set(re.findall(r"<!--\s*role:(\w+)", text))
-    invalid = found_roles - VALID_ROLES
+    invalid = set(roles) - VALID_ROLES
     if invalid:
         issues.append(_issue("warning", "schema", f"Invalid roles: {sorted(invalid)}"))
 

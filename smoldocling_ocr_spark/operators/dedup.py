@@ -158,14 +158,15 @@ def register(query) -> None:
           SAME collected set (sz := size(shs), so prefix length and the
           verified set can never disagree under a hash collision).
         """
-        # r6 reuse hygiene (plans/r06/dedup_ngram_jaccard_before.txt showed
-        # 48 Exchanges: `sh` evaluated twice inside docsets and docsets
-        # evaluated THREE more times — prefix, verify-a, verify-b — each a
-        # full explode→distinct→agg rerun). Lazy localCheckpoints pin each
-        # shared relation to one evaluation inside the timed action, and the
-        # scan is spread off the single-task tiny-file partition. The
-        # returned frame reads both checkpoints, so the scope of the caller
-        # that runs the action frees them (``session.owned_blocks``).
+        # r6 reuse hygiene (the r6 plan had 48 Exchanges: `sh` evaluated
+        # twice inside docsets and docsets evaluated THREE more times —
+        # prefix, verify-a, verify-b — each a full explode→distinct→agg
+        # rerun; tests/test_plans.py pins the shuffle count of the plan over
+        # the checkpoints). Lazy localCheckpoints pin each shared relation to one
+        # evaluation inside the timed action, and the scan is spread off the
+        # single-task tiny-file partition. The returned frame reads both
+        # checkpoints, so the scope of the caller that runs the action frees
+        # them (``session.owned_blocks``).
         docs = read_table(spark, sf_dir, "documents")
         toks = F.split(F.lower(F.col("text")), " ")
         n = 3
@@ -316,8 +317,9 @@ def register(query) -> None:
         # r6: the banded relation feeds BOTH sides of the self-join, and the
         # planner builds the broadcast side as a full second evaluation of
         # the signature pipeline (no ReusedExchange across a
-        # BroadcastExchange boundary — plans/r06/dedup_minhash_lsh_before
-        # shows the whole explode→agg subtree twice). A lazy localCheckpoint
+        # BroadcastExchange boundary — the r6 plan held the whole
+        # explode→agg subtree twice; tests/test_plans.py pins the shuffle
+        # count of the plan over the checkpoint). A lazy localCheckpoint
         # materializes the signatures ONCE inside the timed action and both
         # join sides read the checkpointed partitions; RDD-level storage, so
         # no CacheManager entry can leak into other queries' plans. The

@@ -150,7 +150,6 @@ def _with_global_agg(df: DataFrame, agg_expr, name: str) -> DataFrame:
 # Java-regex-safe subsets of the noise predicate banks (full Python-re banks
 # run in-UDF; these relational twins are the oracle-checkable projections).
 _PAGE_NUM_SQLRE = r"^(Page ?[0-9]+( of [0-9]+)?|[0-9]+ ?/ ?[0-9]+|- ?[0-9]+ ?-|[0-9]+)$"
-_WM_WORDS = r"^(CONFIDENTIAL|DRAFT|SAMPLE|PREVIEW|WATERMARK)$"
 
 
 @query(

@@ -17,7 +17,6 @@ from pyspark.sql import DataFrame, functions as F
 
 DEFAULT_WINDOW = "10 minutes"
 DEFAULT_WATERMARK = "20 minutes"
-DEFAULT_LATENESS_GRACE = DEFAULT_WATERMARK  # alias documenting intent
 
 
 def windowed_event_counts(

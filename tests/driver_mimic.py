@@ -17,7 +17,7 @@ import duckdb
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-TABLES = "region nation customer supplier part orders lineitem events documents embeddings".split()
+from smoldocling_ocr_spark.sources.documents import TABLE_NAMES as TABLES
 
 
 def _hash_frame(pdf) -> tuple[int, str, str]:

@@ -539,25 +539,33 @@ def _recording_plans(spark):
 @pytest.fixture(scope="module")
 def catalog_plans(spark):
     """name -> (formatted physical plan, optimized plans of the query and of
-    every frame it checkpoints) for each catalog query that builds here."""
+    every frame it checkpoints) for every catalog query. A query that no
+    longer builds fails here. Each build runs in its own block scope, since
+    connected components runs its rounds while it builds, and the fixture
+    fails if a persisted block outlives it."""
     from smoldocling_ocr_spark.plans.catalog import spark_queries
+    from smoldocling_ocr_spark.session import owned_blocks, persisted_rdd_ids
 
+    before = persisted_rdd_ids(spark)
     out = {}
     with _recording_plans(spark) as recorded:
         for name, fn in spark_queries().items():
             del recorded[:]
-            try:
+            with owned_blocks(spark):
                 df = fn(spark, SF_DIR)
                 out[name] = (_plan(df), [_optimized(df)] + [p for _, p in recorded])
-            except Exception:
-                continue  # queries needing other fixtures are covered elsewhere
+    leaked = persisted_rdd_ids(spark) - before
+    assert not leaked, f"building the catalog left persisted RDDs: {sorted(leaked)}"
     return out
 
 
-# Shuffle Exchange nodes in the physical plan of every similarity-search
-# query and of the corpus operators the curate job shares, read before
-# their stages were merged into shared helpers: a change to a shared stage
-# must not add (or drop) a shuffle anywhere it is used.
+# Shuffle Exchange nodes in the formatted physical plan of every catalog
+# query, built at sf0.001 before any action: adaptive execution has not
+# re-planned yet, broadcast and reused exchanges are not counted, and a
+# checkpointed frame counts as the scan that reads it. A shuffle added or
+# dropped anywhere, by the query itself or by an operator it shares with
+# other queries and the jobs, fails here until the pin is changed on
+# purpose, and a new or renamed query fails until it is pinned.
 _PINNED_EXCHANGES = {
     "ann_cosine_topk": 3,
     "ann_ivf_kmeans_topk": 4,
@@ -568,20 +576,84 @@ _PINNED_EXCHANGES = {
     "ann_lsh_verified_neardup": 4,
     "ann_pq_topk": 3,
     "ann_pq_topk_fixed_books": 3,
+    "body_font_mode": 3,
+    "bpe_encode_corpus": 2,
+    "bpe_train_merges": 1,
+    "bpe_word_frequencies": 1,
+    "c4_quality_filters": 1,
+    "cache_resume_anti_join": 1,
+    "caption_proximity_join": 2,
+    "collapse_whitespace_normalize": 0,
+    "column_gap_clustering": 2,
+    "completeness_estimate": 1,
+    "confidence_statistics": 3,
+    "decontamination_scan": 3,
+    "dedup_connected_components": 3,
+    "dedup_exact": 2,
+    "dedup_exact_survivors": 1,
+    "dedup_minhash_lsh": 2,
+    "dedup_ngram_jaccard": 2,
+    "dedup_simhash": 2,
+    "defragment_line_merge": 0,
+    "doc_fingerprint": 1,
+    "document_id_sha256": 1,
     "embedding_cosine_neardup": 3,
     "embedding_label_centroids": 2,
-    "decontamination_scan": 3,
-    "stratified_sample_by_lang": 1,
+    "exact_substring_dedup": 5,
+    "extract_language_detection": 2,
+    "extract_method_routing": 3,
+    "extract_pipeline_full": 2,
+    "garbled_text_predicate": 1,
+    "global_span_dedup": 5,
+    "gopher_quality_filters": 1,
+    "gopher_repetition_filters": 1,
+    "hallucination_scan": 1,
+    "heading_promotion": 2,
+    "history_topk": 0,
+    "hyphen_merge_strict": 2,
+    "interval_containment_join": 1,
+    "langid_histogram_relational": 1,
+    "langid_script_heuristic": 2,
+    "median_confidence": 2,
+    "multimodal_decode_stats": 2,
+    "noise_page_number_tagging": 2,
+    "order_priority_check": 2,
+    "payload_size_tiers": 2,
+    "pdf_date_parse_relational": 1,
+    "pii_scan_redact": 1,
+    "prev_next_gap_context": 2,
+    "pricing_summary": 2,
+    "quality_score_rubric": 3,
+    "quality_tiers": 4,
+    "regional_supplier_volume": 2,
+    "repeater_detection": 2,
+    "repeater_semi_join": 2,
+    "revenue_forecast": 1,
+    "role_distribution": 3,
     "sequence_packing": 2,
+    "sequentiality_check": 2,
+    "shipping_priority": 1,
+    "small_quantity_revenue": 2,
+    "sql_api_reading_order": 1,
+    "stratified_sample_by_lang": 1,
+    "text_quality_scoring": 1,
+    "token_counting": 2,
+    "top_bottom_candidates": 2,
+    "training_chunks": 1,
+    "unicode_dash_normalize": 1,
+    "unigram_freq_score": 5,
+    "word_char_counts": 2,
+    "xycut_reading_order": 2,
 }
 
 
 def test_exchange_counts_pinned(catalog_plans):
-    pinned = {n for n in catalog_plans if n.startswith(("ann_", "embedding_"))}
-    assert pinned <= set(_PINNED_EXCHANGES), "pin the Exchange count of every ANN query"
+    from smoldocling_ocr_spark.plans.catalog import spark_queries
+
+    assert set(_PINNED_EXCHANGES) == set(spark_queries()), "pin the Exchange count of every catalog query"
     got = {
-        name: len(re.findall(r"\bExchange \(\d+\)", catalog_plans[name][0].split("\n\n(")[0]))
-        for name in _PINNED_EXCHANGES
+        name: len(re.findall(r"\bExchange \(\d+\)", plan.split("\n\n(")[0]))
+        for name, (plan, _) in catalog_plans.items()
     }
     assert got == _PINNED_EXCHANGES
 

@@ -13,13 +13,11 @@ import duckdb
 import pytest
 
 from smoldocling_ocr_spark.session import owned_blocks
+from smoldocling_ocr_spark.sources.documents import TABLE_NAMES as TABLES
 
 pytestmark = pytest.mark.usefixtures("no_leaked_blocks")
 
 SF_DIR = "/root/testdata/sf0.001"
-TABLES = (
-    "region nation customer supplier part orders lineitem events documents embeddings".split()
-)
 
 
 @pytest.fixture(scope="module")
