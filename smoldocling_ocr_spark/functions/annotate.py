@@ -14,6 +14,8 @@ from __future__ import annotations
 import re
 from typing import Any
 
+from .confidence import element_confidence
+
 HEADING_RES = [
     re.compile(p)
     for p in (
@@ -183,18 +185,11 @@ def classify_text_role(elem: dict[str, Any], ctx: PageContext) -> tuple[str, dic
     return "paragraph", {}
 
 
-def _coerce_conf(value: Any) -> float:
-    try:
-        return float(value) if value is not None else 1.0
-    except (TypeError, ValueError):
-        return 1.0
-
-
 def render_text(elem: dict[str, Any], ctx: PageContext) -> str:
     content = (elem.get("content") or "").strip()
     if not content:
         return ""
-    confidence = _coerce_conf(elem.get("confidence", 1.0))
+    confidence = element_confidence(elem)
     reading_order = elem.get("reading_order")
 
     noise_type = elem.get("noise_type")

@@ -15,6 +15,8 @@ from __future__ import annotations
 import re
 from typing import Any
 
+from .noise import element_y
+
 PROXIMITY_THRESHOLD = 100.0
 PAGE_BOTTOM_THRESHOLD = 0.8
 
@@ -72,15 +74,6 @@ def parse_caption(text: str) -> dict[str, Any] | None:
     return None
 
 
-def _y_of(elem: dict[str, Any]) -> float:
-    if elem.get("y") is not None:
-        return elem["y"]
-    bbox = elem.get("bbox")
-    if bbox:
-        return bbox[1]
-    return 0.0
-
-
 def link_captions_page(elements: list[dict[str, Any]]) -> tuple[list[dict[str, Any]], list[dict[str, Any]]]:
     """Attach each caption line to the nearest same-kind target within 100px.
 
@@ -103,11 +96,11 @@ def link_captions_page(elements: list[dict[str, Any]]) -> tuple[list[dict[str, A
     linked: list[dict[str, Any]] = []
     for _, elem, info in caption_rows:
         candidates = tables if info["kind"] == "table" else figures
-        cy = _y_of(elem)
+        cy = element_y(elem)
         best = None
         best_dist = PROXIMITY_THRESHOLD
         for idx, target in candidates:
-            dist = abs(_y_of(target) - cy)
+            dist = abs(element_y(target) - cy)
             if dist < best_dist:
                 best_dist = dist
                 best = target
@@ -128,7 +121,7 @@ def link_footnotes_page(
     for elem in elements:
         if elem.get("type") != "text":
             continue
-        if _y_of(elem) / page_height < PAGE_BOTTOM_THRESHOLD:
+        if element_y(elem) / page_height < PAGE_BOTTOM_THRESHOLD:
             continue
         content = (elem.get("content") or "").strip()
         # every footnote pattern's first char is one of these (r6 gate)

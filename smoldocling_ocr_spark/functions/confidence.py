@@ -19,18 +19,28 @@ from typing import Any
 LOW_THRESHOLD = 0.7
 
 
-def _clamp(value: Any) -> float:
+def element_confidence(elem: dict[str, Any]) -> float:
+    """An element's OCR confidence as a float, unclamped; a missing, None or
+    unparseable value reads as 1.0. Every stage that reads confidence (the
+    layout split, the noise artifact rule, the render, these statistics and
+    the staged element relation) reads it through here."""
+    value = elem.get("confidence")
+    if value is None:
+        return 1.0
     try:
-        conf = float(value) if value is not None else 1.0
+        return float(value)
     except (TypeError, ValueError):
-        conf = 1.0
-    return max(0.0, min(1.0, conf))
+        return 1.0
+
+
+def _clamp(elem: dict[str, Any]) -> float:
+    return max(0.0, min(1.0, element_confidence(elem)))
 
 
 def document_statistics(pages: list[list[dict[str, Any]]]) -> dict[str, Any]:
     """avg/min of the clamped element confidences, element total, and the
     uncertain (< 0.7) count and percentage."""
-    scores = [_clamp(elem.get("confidence", 1.0)) for elements in pages for elem in elements]
+    scores = [_clamp(elem) for elements in pages for elem in elements]
     if not scores:
         return {
             "avg": 1.0, "min": 1.0,

@@ -201,7 +201,7 @@ def extract_document(
     markdown = schema_enforce.enforce_schema(body, meta)
 
     report = validate.validate_markdown(markdown)
-    gate = validate.quality_gate(markdown, report)
+    gate = validate.quality_gate(report)
 
     n_elements = sum(len(p) for p in pages)
     return {

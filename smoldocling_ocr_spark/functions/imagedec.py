@@ -19,6 +19,7 @@ and the 8×8 inverse DCT is one batched numpy basis multiply.
 from __future__ import annotations
 
 import struct
+from collections.abc import Iterator
 from typing import Any
 
 import numpy as np
@@ -543,32 +544,42 @@ def _lzw_decode(data: bytes, min_code_size: int, max_pixels: int) -> list[int]:
 # Tiled TIFF, planar configuration 2, and non-8-bit depths raise
 # NotImplementedError (declared codec boundaries, like the JPEG stubs).
 # Reference context: PIL accepts TIFF wherever images are opened
-# (metadata_extractor.py:148-207); the EXIF IFD walker in
-# operators/multimodal.py already parses the same IFD structure.
+# (metadata_extractor.py:148-207). ``ifd_entries`` is the one IFD walker:
+# the EXIF reader (operators/multimodal.py:parse_exif) stringifies what it
+# yields, the decoder below keeps raw number tuples.
 
-_TIFF_TYPE_SIZES = {1: 1, 2: 1, 3: 2, 4: 4, 5: 8, 6: 1, 7: 1, 8: 2, 9: 4, 10: 8, 11: 4, 12: 8}
+# TIFF field type → bytes per value (TIFF 6.0 §2): BYTE, ASCII, SHORT, LONG,
+# RATIONAL, SBYTE, UNDEFINED, SSHORT, SLONG, SRATIONAL, FLOAT, DOUBLE
+_TIFF_TYPE_BYTES = {1: 1, 2: 1, 3: 2, 4: 4, 5: 8, 6: 1, 7: 1, 8: 2, 9: 4, 10: 8, 11: 4, 12: 8}
+
+
+def ifd_entries(tiff: bytes, offset: int, bo: str) -> Iterator[tuple[int, int, int, bytes]]:
+    """Walk one IFD: (tag, type, count, value bytes) per 12-byte entry. A
+    value of up to 4 bytes sits in the entry itself, a longer one at the
+    offset the entry holds; an entry whose value runs past the stream is
+    skipped. Raises ValueError when the IFD header lies past the stream."""
+    if offset + 2 > len(tiff):
+        raise ValueError("truncated TIFF IFD")
+    (n_entries,) = struct.unpack_from(bo + "H", tiff, offset)
+    for k in range(n_entries):
+        base = offset + 2 + 12 * k
+        if base + 12 > len(tiff):
+            return
+        tag, typ, count = struct.unpack_from(bo + "HHI", tiff, base)
+        size = _TIFF_TYPE_BYTES.get(typ, 1) * count
+        if size <= 4:
+            voff = base + 8
+        else:
+            (voff,) = struct.unpack_from(bo + "I", tiff, base + 8)
+        if voff + size <= len(tiff):
+            yield tag, typ, count, tiff[voff : voff + size]
 
 
 def _tiff_ifd_values(payload: bytes, bo: str, offset: int) -> dict[int, tuple]:
     """IFD0 → {tag: tuple(values)} for SHORT/LONG/BYTE types (raw numbers,
     not the stringified EXIF view)."""
     out: dict[int, tuple] = {}
-    if offset + 2 > len(payload):
-        raise ValueError("truncated TIFF IFD")
-    (n_entries,) = struct.unpack_from(bo + "H", payload, offset)
-    for k in range(n_entries):
-        base = offset + 2 + 12 * k
-        if base + 12 > len(payload):
-            break
-        tag, typ, count = struct.unpack_from(bo + "HHI", payload, base)
-        size = _TIFF_TYPE_SIZES.get(typ, 1) * count
-        if size <= 4:
-            voff = base + 8
-        else:
-            (voff,) = struct.unpack_from(bo + "I", payload, base + 8)
-        if voff + size > len(payload):
-            continue
-        raw = payload[voff : voff + size]
+    for tag, typ, count, raw in ifd_entries(payload, offset, bo):
         if typ == 3:
             out[tag] = struct.unpack(bo + f"{count}H", raw)
         elif typ == 4:

@@ -21,6 +21,8 @@ from __future__ import annotations
 
 from typing import Any
 
+from .confidence import element_confidence
+
 COLUMN_GAP_THRESHOLD = 50.0
 CONFIDENCE_THRESHOLD = 0.7
 
@@ -90,12 +92,7 @@ def split_by_confidence(
     high: list[dict[str, Any]] = []
     low: list[dict[str, Any]] = []
     for elem in elements:
-        conf = elem.get("confidence", 1.0)
-        try:
-            conf = float(conf) if conf is not None else 1.0
-        except (TypeError, ValueError):
-            conf = 1.0
-        if conf >= threshold:
+        if element_confidence(elem) >= threshold:
             high.append(elem)
         else:
             elem["uncertain"] = True

@@ -17,6 +17,7 @@ import re
 from collections import Counter
 from typing import Any
 
+from .confidence import element_confidence
 from .textnorm import mask_numbers
 
 PAGE_NUMBER_RES = [
@@ -109,8 +110,10 @@ def is_artifact(content: str, confidence: float = 1.0) -> bool:
     return is_garbled(s)
 
 
-def _elem_y(elem: dict[str, Any]) -> float:
-    if "y" in elem and elem["y"] is not None:
+def element_y(elem: dict[str, Any]) -> float:
+    """An element's vertical position: ``y``, else ``bbox[1]``, else 0.0
+    (noise zoning and caption/footnote linking both place elements by it)."""
+    if elem.get("y") is not None:
         return elem["y"]
     bbox = elem.get("bbox")
     if bbox:
@@ -129,19 +132,18 @@ def detect_repeaters(pages: list[list[dict[str, Any]]]) -> dict[str, set[str]]:
         texts = [e for e in page if e.get("type") == "text"]
         if not texts:
             continue
-        by_y = sorted(texts, key=_elem_y)
-        min_y = _elem_y(by_y[0])
-        max_y = _elem_y(by_y[-1])
+        by_y = sorted(texts, key=element_y)
+        max_y = element_y(by_y[-1])
         page_height = max(max_y, 100.0)
 
         for elem in by_y[:3]:
-            if _elem_y(elem) < page_height * 0.33:
-                key = mask_numbers(elem.get("content", ""))
+            if element_y(elem) < page_height * 0.33:
+                key = mask_numbers(elem.get("content") or "")
                 if key and len(key) < 100:
                     top_counts[key] += 1
         for elem in by_y[-3:]:
-            if _elem_y(elem) > page_height * 0.67:
-                key = mask_numbers(elem.get("content", ""))
+            if element_y(elem) > page_height * 0.67:
+                key = mask_numbers(elem.get("content") or "")
                 if key and len(key) < 100:
                     bottom_counts[key] += 1
 
@@ -207,11 +209,8 @@ def tag_document_noise(
         out_page = []
         for elem in page:
             if elem.get("type") == "text":
-                content = elem.get("content", "").strip()
-                conf = elem.get("confidence", 1.0)
-                if conf is None:
-                    conf = 1.0
-                noise_type = classify_noise(content, conf, repeaters)
+                content = (elem.get("content") or "").strip()
+                noise_type = classify_noise(content, element_confidence(elem), repeaters)
                 if noise_type:
                     elem = dict(elem)
                     elem["noise_type"] = noise_type

@@ -12,6 +12,8 @@ from __future__ import annotations
 import re
 from typing import Any
 
+from .schema_enforce import PAGE_MARKER_RE
+
 HALLUCINATION_PATTERNS = (
     r"based on (the|this) (image|document|page)",
     r"as (shown|seen|visible) in",
@@ -43,7 +45,6 @@ VALID_ROLES = frozenset(
     }
 )
 
-_PAGE_MARKER_RE = re.compile(r"<!--\s*page:\s*(\d+)\s*-->")
 _ROLE_RE = re.compile(r"<!--\s*role:(\w+)")
 _TABLE_LINE_RE = re.compile(r"^\|", re.MULTILINE)
 _HEADING_LEVELS_RE = re.compile(r"^(#{1,6})\s+", re.MULTILINE)
@@ -73,7 +74,7 @@ def validate_markdown(text: str) -> dict[str, Any]:
             if "quality:" not in fm:
                 issues.append(_issue("warning", "schema", "Missing quality section in frontmatter"))
 
-    page_markers = _PAGE_MARKER_RE.findall(text)
+    page_markers = PAGE_MARKER_RE.findall(text)
     if not page_markers:
         issues.append(_issue("warning", "schema", "No page markers found"))
     else:
@@ -99,6 +100,9 @@ def validate_markdown(text: str) -> dict[str, Any]:
             content_start = text.find("\n", fm_end) + 1
     content_from = text.count("\n", 0, content_start) + 1
     non_empty = 0
+    # the quality gate's count: every line, frontmatter included, that is
+    # not blank and does not start with --- or <!--
+    content_lines = 0
     # whole-text pre-check: almost no document trips the phrase bank, so one
     # C-speed scan replaces a per-line search in the common case; the
     # literal pre-filter skips even that scan unless a candidate substring
@@ -112,8 +116,11 @@ def validate_markdown(text: str) -> dict[str, Any]:
     bracket_line = None
     for i, line in enumerate(text.split("\n"), 1):
         stripped_line = line.strip()
-        if i >= content_from and stripped_line and not stripped_line.startswith("<!--"):
-            non_empty += 1
+        if stripped_line:
+            if i >= content_from and not stripped_line.startswith("<!--"):
+                non_empty += 1
+            if not line.startswith(("---", "<!--")):
+                content_lines += 1
         if any_hallucination and _HALLUCINATION_ANY.search(line):
             line_issues.append(_issue("error", "hallucination", "Potential hallucination detected", i))
         if len(line) > 500 and not line.startswith("|"):
@@ -170,19 +177,20 @@ def validate_markdown(text: str) -> dict[str, Any]:
         "infos": infos,
         "hallucination_detected": hallucinations > 0,
         "hallucination_count": hallucinations,
+        "content_lines": content_lines,
         "issues": issues,
     }
 
 
 def quality_gate(
-    markdown_text: str,
     report: dict[str, Any],
     min_quality_score: float = 0.6,
     max_hallucinations: int = 0,
     max_errors: int = 2,
     min_content_lines: int = 5,
 ) -> dict[str, Any]:
-    """Threshold gate → pass/fail + suggested action + quality tier."""
+    """Threshold gate over a ``validate_markdown`` report → pass/fail +
+    suggested action + quality tier."""
     failures: list[str] = []
     if report["quality_score"] < min_quality_score:
         failures.append(f"Quality score {report['quality_score']:.2f} < {min_quality_score}")
@@ -190,9 +198,7 @@ def quality_gate(
         failures.append(f"{report['hallucination_count']} hallucinations detected")
     if report["errors"] > max_errors:
         failures.append(f"{report['errors']} validation errors")
-    content_lines = len(
-        [l for l in markdown_text.split("\n") if l.strip() and not l.startswith("---") and not l.startswith("<!--")]
-    )
+    content_lines = report["content_lines"]
     if content_lines < min_content_lines:
         failures.append(f"Only {content_lines} content lines (min: {min_content_lines})")
 

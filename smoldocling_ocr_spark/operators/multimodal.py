@@ -31,6 +31,8 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F, types as T
 
+from ..functions.imagedec import ifd_entries
+
 MEDIA_META_SCHEMA = T.StructType(
     [
         T.StructField("format", T.StringType(), True),
@@ -123,7 +125,6 @@ _EXIF_TAGS = {
     0xA003: "PixelYDimension",
 }
 _EXIF_IFD_POINTER = 0x8769
-_TYPE_SIZES = {1: 1, 2: 1, 3: 2, 4: 4, 5: 8, 7: 1, 9: 4, 10: 8}
 
 
 def _find_tiff(payload: bytes) -> bytes | None:
@@ -150,26 +151,11 @@ def _find_tiff(payload: bytes) -> bytes | None:
     return None
 
 
-def _read_ifd(tiff: bytes, offset: int, bo: str, out: dict[str, str]) -> int | None:
-    """Walk one IFD, stringifying known tags into ``out`` (reference parity:
-    every EXIF value is str()-ed); returns the Exif sub-IFD offset if seen."""
-    if offset + 2 > len(tiff):
-        return None
-    (n_entries,) = _struct.unpack_from(bo + "H", tiff, offset)
+def _exif_ifd(tiff: bytes, offset: int, bo: str, out: dict[str, str]) -> int | None:
+    """Stringify one IFD's known tags into ``out`` (reference parity: every
+    EXIF value is str()-ed); returns the Exif sub-IFD offset if seen."""
     sub_ifd = None
-    for k in range(n_entries):
-        base = offset + 2 + 12 * k
-        if base + 12 > len(tiff):
-            break
-        tag, typ, count = _struct.unpack_from(bo + "HHI", tiff, base)
-        size = _TYPE_SIZES.get(typ, 1) * count
-        if size <= 4:
-            voff = base + 8
-        else:
-            (voff,) = _struct.unpack_from(bo + "I", tiff, base + 8)
-        if voff + size > len(tiff):
-            continue
-        raw = tiff[voff : voff + size]
+    for tag, typ, count, raw in ifd_entries(tiff, offset, bo):
         if typ == 2:  # ASCII, NUL-terminated
             value: object = raw.split(b"\x00")[0].decode("ascii", errors="replace")
         elif typ == 3:
@@ -203,10 +189,10 @@ def parse_exif(payload: bytes) -> dict[str, str]:
     bo = "<" if tiff[:2] == b"II" else ">"
     (ifd0,) = _struct.unpack_from(bo + "I", tiff, 4)
     try:
-        sub = _read_ifd(tiff, ifd0, bo, out)
+        sub = _exif_ifd(tiff, ifd0, bo, out)
         if sub:
-            _read_ifd(tiff, sub, bo, out)
-    except (_struct.error, IndexError):
+            _exif_ifd(tiff, sub, bo, out)
+    except (_struct.error, IndexError, ValueError):
         pass
     return out
 

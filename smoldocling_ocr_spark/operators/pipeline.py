@@ -11,9 +11,9 @@ skew, and the optional resume anti-join.
 Scale design notes (100 TB / 10^12 docs):
   * the fused stage is embarrassingly parallel — wall clock scales with
     bytes/core; no stage barrier besides the input exchange
-  * oversized payloads are size-tiered (``payload_tier``) so a handful of
+  * payloads over 8 MB are split off (``split_by_tier``) so a handful of
     50 MB documents can be routed to a dedicated low-parallelism pass
-    instead of stalling a batch (``split_by_tier``)
+    instead of stalling a batch
   * checkpoint-resume is a ``left_anti`` join against the output table on
     url (the reference's md5-memo cache, re-expressed; app.py:242-249)
   * per-partition lineage (docs, bytes, parse failures) needs no second
@@ -63,6 +63,23 @@ EXTRACTED_SCHEMA = T.StructType(
 _OUT_COLS = [f.name for f in EXTRACTED_SCHEMA.fields]
 
 
+def extraction_row(
+    url: str, warc_ts: Any, payload: bytes | None, text: str | None, partition_id: int = -1
+) -> dict[str, Any]:
+    """One documents row → one ``EXTRACTED_SCHEMA`` row. A document the core
+    cannot extract becomes a ``parse_failed`` row, never a raise (north rule:
+    record parse failures in lineage). The fused pass and the SQL UDTF
+    (``plans/udtf.py``) both emit this row."""
+    try:
+        res = extract_document(url, warc_ts, bytes(payload), text)
+        res["parse_failed"] = False
+    except Exception:
+        res = {"url": url, "parse_failed": True}
+    res["partition_id"] = partition_id
+    res["payload_bytes"] = None if payload is None else len(payload)
+    return {col: res.get(col) for col in _OUT_COLS}
+
+
 def _extract_batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
     """Arrow-batched worker: one python process handles whole batches; all
     per-document work happens in the deterministic functions/ core."""
@@ -71,19 +88,10 @@ def _extract_batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
     ctx = TaskContext.get()
     pid = ctx.partitionId() if ctx else -1
     for pdf in batches:
-        rows: list[dict[str, Any]] = []
-        for url, warc_ts, payload, text in zip(
-            pdf["url"], pdf["warc_ts"], pdf["html"], pdf["text"]
-        ):
-            try:
-                res = extract_document(url, warc_ts, bytes(payload), text)
-                res["parse_failed"] = False
-            except Exception:
-                # north_rule: record parse failures in lineage, never raise
-                res = {"url": url, "parse_failed": True}
-            res["partition_id"] = pid
-            res["payload_bytes"] = len(payload)
-            rows.append({col: res.get(col) for col in _OUT_COLS})
+        rows = [
+            extraction_row(url, warc_ts, payload, text, pid)
+            for url, warc_ts, payload, text in zip(pdf["url"], pdf["warc_ts"], pdf["html"], pdf["text"])
+        ]
         yield pd.DataFrame(rows, columns=_OUT_COLS)
 
 
@@ -112,25 +120,12 @@ def with_salted_partitioning(docs: DataFrame, num_partitions: int | None = None)
     return docs.repartition(num_partitions, key)
 
 
-def with_payload_tier(docs: DataFrame) -> DataFrame:
-    """Size-tier the payload column: 0 ≤64KB, 1 ≤1MB, 2 ≤8MB, 3 oversized."""
-    size = F.length(F.col("html"))
-    tier = (
-        F.when(size <= 64 * 1024, F.lit(0))
-        .when(size <= 1024 * 1024, F.lit(1))
-        .when(size <= 8 * 1024 * 1024, F.lit(2))
-        .otherwise(F.lit(3))
-    )
-    return docs.withColumn("payload_tier", tier)
-
-
-def split_by_tier(docs: DataFrame, oversized_tier: int = 3) -> tuple[DataFrame, DataFrame]:
-    """(normal, oversized) — route giants to a dedicated low-parallelism pass."""
-    tiered = with_payload_tier(docs)
-    return (
-        tiered.filter(F.col("payload_tier") < oversized_tier).drop("payload_tier"),
-        tiered.filter(F.col("payload_tier") >= oversized_tier).drop("payload_tier"),
-    )
+def split_by_tier(docs: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """(normal, oversized) — route payloads over 8 MB to a dedicated
+    low-parallelism pass. A null payload has no size to vouch for it and
+    goes with the oversized side."""
+    oversized = F.coalesce(F.length(F.col("html")) > 8 * 1024 * 1024, F.lit(True))
+    return docs.filter(~oversized), docs.filter(oversized)
 
 
 def resume_filter(docs: DataFrame, extracted: DataFrame | None) -> DataFrame:

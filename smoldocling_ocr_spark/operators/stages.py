@@ -18,6 +18,7 @@ from collections.abc import Iterator
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F, types as T
 
+from ..functions.confidence import element_confidence
 from ..functions.extract import decode_payload
 from ..functions.layout import analyze_page
 
@@ -74,7 +75,7 @@ def parse_elements(docs: DataFrame) -> DataFrame:
                                 "y0": bbox[1] if bbox[1] is not None else e.get("y"),
                                 "x1": bbox[2],
                                 "y1": bbox[3],
-                                "confidence": e.get("confidence", 1.0),
+                                "confidence": element_confidence(e),
                                 "font_size": e.get("font_size"),
                             }
                         )

@@ -320,7 +320,8 @@ def register(query) -> None:
     )
     def size_tiers(spark: SparkSession, sf_dir: str) -> DataFrame:
         """Size-tiered bucketing of payloads (north_rule: oversized-payload
-        routing; operators/pipeline.py with_payload_tier is the binary twin)."""
+        routing; operators/pipeline.py split_by_tier is the binary > 8 MB
+        split)."""
         docs = read_table(spark, sf_dir, "documents")
         tier = (
             F.when(F.col("n_chars") <= 200, 0)

@@ -27,30 +27,19 @@ EXTRACT_DOC_SCHEMA = (
 )
 
 
+# the row fields the UDTF emits, in schema order
+_FIELDS = [column.split()[0] for column in EXTRACT_DOC_SCHEMA.split(", ")]
+
+
 @udtf(returnType=EXTRACT_DOC_SCHEMA)
 class ExtractDoc:
     """One documents-row → one extracted row (parse failures captured)."""
 
     def eval(self, url: str, warc_ts, html, text: str):  # noqa: ANN001
-        from ..functions.extract import extract_document
+        from ..operators.pipeline import extraction_row
 
-        try:
-            res = extract_document(url, warc_ts, bytes(html), text)
-            res["parse_failed"] = False
-        except Exception:
-            res = {"url": url, "parse_failed": True}
-        yield (
-            res.get("url"),
-            res.get("markdown"),
-            res.get("method"),
-            res.get("language"),
-            res.get("pages"),
-            res.get("elements"),
-            res.get("quality_score"),
-            res.get("confidence_score"),
-            res.get("gate_passed"),
-            res["parse_failed"],
-        )
+        row = extraction_row(url, warc_ts, html, text)
+        yield tuple(row[name] for name in _FIELDS)
 
 
 def register_extract_udtf(spark: SparkSession, name: str = "extract_doc") -> str:

@@ -17,6 +17,22 @@ from pyspark.sql import DataFrame, SparkSession
 # html blobs average tens of KB; keep Arrow batches ~8-32 MB
 ARROW_BATCH_ROWS = 256
 
+# SQL settings shared by the local session (get_spark) and the cluster
+# profile (cluster_conf)
+_SQL_CONF = {
+    "spark.sql.adaptive.enabled": "true",
+    "spark.sql.adaptive.coalescePartitions.enabled": "true",
+    "spark.sql.adaptive.skewJoin.enabled": "true",
+    # let AQE coalesce/re-plan below .cache() boundaries — by default a
+    # cached plan pins its partitioning and the whole cached subtree runs
+    # at full shuffle width even when 64 partitions hold a few MB
+    "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning": "true",
+    "spark.sql.files.maxPartitionBytes": "64m",
+    "spark.sql.execution.arrow.pyspark.enabled": "true",
+    "spark.sql.execution.arrow.maxRecordsPerBatch": str(ARROW_BATCH_ROWS),
+    "spark.sql.session.timeZone": "UTC",
+}
+
 
 def get_spark(
     app_name: str = "smoldocling_ocr_spark",
@@ -35,17 +51,7 @@ def get_spark(
         SparkSession.builder.master(master)
         .appName(app_name)
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        # let AQE coalesce/re-plan below .cache() boundaries — by default a
-        # cached plan pins its partitioning and the whole cached subtree runs
-        # at full shuffle width even when 64 partitions hold a few MB
-        .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.execution.arrow.maxRecordsPerBatch", str(ARROW_BATCH_ROWS))
-        .config("spark.sql.files.maxPartitionBytes", "64m")
+        .config(map=_SQL_CONF)
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "16g"))
         .config("spark.ui.enabled", "false")
     )
@@ -113,17 +119,10 @@ def cluster_conf(executors: int = 1000, executor_cores: int = 8) -> dict[str, st
         "spark.executor.memory": "24g",
         "spark.executor.memoryOverhead": "6g",  # Arrow + python workers
         "spark.sql.shuffle.partitions": str(2 * total_cores),
-        "spark.sql.adaptive.enabled": "true",
-        "spark.sql.adaptive.coalescePartitions.enabled": "true",
-        "spark.sql.adaptive.skewJoin.enabled": "true",
-        "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning": "true",
-        "spark.sql.files.maxPartitionBytes": "64m",
-        "spark.sql.execution.arrow.pyspark.enabled": "true",
-        "spark.sql.execution.arrow.maxRecordsPerBatch": str(ARROW_BATCH_ROWS),
+        **_SQL_CONF,
         "spark.speculation": "true",
         "spark.speculation.quantile": "0.95",
         "spark.serializer": "org.apache.spark.serializer.KryoSerializer",
         "spark.kryoserializer.buffer.max": "128m",
         "spark.dynamicAllocation.enabled": "false",
-        "spark.sql.session.timeZone": "UTC",
     }

@@ -26,6 +26,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
+from ..operators.pipeline import resume_filter
+
 DEFAULT_BUCKETS = 16
 
 
@@ -50,6 +52,4 @@ def colocated_resume_pending(spark: SparkSession, docs_table: str, extracted_tab
     """Checkpoint-resume pending set via a co-located left-anti join: when
     both tables are bucketed by url with the same bucket count, the plan has
     no Exchange — bucket i joins bucket i in place."""
-    docs = spark.table(docs_table)
-    done = spark.table(extracted_table).select("url")
-    return docs.join(done, on="url", how="left_anti")
+    return resume_filter(spark.table(docs_table), spark.table(extracted_table))

@@ -24,6 +24,7 @@ import json
 import os
 import time
 import uuid
+from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
@@ -66,36 +67,53 @@ class SnapshotTable:
 
     # -- write path ----------------------------------------------------------
 
-    def append(self, df: DataFrame, operation: str = "append") -> dict:
-        """Commit df as a new snapshot (parent = current)."""
+    def _commit(
+        self,
+        df: DataFrame,
+        operation: str,
+        account: Callable[[dict | None, list[str], int], tuple[list[str], int, int]],
+    ) -> dict:
+        """Write ``df`` as a new commit directory and publish its manifest
+        (parent = current) by atomic rename. ``account(parent, files,
+        row_count)`` returns the snapshot's (files, added_rows, total_rows)
+        from the parent manifest, the commit's files and their footer row
+        count; a raise there publishes nothing."""
         commit_id = uuid.uuid4().hex[:12]
         commit_dir = os.path.join(self.data_dir, f"commit-{commit_id}")
         df.write.mode("error").parquet(commit_dir)
-
-        files = sorted(
+        added = sorted(
             os.path.join(commit_dir, fn)
             for fn in os.listdir(commit_dir)
             if fn.endswith(".parquet")
         )
-        row_count = _footer_row_count(commit_dir)
-
         parent = self.current_snapshot()
+        files, added_rows, total_rows = account(parent, added, _footer_row_count(commit_dir))
         manifest = {
             "snapshot_id": commit_id,
             "parent_id": parent["snapshot_id"] if parent else None,
             "sequence": (parent["sequence"] + 1) if parent else 1,
             "operation": operation,
             "timestamp_ms": int(time.time() * 1000),
-            "files": (parent["files"] if parent else []) + files,
-            "added_files": files,
-            "added_rows": row_count,
-            "total_rows": (parent["total_rows"] if parent else 0) + row_count,
+            "files": files,
+            "added_files": added,
+            "added_rows": added_rows,
+            "total_rows": total_rows,
         }
         tmp = os.path.join(self.snap_dir, f".{commit_id}.json.tmp")
         with open(tmp, "w") as f:
             json.dump(manifest, f)
         os.replace(tmp, os.path.join(self.snap_dir, f"{manifest['sequence']:012d}-{commit_id}.json"))
         return manifest
+
+    def append(self, df: DataFrame, operation: str = "append") -> dict:
+        """Commit df as a new snapshot (parent = current)."""
+
+        def account(parent: dict | None, added: list[str], rows: int) -> tuple[list[str], int, int]:
+            if parent is None:
+                return added, rows, rows
+            return parent["files"] + added, rows, parent["total_rows"] + rows
+
+        return self._commit(df, operation, account)
 
     def merge(self, df: DataFrame, key: str = "url") -> dict:
         """MERGE INTO emulation (idempotent upsert by key): the new snapshot
@@ -127,35 +145,11 @@ class SnapshotTable:
         current = self.read(spark)
         merged = df if current is None else current.join(df.select(key), on=key, how="left_anti").unionByName(df)
 
-        commit_id = uuid.uuid4().hex[:12]
-        commit_dir = os.path.join(self.data_dir, f"commit-{commit_id}")
-        merged.write.mode("error").parquet(commit_dir)
-        files = sorted(
-            os.path.join(commit_dir, fn)
-            for fn in os.listdir(commit_dir)
-            if fn.endswith(".parquet")
-        )
-        row_count = _footer_row_count(commit_dir)
-        parent = self.current_snapshot()
-        manifest = {
-            "snapshot_id": commit_id,
-            "parent_id": parent["snapshot_id"] if parent else None,
-            "sequence": (parent["sequence"] + 1) if parent else 1,
-            "operation": "merge",
-            "timestamp_ms": int(time.time() * 1000),
-            # copy-on-write: this snapshot's files REPLACE the parent's
-            "files": files,
-            "added_files": files,
-            # the upsert delta (source rows), not the rewritten snapshot
-            # size — history() row accounting sums to the true ingest volume
-            "added_rows": source_rows,
-            "total_rows": row_count,
-        }
-        tmp = os.path.join(self.snap_dir, f".{commit_id}.json.tmp")
-        with open(tmp, "w") as f:
-            json.dump(manifest, f)
-        os.replace(tmp, os.path.join(self.snap_dir, f"{manifest['sequence']:012d}-{commit_id}.json"))
-        return manifest
+        # copy-on-write: this snapshot's files REPLACE the parent's; its
+        # added_rows is the upsert delta (source rows), not the rewritten
+        # snapshot size — history() row accounting sums to the true ingest
+        # volume
+        return self._commit(merged, "merge", lambda parent, added, rows: (added, source_rows, rows))
 
     # -- read path -----------------------------------------------------------
 
@@ -198,37 +192,12 @@ class SnapshotTable:
             return None
         compacted = current.repartition(target_partitions)
 
-        commit_id = uuid.uuid4().hex[:12]
-        commit_dir = os.path.join(self.data_dir, f"commit-{commit_id}")
-        compacted.write.mode("error").parquet(commit_dir)
-        files = sorted(
-            os.path.join(commit_dir, fn)
-            for fn in os.listdir(commit_dir)
-            if fn.endswith(".parquet")
-        )
-        row_count = _footer_row_count(commit_dir)
-        parent = self.current_snapshot()
-        assert parent is not None
-        if row_count != parent["total_rows"]:
-            raise RuntimeError(
-                f"compaction row drift: {row_count} != {parent['total_rows']}"
-            )
-        manifest = {
-            "snapshot_id": commit_id,
-            "parent_id": parent["snapshot_id"],
-            "sequence": parent["sequence"] + 1,
-            "operation": "compact",
-            "timestamp_ms": int(time.time() * 1000),
-            "files": files,
-            "added_files": files,
-            "added_rows": 0,  # maintenance: no logical rows added
-            "total_rows": row_count,
-        }
-        tmp = os.path.join(self.snap_dir, f".{commit_id}.json.tmp")
-        with open(tmp, "w") as f:
-            json.dump(manifest, f)
-        os.replace(tmp, os.path.join(self.snap_dir, f"{manifest['sequence']:012d}-{commit_id}.json"))
-        return manifest
+        def account(parent: dict, added: list[str], rows: int) -> tuple[list[str], int, int]:
+            if rows != parent["total_rows"]:
+                raise RuntimeError(f"compaction row drift: {rows} != {parent['total_rows']}")
+            return added, 0, rows  # maintenance: no logical rows added
+
+        return self._commit(compacted, "compact", account)
 
     def expire_snapshots(self, keep_last: int = 2) -> dict:
         """Iceberg ``expire_snapshots`` analog: drop all but the newest

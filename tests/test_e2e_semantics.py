@@ -147,3 +147,49 @@ def test_html_acceptance_gate_requires_chars_and_words():
     article = f"<html><body><p>{words}</p></body></html>"
     res = extract_document("https://x/article.html", ts, article.encode(), "")
     assert res["method"] == "html_dom"
+
+
+def _confidence_page(confidences: list, extra: list | None = None) -> bytes:
+    """One DOCLAYv1 page: four text lines carrying ``confidences``, then
+    ``extra`` elements as given."""
+    texts = (
+        "Quarterly review of the regional office",
+        "Revenue grew in every segment this year.",
+        "Costs were held flat against the plan.",
+        "Hiring resumes in the second quarter.",
+    )
+    elements = [
+        {"type": "text", "content": t, "bbox": [60, 100 + 60 * i, 560, 122 + 60 * i], "confidence": c, "font_size": None}
+        for i, (t, c) in enumerate(zip(texts, confidences, strict=True))
+    ]
+    return encode_layout({"meta": {}, "pages": [{"width": 612, "height": 792, "elements": elements + (extra or [])}]})
+
+
+MALFORMED_CONFIDENCES = ["0.9", "abc", True, None]
+
+
+def test_malformed_confidence_reads_as_float_or_one():
+    """Every stage reads confidence through one helper: a numeric string is
+    its float, an unparseable value, a bool's float and None read as 1.0.
+    The page extracts exactly like the page with those numbers (only the
+    payload-hash document id differs)."""
+    short = [{"type": "text", "content": "ok fine", "bbox": [60, 400, 140, 412], "font_size": None}]
+    ts = dt.datetime(2024, 3, 1)
+    got = extract_document("https://example.com/c", ts, _confidence_page(MALFORMED_CONFIDENCES, [dict(short[0], confidence="0.25")]), None)
+    want = extract_document("https://example.com/c", ts, _confidence_page([0.9, 1.0, 1.0, 1.0], [dict(short[0], confidence=0.25)]), None)
+    assert got["method"] == "layout_ocr"
+    assert got["markdown"].replace(got["document_id"], "") == want["markdown"].replace(want["document_id"], "")
+    # the 0.25 line is still an artifact under the < 0.3 noise rule
+    assert "<!-- role:artifact -->" in got["markdown"] and got["noise_tagged"] == want["noise_tagged"] == 1
+    assert {k: v for k, v in got.items() if k not in ("markdown", "document_id")} == {
+        k: v for k, v in want.items() if k not in ("markdown", "document_id")
+    }
+
+
+def test_null_content_element_extracts():
+    """A text element whose content is null is read as empty text, by noise
+    tagging as by every other stage."""
+    null = {"type": "text", "content": None, "bbox": [60, 500, 300, 520], "confidence": 0.9, "font_size": None}
+    res = extract_document("https://example.com/n", dt.datetime(2024, 3, 1), _confidence_page([0.9] * 4, [null]), None)
+    assert res["method"] == "layout_ocr" and res["elements"] == 6
+    assert "Hiring resumes in the second quarter." in res["markdown"]

@@ -51,14 +51,25 @@ def test_validation_clean_document():
 def test_quality_gate_actions():
     bad = "no frontmatter at all"
     report = validate.validate_markdown(bad)
-    gate = validate.quality_gate(bad, report)
+    gate = validate.quality_gate(report)
     assert not gate["passed"]
-    good_report = {"quality_score": 0.95, "hallucination_count": 0, "errors": 0}
     text = "---\n---\n" + "\n".join(f"line {i} of content." for i in range(8))
-    gate = validate.quality_gate(text, good_report)
+    lines = validate.validate_markdown(text)["content_lines"]
+    assert lines == 8
+    good_report = {"quality_score": 0.95, "hallucination_count": 0, "errors": 0, "content_lines": lines}
+    gate = validate.quality_gate(good_report)
     assert gate["passed"] and gate["suggested_action"] == "accept"
-    halluc_report = {"quality_score": 0.7, "hallucination_count": 2, "errors": 0}
-    assert validate.quality_gate(text, halluc_report)["suggested_action"] == "fallback_to_local_ocr"
+    halluc_report = {"quality_score": 0.7, "hallucination_count": 2, "errors": 0, "content_lines": lines}
+    assert validate.quality_gate(halluc_report)["suggested_action"] == "fallback_to_local_ocr"
+
+
+def test_gate_content_lines_rule():
+    """The gate's count covers every line, frontmatter included: a line
+    counts unless it is blank or starts (unstripped) with --- or <!--."""
+    text = "---\ntitle: x\n---\n\n<!-- page:1 -->\n  <!-- indented -->\n--- rule\nbody\n   \n"
+    assert validate.validate_markdown(text)["content_lines"] == 3
+    report = {"quality_score": 0.95, "hallucination_count": 0, "errors": 0, "content_lines": 4}
+    assert validate.quality_gate(report)["failures"] == ["Only 4 content lines (min: 5)"]
 
 
 def test_confidence_statistics():

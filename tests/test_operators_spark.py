@@ -25,6 +25,24 @@ def test_parse_elements_relation(spark, cc_docs):
     assert with_bbox.count() > 0
 
 
+def test_staged_path_reads_malformed_confidence(spark):
+    """parse_elements writes every confidence through the shared helper, so
+    its double column takes "0.9", "abc", True and None (as 0.9, 1.0, 1.0,
+    1.0) and the grouped layout pass completes over them."""
+    from smoldocling_ocr_spark.functions.layoutcodec import encode_layout
+    from smoldocling_ocr_spark.operators.stages import analyze_layout, parse_elements
+
+    elements = [
+        {"type": "text", "content": f"line {i} of the page", "bbox": [60, 100 + 40 * i, 400, 120 + 40 * i], "confidence": c}
+        for i, c in enumerate(["0.9", "abc", True, None])
+    ]
+    payload = encode_layout({"meta": {}, "pages": [{"width": 612, "height": 792, "elements": elements}]})
+    docs = spark.createDataFrame([Row(url="https://x/conf", html=bytearray(payload), text=None)], "url string, html binary, text string")
+    rows = analyze_layout(parse_elements(docs)).orderBy("elem_idx").collect()
+    assert [r["confidence"] for r in rows] == [0.9, 1.0, 1.0, 1.0]
+    assert not any(r["uncertain"] for r in rows)
+
+
 def test_analyze_layout_grouped_map(spark, cc_docs):
     from smoldocling_ocr_spark.operators.stages import analyze_layout, parse_elements
 
@@ -328,8 +346,37 @@ def test_oversized_payload_tier_routing(spark, cc_docs):
     assert normal.count() == 4
     big = oversized.collect()
     assert len(big) == 1 and big[0]["url"] == "https://giant.example.com/big"
-    out = extract_documents(oversized, num_partitions=2, salt=False).collect()
+    out = extract_documents(oversized, salt=False).collect()
     assert len(out) == 1 and out[0]["markdown"]
+
+
+def test_null_payload_routes_to_oversized_pass(spark):
+    """A null payload has no size to vouch for it: split_by_tier sends it to
+    the oversized side, and extracting it yields a parse_failed row."""
+    from pyspark.sql import types as T
+    from smoldocling_ocr_spark.operators.pipeline import extract_documents, split_by_tier
+
+    schema = T.StructType(
+        [
+            T.StructField("url", T.StringType()),
+            T.StructField("warc_ts", T.TimestampType()),
+            T.StructField("html", T.BinaryType()),
+            T.StructField("text", T.StringType()),
+            T.StructField("lang", T.StringType()),
+        ]
+    )
+    docs = spark.createDataFrame(
+        [
+            ("https://x/null", dt.datetime(2024, 1, 1), None, None, "en"),
+            ("https://x/small", dt.datetime(2024, 1, 1), bytearray(b"short text"), "short text", "en"),
+        ],
+        schema,
+    )
+    normal, oversized = split_by_tier(docs)
+    assert [r["url"] for r in normal.collect()] == ["https://x/small"]
+    assert [r["url"] for r in oversized.collect()] == ["https://x/null"]
+    out = extract_documents(oversized, salt=False).collect()
+    assert len(out) == 1 and out[0]["parse_failed"] is True and out[0]["payload_bytes"] is None
 
 
 def test_empty_input_yields_empty_output(spark, cc_docs):
@@ -605,6 +652,18 @@ def test_exif_ifd_parser(spark):
     assert meta["orientation"] == 6
     assert meta["datetime"] == "2023:12:31 23:59:58"
     assert meta["exif"]["Make"] == "Acme"
+
+
+def test_exif_entry_sized_by_tiff_type():
+    """An SSHORT (type 8) entry with count 3 holds 6 bytes, more than fit in
+    the entry, so its value is read from the offset the entry holds."""
+    from smoldocling_ocr_spark.operators.multimodal import parse_exif
+
+    value = struct.pack("<3h", -1, 2, -3)
+    ifd0 = struct.pack("<H", 1) + struct.pack("<HHII", 0x0112, 8, 3, 26) + struct.pack("<I", 0)
+    tiff = b"II*\x00" + struct.pack("<I", 8) + ifd0 + value
+    assert len(tiff) == 26 + len(value)
+    assert parse_exif(tiff) == {"Orientation": value.hex()}
 
 
 def test_markdown_to_docx_pure_stdlib():

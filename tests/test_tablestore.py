@@ -3,6 +3,9 @@ and exact checkpoint-resume against a snapshot."""
 
 from __future__ import annotations
 
+import os
+
+import pytest
 from pyspark.sql import functions as F
 
 
@@ -125,6 +128,24 @@ def test_compaction_preserves_content_and_time_travel(spark, tmp_path):
     # time travel to the pre-compaction snapshot unaffected
     old = t.read(spark, pre["snapshot_id"])
     assert old.count() == 40 and len(pre["files"]) >= 8
+
+
+def test_compaction_row_drift_publishes_nothing(spark, tmp_path, monkeypatch):
+    """compact() checks the rewritten row count against the parent before it
+    publishes: on drift it raises and the table keeps its current snapshot."""
+    from smoldocling_ocr_spark.sources import tablestore
+
+    t = tablestore.SnapshotTable(str(tmp_path / "tbl"))
+    snap = t.append(spark.range(6).selectExpr("cast(id as string) AS url"))
+    assert list(snap) == [
+        "snapshot_id", "parent_id", "sequence", "operation", "timestamp_ms",
+        "files", "added_files", "added_rows", "total_rows",
+    ]
+    monkeypatch.setattr(tablestore, "_footer_row_count", lambda commit_dir: 5)
+    with pytest.raises(RuntimeError, match="compaction row drift: 5 != 6"):
+        t.compact(spark, target_partitions=1)
+    assert [h["snapshot_id"] for h in t.history()] == [snap["snapshot_id"]]
+    assert not [f for f in os.listdir(t.snap_dir) if f.endswith(".tmp")]
 
 
 def test_expire_snapshots_gc(spark, tmp_path):
