@@ -24,29 +24,27 @@ def detect_figure_regions(
     page_width: float,
     page_height: float,
     text_boxes: list[tuple[float, float, float, float]],
-    grid_size: int = GRID,
-    min_gap_size: int = MIN_GAP,
 ) -> list[dict[str, Any]]:
     """Empty-region figure candidates from text-box coverage."""
     if not text_boxes:
         return []
-    grid_w = (int(page_width) + grid_size - 1) // grid_size
-    grid_h = (int(page_height) + grid_size - 1) // grid_size
+    grid_w = (int(page_width) + GRID - 1) // GRID
+    grid_h = (int(page_height) + GRID - 1) // GRID
     occupancy = np.zeros((grid_h, grid_w), dtype=bool)
 
     for x0, y0, x1, y1 in text_boxes:
-        gy0 = max(0, int(y0) // grid_size)
-        gy1 = min(grid_h, (int(y1) + grid_size - 1) // grid_size)
-        gx0 = max(0, int(x0) // grid_size)
-        gx1 = min(grid_w, (int(x1) + grid_size - 1) // grid_size)
+        gy0 = max(0, int(y0) // GRID)
+        gy1 = min(grid_h, (int(y1) + GRID - 1) // GRID)
+        gx0 = max(0, int(x0) // GRID)
+        gx1 = min(grid_w, (int(x1) + GRID - 1) // GRID)
         occupancy[gy0:gy1, gx0:gx1] = True
 
     regions: list[dict[str, Any]] = []
     for min_x, min_y, max_x, max_y in _empty_components(~occupancy):
-        bbox = (min_x * grid_size, min_y * grid_size, (max_x + 1) * grid_size, (max_y + 1) * grid_size)
+        bbox = (min_x * GRID, min_y * GRID, (max_x + 1) * GRID, (max_y + 1) * GRID)
         width = bbox[2] - bbox[0]
         height = bbox[3] - bbox[1]
-        if width >= min_gap_size and height >= min_gap_size:
+        if width >= MIN_GAP and height >= MIN_GAP:
             regions.append(
                 {
                     "bbox": bbox,

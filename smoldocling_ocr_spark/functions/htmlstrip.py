@@ -1,7 +1,7 @@
 """HTML main-content extraction (DOM-tree boilerplate strip).
 
 The north-star path for Common-Crawl-style pages: readability-style block
-classification over the DOM — tag pruning, per-block text-density and
+classification over the DOM — tag pruning, per-block length and
 link-density scoring — emitting the same element relation the layout path
 produces, so both payload kinds flow through one downstream pipeline
 (noise tagging → captions → annotation → schema → validation).
@@ -136,23 +136,6 @@ def _link_chars(node: _Node) -> int:
     return total
 
 
-def _tag_count(node: _Node) -> int:
-    return 1 + sum(_tag_count(c) for c in node.children)
-
-
-def block_metrics(node: _Node) -> dict[str, float]:
-    """Per-block scoring features: chars, link density, text density."""
-    text = _clean(_node_text(node))
-    chars = len(text)
-    links = _link_chars(node)
-    tags = _tag_count(node)
-    return {
-        "chars": chars,
-        "link_density": links / chars if chars else 1.0,
-        "text_density": chars / tags,
-    }
-
-
 def _table_to_markdown(node: _Node) -> str:
     rows: list[list[str]] = []
     def walk(n: _Node) -> None:
@@ -192,7 +175,6 @@ def extract_elements(html_text: str) -> list[dict[str, Any]]:
     builder.close()
 
     elements: list[dict[str, Any]] = []
-    title_seen = False
 
     def emit(kind: str, content: str, font_size: float | None = None) -> None:
         if not content:
@@ -208,28 +190,23 @@ def extract_elements(html_text: str) -> list[dict[str, Any]]:
         )
 
     def walk(node: _Node, in_list_index: int | None = None) -> None:
-        nonlocal title_seen
         if node.boiler:
             return
         tag = node.tag
         if tag in ("h1", "h2", "h3", "h4", "h5", "h6"):
             text = _clean(_node_text(node))
             if text:
-                level = int(tag[1])
-                emit("text", text, _HEADING_FONT[level])
-                if level == 1:
-                    title_seen = True
+                emit("text", text, _HEADING_FONT[int(tag[1])])
             return
         if tag == "p" or (tag == "div" and not any(c.tag in _BLOCK_TAGS for c in node.children)):
-            metrics = block_metrics(node)
+            # text is non-empty wherever the link density is computed
             text = _clean(_node_text(node))
-            if metrics["chars"] >= MIN_BLOCK_CHARS and metrics["link_density"] <= MAX_LINK_DENSITY:
+            if len(text) >= MIN_BLOCK_CHARS and _link_chars(node) / len(text) <= MAX_LINK_DENSITY:
                 emit("text", text, BODY_FONT)
             return
         if tag == "li":
             text = _clean(_node_text(node))
-            metrics = block_metrics(node)
-            if text and metrics["link_density"] <= MAX_LINK_DENSITY:
+            if text and _link_chars(node) / len(text) <= MAX_LINK_DENSITY:
                 marker = f"{in_list_index}. " if in_list_index is not None else "- "
                 emit("text", marker + text, BODY_FONT)
             return

@@ -30,15 +30,16 @@ _BULLET_PREFIXES = ("•", "-", "*", "◦", "○", "▪", "▫", "–", "—")
 _CAPTION_KEYWORDS = ("figure", "fig.", "table", "chart", "diagram", "image")
 
 
-def detect_columns(elements: list[dict[str, Any]], gap: float = COLUMN_GAP_THRESHOLD) -> list[dict[str, Any]]:
-    """Cluster distinct left edges; a jump > ``gap`` starts a new column."""
+def detect_columns(elements: list[dict[str, Any]]) -> list[dict[str, Any]]:
+    """Cluster distinct left edges; a jump > COLUMN_GAP_THRESHOLD starts a
+    new column."""
     xs = sorted({e["bbox"][0] for e in elements if e.get("bbox")})
     if not xs:
         return []
     cols: list[dict[str, Any]] = []
     cur = {"id": 0, "x_min": xs[0], "x_max": xs[0]}
     for x in xs[1:]:
-        if x - cur["x_max"] > gap:
+        if x - cur["x_max"] > COLUMN_GAP_THRESHOLD:
             cols.append(cur)
             cur = {"id": len(cols), "x_min": x, "x_max": x}
         else:
@@ -86,13 +87,14 @@ def xy_cut_order(elements: list[dict[str, Any]]) -> list[dict[str, Any]]:
 
 
 def split_by_confidence(
-    elements: list[dict[str, Any]], threshold: float = CONFIDENCE_THRESHOLD
+    elements: list[dict[str, Any]],
 ) -> tuple[list[dict[str, Any]], list[dict[str, Any]]]:
-    """Partition into (high, low); low elements get ``uncertain=True``."""
+    """Partition into (high, low) at CONFIDENCE_THRESHOLD; low elements get
+    ``uncertain=True``."""
     high: list[dict[str, Any]] = []
     low: list[dict[str, Any]] = []
     for elem in elements:
-        if element_confidence(elem) >= threshold:
+        if element_confidence(elem) >= CONFIDENCE_THRESHOLD:
             high.append(elem)
         else:
             elem["uncertain"] = True

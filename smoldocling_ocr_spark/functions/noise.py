@@ -102,12 +102,13 @@ def is_garbled(text: str) -> bool:
 
 
 def is_artifact(content: str, confidence: float = 1.0) -> bool:
-    s = content.strip()
-    if _ARTIFACT_ANY.match(s):
-        return True
-    if confidence < 0.3 and len(s) < 10:
-        return True
-    return is_garbled(s)
+    return _artifact(content.strip(), confidence)
+
+
+def _artifact(s: str, confidence: float) -> bool:
+    """The artifact rule over already-stripped text: an artifact pattern, a
+    short low-confidence fragment, or garble."""
+    return _ARTIFACT_ANY.match(s) is not None or (confidence < 0.3 and len(s) < 10) or is_garbled(s)
 
 
 def element_y(elem: dict[str, Any]) -> float:
@@ -160,25 +161,25 @@ def classify_noise(
     repeaters: dict[str, set[str]] | None,
 ) -> str | None:
     """Return the noise_type for a text element, or None if it is content.
+    ``content`` is already stripped.
 
     Predicate order matters (noise_filter.py:117-128): page_number >
     header/footer repeater > watermark > artifact.
     """
-    s = content.strip()
     # the _ANY banks are matched on the stripped text directly — the
-    # is_page_number/is_watermark/is_artifact wrappers would re-strip an
-    # already-stripped string once per predicate (r6; same matches)
-    if _PAGE_NUMBER_ANY.match(s):
+    # is_page_number/is_watermark/is_artifact wrappers would re-strip it
+    # once per predicate (r6; same matches)
+    if _PAGE_NUMBER_ANY.match(content):
         return "page_number"
     if repeaters is not None:
-        masked = mask_numbers(s)
+        masked = mask_numbers(content)
         if masked in repeaters["headers"]:
             return "header"
         if masked in repeaters["footers"]:
             return "footer"
-    if _WATERMARK_ANY.match(s):
+    if _WATERMARK_ANY.match(content):
         return "watermark"
-    if _ARTIFACT_ANY.match(s) or (confidence < 0.3 and len(s) < 10) or is_garbled(s):
+    if _artifact(content, confidence):
         return "artifact"
     return None
 

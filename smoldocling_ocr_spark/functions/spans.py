@@ -12,6 +12,8 @@ from __future__ import annotations
 from collections import Counter
 from typing import Any
 
+TABLE_OVERLAP = 0.6
+
 
 def body_font_mode(span_sizes: list[float]) -> float:
     """Most common rounded span size (ties break toward the larger size)."""
@@ -47,14 +49,13 @@ def overlap_fraction(block: tuple[float, float, float, float], rect: tuple[float
 def drop_blocks_in_tables(
     blocks: list[dict[str, Any]],
     table_rects: list[tuple[float, float, float, float]],
-    threshold: float = 0.6,
 ) -> list[dict[str, Any]]:
-    """Remove text blocks that mostly (>= threshold of area) sit inside a
+    """Remove text blocks that mostly (>= TABLE_OVERLAP of area) sit inside a
     table rect — the digital-path dedup of table text vs text blocks."""
     kept = []
     for block in blocks:
         bbox = block.get("bbox")
-        if bbox and any(overlap_fraction(tuple(bbox), rect) >= threshold for rect in table_rects):
+        if bbox and any(overlap_fraction(tuple(bbox), rect) >= TABLE_OVERLAP for rect in table_rects):
             continue
         kept.append(block)
     return kept

@@ -182,25 +182,25 @@ def validate_markdown(text: str) -> dict[str, Any]:
     }
 
 
-def quality_gate(
-    report: dict[str, Any],
-    min_quality_score: float = 0.6,
-    max_hallucinations: int = 0,
-    max_errors: int = 2,
-    min_content_lines: int = 5,
-) -> dict[str, Any]:
+GATE_MIN_QUALITY_SCORE = 0.6
+GATE_MAX_HALLUCINATIONS = 0
+GATE_MAX_ERRORS = 2
+GATE_MIN_CONTENT_LINES = 5
+
+
+def quality_gate(report: dict[str, Any]) -> dict[str, Any]:
     """Threshold gate over a ``validate_markdown`` report → pass/fail +
     suggested action + quality tier."""
     failures: list[str] = []
-    if report["quality_score"] < min_quality_score:
-        failures.append(f"Quality score {report['quality_score']:.2f} < {min_quality_score}")
-    if report["hallucination_count"] > max_hallucinations:
+    if report["quality_score"] < GATE_MIN_QUALITY_SCORE:
+        failures.append(f"Quality score {report['quality_score']:.2f} < {GATE_MIN_QUALITY_SCORE}")
+    if report["hallucination_count"] > GATE_MAX_HALLUCINATIONS:
         failures.append(f"{report['hallucination_count']} hallucinations detected")
-    if report["errors"] > max_errors:
+    if report["errors"] > GATE_MAX_ERRORS:
         failures.append(f"{report['errors']} validation errors")
     content_lines = report["content_lines"]
-    if content_lines < min_content_lines:
-        failures.append(f"Only {content_lines} content lines (min: {min_content_lines})")
+    if content_lines < GATE_MIN_CONTENT_LINES:
+        failures.append(f"Only {content_lines} content lines (min: {GATE_MIN_CONTENT_LINES})")
 
     if not failures:
         action = "accept"

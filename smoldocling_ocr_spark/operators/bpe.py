@@ -77,19 +77,27 @@ def bpe_fit(
     return merges
 
 
-def apply_merges(word: str, merges: list[tuple[str, str, int]]) -> list[str]:
-    """Tokenize one word with a learned merge table (merge-rank priority)."""
+def _ranks(merges: list[tuple[str, str, int]]) -> dict[tuple[str, str], int]:
+    return {(l, r): i for i, (l, r, _) in enumerate(merges)}
+
+
+def _segment(word: str, ranks: dict[tuple[str, str], int]) -> list[str]:
+    """Merge the lowest-ranked adjacent pair until none is in ``ranks``."""
     symbols = list(word) + [END]
-    ranks = {(l, r): i for i, (l, r, _) in enumerate(merges)}
     while True:
         best_rank, best_i = None, None
-        for i, (a, b) in enumerate(zip(symbols, symbols[1:])):
-            r = ranks.get((a, b))
+        for i, pair in enumerate(zip(symbols, symbols[1:])):
+            r = ranks.get(pair)
             if r is not None and (best_rank is None or r < best_rank):
                 best_rank, best_i = r, i
         if best_i is None:
             return symbols
         symbols[best_i : best_i + 2] = [symbols[best_i] + symbols[best_i + 1]]
+
+
+def apply_merges(word: str, merges: list[tuple[str, str, int]]) -> list[str]:
+    """Tokenize one word with a learned merge table (merge-rank priority)."""
+    return _segment(word, _ranks(merges))
 
 
 def register(query) -> None:
@@ -151,11 +159,9 @@ def bpe_encode_corpus(
 
     from pyspark.sql import types as T
 
-    # r6 (ADVICE r5): the merge-rank table is built ONCE here and shipped in
-    # the closure; the old form rebuilt the [(l, r, 0)] list and apply_merges
-    # rebuilt its rank dict on every memo miss. The inlined reduction below
-    # is apply_merges verbatim minus that per-call setup.
-    ranks = {(l, r): i for i, (l, r, _) in enumerate(merges)}
+    # the merge-rank table is built ONCE here and shipped in the closure,
+    # not once per memo miss as apply_merges would
+    ranks = _ranks(merges)
 
     def encode_batches(batches):
         import hashlib
@@ -165,19 +171,7 @@ def bpe_encode_corpus(
         def seg(word: str) -> list[str]:
             got = memo.get(word)
             if got is None:
-                symbols = list(word) + [END]
-                while True:
-                    best_rank, best_i = None, None
-                    for i, pair in enumerate(zip(symbols, symbols[1:])):
-                        r = ranks.get(pair)
-                        if r is not None and (best_rank is None or r < best_rank):
-                            best_rank, best_i = r, i
-                    if best_i is None:
-                        break
-                    symbols[best_i : best_i + 2] = [
-                        symbols[best_i] + symbols[best_i + 1]
-                    ]
-                got = memo[word] = symbols
+                got = memo[word] = _segment(word, ranks)
             return got
 
         for pdf in batches:

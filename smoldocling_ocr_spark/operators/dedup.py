@@ -405,18 +405,12 @@ SPAN_DEDUP_HOT_K = 65536  # bounded hot-span broadcast list (the Zipf head)
 SPAN_DEDUP_HOT_MIN = 8  # spans below this corpus count carry no skew risk
 
 
-def keyed_min_owner(
-    ex: DataFrame,
-    key: str,
-    owner_key: str = "owner_key",
-    hot_k: int = SPAN_DEDUP_HOT_K,
-    hot_min: int = SPAN_DEDUP_HOT_MIN,
-) -> DataFrame:
+def keyed_min_owner(ex: DataFrame, key: str, hot_min: int = SPAN_DEDUP_HOT_MIN) -> DataFrame:
     """``ex`` plus an ``owner`` column = min(owner_key) over rows sharing
     ``key``, with the hot-key broadcast split: AQE's OptimizeSkewedJoin
     structurally cannot split the join-back (the owner aggregate sits
     between the shuffle stage and the join), so the Zipf head is handled
-    explicitly — the top ``hot_k`` keys by count (count >= ``hot_min``)
+    explicitly — the top SPAN_DEDUP_HOT_K keys by count (count >= ``hot_min``)
     ride as a constant-size broadcast and never shuffle on ``key``; only
     the uniform cold tail takes the shuffled join. Shared by
     global_span_dedup and exact_substring_dedup.
@@ -428,14 +422,14 @@ def keyed_min_owner(
     store/reload costs more than re-running the cheap explode+groupBy), so
     the double evaluation is kept deliberately; see OPTIMIZATION_r06.md."""
     owner = ex.groupBy(key).agg(
-        F.min(owner_key).alias("owner"), F.count("*").alias("cnt")
+        F.min("owner_key").alias("owner"), F.count("*").alias("cnt")
     )
     hot = (
         owner.filter(F.col("cnt") >= hot_min)  # prune BEFORE the top-K: the
         # candidate set is tiny on any corpus, so TakeOrdered heaps over a
         # few thousand rows instead of every distinct key
         .orderBy(F.desc("cnt"), F.asc(key))
-        .limit(hot_k)
+        .limit(SPAN_DEDUP_HOT_K)
         .select(key, F.col("owner").alias("hot_owner"))
     )
     exb = ex.join(F.broadcast(hot), key, "left")
@@ -456,7 +450,6 @@ def span_dedup_frame(
     docs: DataFrame,
     span: int = 3,
     owner_enc: int = SPAN_DEDUP_OWNER_ENC,
-    hot_k: int = SPAN_DEDUP_HOT_K,
     hot_min: int = SPAN_DEDUP_HOT_MIN,
 ) -> DataFrame:
     """Spark side of global_span_dedup, parameterized so tests can exercise
@@ -470,7 +463,7 @@ def span_dedup_frame(
     origin (verified empirically — a 70%-hot corpus plans zero skew splits).
     So skew is handled explicitly with the classic hot-key broadcast split:
     the owner aggregation already produces per-span counts, the top
-    ``hot_k`` spans by count (a bounded TakeOrdered — constant-size
+    SPAN_DEDUP_HOT_K spans by count (a bounded TakeOrdered — constant-size
     broadcast at any corpus scale) with count >= ``hot_min`` become a
     broadcast map-side join, and only the uniform cold tail — every
     remaining span has < the 65537th-hottest span's count — takes the
@@ -505,7 +498,7 @@ def span_dedup_frame(
         ).cast("long"),
     ).otherwise(F.col("doc_id") * owner_enc + F.col("pos"))
     ex = ex.withColumn("owner_key", enc)
-    marked = keyed_min_owner(ex, key="span", hot_k=hot_k, hot_min=hot_min).withColumn(
+    marked = keyed_min_owner(ex, key="span", hot_min=hot_min).withColumn(
         "keep", F.col("owner_key") == F.col("owner")
     )
     kept_sorted = F.array_sort(
@@ -588,14 +581,11 @@ SUBSTR_L = 5  # minimum duplicated run length, in tokens (Lee et al. use 50 BPE
 # tokens at web scale; 5 keeps the check non-vacuous on the short test docs)
 
 
-def substring_dedup_frame(
-    docs: DataFrame,
-    L: int = SUBSTR_L,
-    owner_enc: int = SPAN_DEDUP_OWNER_ENC,
-) -> DataFrame:
+def substring_dedup_frame(docs: DataFrame) -> DataFrame:
     """Exact substring dedup (Lee et al. 2021, "Deduplicating Training Data
     Makes Language Models Better", ExactSubstr): remove every corpus-wide
-    repeated token run of length >= L from all but its first occurrence.
+    repeated token run of length >= L (SUBSTR_L) from all but its first
+    occurrence.
     The suffix-array formulation is re-expressed relationally: any repeated
     run of length >= L is a union of repeated L-grams, so SLIDING L-gram
     positions (stride 1 — unlike global_span_dedup's disjoint chunks) whose
@@ -608,6 +598,7 @@ def substring_dedup_frame(
     merge (partitioned by doc_id, bounded rows) -> doc-keyed join back for
     the token rebuild. No pairwise doc comparison anywhere."""
     toks = F.split(F.col("text"), " ")
+    L, owner_enc = SUBSTR_L, SPAN_DEDUP_OWNER_ENC
     ex = docs.select("doc_id", F.posexplode(word_grams(toks, L)).alias("pos", "gram"))
     enc = F.when(
         F.col("pos") >= owner_enc,

@@ -13,9 +13,7 @@ stay declared NotImplementedError stubs.
 Ops:
 * ``probe_media``      — container format + dimensions + EXIF
                          (orientation/datetime/map) from headers
-* ``decode_image``     — PNG/BMP/JPEG/GIF/TIFF/WebP-lossless → HxWx3 uint8;
-                         deterministic fake under ``fake=True`` for
-                         format-agnostic plumbing tests
+* ``decode_image``     — PNG/BMP/JPEG/GIF/TIFF/WebP-lossless → HxWx3 uint8
 * ``extract_features`` — mapInPandas over binary batches → fixed-width float
                          vector per row (deterministic fake: byte histogram)
 * ``frame_sample``     — UDTF-shaped: one media row → N frame rows (offsets
@@ -329,21 +327,14 @@ def _decode_bmp(payload: bytes) -> np.ndarray:
     return px[:, :, 2::-1].copy() if ch >= 3 else px  # BGR(A) → RGB
 
 
-def decode_image(payload: bytes, fake: bool = False) -> np.ndarray:
+def decode_image(payload: bytes) -> np.ndarray:
     """Decode to an HxWx3 uint8 array.
 
     REAL for PNG (pure-Python: stdlib zlib + scanline unfiltering) and
     uncompressed BMP; JPEG/GIF still need a codec (PIL via --py-files in a
-    full deployment) and raise NotImplementedError. ``fake=True`` returns a
-    deterministic byte-derived array with the sniffed dimensions for
-    plumbing tests regardless of format.
+    full deployment) and raise NotImplementedError.
     """
-    fmt, width, height = sniff_media(payload)
-    if fake:
-        w = min(width or 8, 32)
-        h = min(height or 8, 32)
-        seed = np.frombuffer(payload[:256].ljust(256, b"\0"), dtype=np.uint8).astype(np.float32)
-        return np.resize(seed, (h, w, 3))
+    fmt, _, _ = sniff_media(payload)
     if fmt == "png":
         return _decode_png(payload)
     if payload[:2] == b"BM":
@@ -426,8 +417,9 @@ def audio_features(payload: bytes, bands: int = 16) -> list[float]:
     return energies
 
 
-def probe_media(df: DataFrame, media_col: str = "media") -> DataFrame:
-    """binary column → media metadata struct (Arrow-batched, header-only)."""
+def probe_media(df: DataFrame) -> DataFrame:
+    """binary ``media`` column → media metadata struct (Arrow-batched,
+    header-only)."""
     meta_schema = MEDIA_META_SCHEMA
 
     out_cols = ["key"] + [f.name for f in meta_schema.fields]
@@ -435,7 +427,7 @@ def probe_media(df: DataFrame, media_col: str = "media") -> DataFrame:
     def probe(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             rows = []
-            for key, payload in zip(pdf["key"], pdf[media_col]):
+            for key, payload in zip(pdf["key"], pdf["media"]):
                 b = bytes(payload)
                 fmt, width, height = sniff_media(b)
                 exif = parse_exif(b)
@@ -455,11 +447,11 @@ def probe_media(df: DataFrame, media_col: str = "media") -> DataFrame:
             yield pd.DataFrame(rows, columns=out_cols)
 
     schema = T.StructType([T.StructField("key", T.StringType(), False)] + list(meta_schema.fields))
-    return df.select(F.col("key"), F.col(media_col)).mapInPandas(probe, schema=schema)
+    return df.select(F.col("key"), F.col("media")).mapInPandas(probe, schema=schema)
 
 
-def extract_features(df: DataFrame, media_col: str = "media") -> DataFrame:
-    """binary column → array<float> feature vector (deterministic fake:
+def extract_features(df: DataFrame) -> DataFrame:
+    """binary ``media`` column → array<float> feature vector (deterministic fake:
     64-bin normalized byte histogram; the Arrow plumbing is the real part)."""
 
     schema = T.StructType(
@@ -472,18 +464,18 @@ def extract_features(df: DataFrame, media_col: str = "media") -> DataFrame:
     def featurize(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             rows = []
-            for key, payload in zip(pdf["key"], pdf[media_col]):
+            for key, payload in zip(pdf["key"], pdf["media"]):
                 arr = np.frombuffer(bytes(payload), dtype=np.uint8)
                 hist, _ = np.histogram(arr, bins=FEATURE_DIM, range=(0, 256))
                 total = hist.sum() or 1
                 rows.append({"key": key, "features": (hist / total).astype(np.float32).tolist()})
             yield pd.DataFrame(rows, columns=["key", "features"])
 
-    return df.select(F.col("key"), F.col(media_col)).mapInPandas(featurize, schema=schema)
+    return df.select(F.col("key"), F.col("media")).mapInPandas(featurize, schema=schema)
 
 
-def frame_sample(df: DataFrame, media_col: str = "media", n_frames: int = 4) -> DataFrame:
-    """One media row → n frame rows with computed byte offsets (UDTF shape).
+def frame_sample(df: DataFrame, n_frames: int = 4) -> DataFrame:
+    """One ``media`` row → n frame rows with computed byte offsets (UDTF shape).
     Frame payloads are zero-stubs; offsets/indices are real."""
 
     schema = T.StructType(
@@ -498,7 +490,7 @@ def frame_sample(df: DataFrame, media_col: str = "media", n_frames: int = 4) -> 
     def sample(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             rows = []
-            for key, payload in zip(pdf["key"], pdf[media_col]):
+            for key, payload in zip(pdf["key"], pdf["media"]):
                 size = len(bytes(payload))
                 for idx in range(n_frames):
                     rows.append(
@@ -511,7 +503,7 @@ def frame_sample(df: DataFrame, media_col: str = "media", n_frames: int = 4) -> 
                     )
             yield pd.DataFrame(rows, columns=["key", "frame_idx", "byte_offset", "frame"])
 
-    return df.select(F.col("key"), F.col(media_col)).mapInPandas(sample, schema=schema)
+    return df.select(F.col("key"), F.col("media")).mapInPandas(sample, schema=schema)
 
 
 # --------------------------------------------------------------------------
@@ -596,7 +588,7 @@ _FIXTURE_ENCODERS = (synth_png, synth_bmp, synth_tiff, synth_webp)
 _FIXTURE_FORMATS = ("png", "bmp", "tiff", "webp")
 
 
-def media_fixture(spark, n: int = MEDIA_FIXTURE_ROWS) -> DataFrame:
+def media_fixture(spark) -> DataFrame:
     """Deterministic (key, media) table whose generation LAW is pure
     arithmetic on the key — so a SQL oracle can predict every decoded
     statistic without being able to decode: key i is a (4 + i%13) ×
@@ -604,14 +596,14 @@ def media_fixture(spark, n: int = MEDIA_FIXTURE_ROWS) -> DataFrame:
     TIFF / WebP-lossless by i%4. The bytes are REAL encodings decoded by
     the real decoders."""
     rows = []
-    for i in range(n):
+    for i in range(MEDIA_FIXTURE_ROWS):
         w, h, c = 4 + i % 13, 3 + i % 7, i % 251
         enc = _FIXTURE_ENCODERS[i % 4]
         rows.append((i, bytearray(enc(w, h, (c, c, c)))))
     return spark.createDataFrame(rows, "key int, media binary")
 
 
-def decoded_image_stats(df: DataFrame, media_col: str = "media") -> DataFrame:
+def decoded_image_stats(df: DataFrame) -> DataFrame:
     """Distributed real decode (mapInPandas, Arrow batches) → per-image
     (key, format, width, height, mean_pixel as exact int for constant-color
     fixtures). The 100 TB shape: decode is embarrassingly parallel over the
@@ -632,7 +624,7 @@ def decoded_image_stats(df: DataFrame, media_col: str = "media") -> DataFrame:
     def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             rows = []
-            for key, payload in zip(pdf["key"], pdf[media_col]):
+            for key, payload in zip(pdf["key"], pdf["media"]):
                 b = bytes(payload)
                 fmt, _, _ = sniff_media(b)
                 px = decode_image(b)
@@ -647,7 +639,7 @@ def decoded_image_stats(df: DataFrame, media_col: str = "media") -> DataFrame:
                 )
             yield pd.DataFrame(rows, columns=["key", "format", "width", "height", "mean_pixel"])
 
-    return df.select("key", media_col).mapInPandas(decode, schema=schema)
+    return df.select("key", "media").mapInPandas(decode, schema=schema)
 
 
 def register(query) -> None:

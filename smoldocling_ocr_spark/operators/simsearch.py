@@ -66,25 +66,16 @@ MAX_BANDS = 64
 TARGET_RECALL = 0.93
 
 
-def band_bits(
-    n_rows: int,
-    target_bucket: int = TARGET_BUCKET_ROWS,
-    min_bits: int = MIN_BAND_BITS,
-) -> int:
-    """Smallest b with 2^b buckets ≥ N / target_bucket (pure-integer math —
+def band_bits(n_rows: int, min_bits: int = MIN_BAND_BITS) -> int:
+    """Smallest b with 2^b buckets ≥ N / TARGET_BUCKET_ROWS (pure-integer math —
     the DuckDB oracle computes the identical value with a range() scan, so
     both engines always agree on the banding)."""
     import math
 
-    return max(min_bits, max(0, math.ceil(max(1, n_rows) / target_bucket) - 1).bit_length())
+    return max(min_bits, max(0, math.ceil(max(1, n_rows) / TARGET_BUCKET_ROWS) - 1).bit_length())
 
 
-def bands_for_bits(
-    bits: int,
-    threshold: float = NEARDUP_THRESHOLD,
-    target_recall: float = TARGET_RECALL,
-    max_bands: int = MAX_BANDS,
-) -> int:
+def bands_for_bits(bits: int, threshold: float = NEARDUP_THRESHOLD) -> int:
     """Band count holding TARGET_RECALL at `threshold` for a given band
     width: ceil(ln(1−R) / ln(1−p^bits)), p = 1 − acos(θ)/π. Evaluated in
     Python only — the oracle receives the resulting integers as a CASE
@@ -95,8 +86,8 @@ def bands_for_bits(
     p_band = p_bit**bits
     if p_band >= 1.0:
         return 1
-    n = math.ceil(math.log(1.0 - target_recall) / math.log(1.0 - p_band))
-    return max(1, min(max_bands, n))
+    n = math.ceil(math.log(1.0 - TARGET_RECALL) / math.log(1.0 - p_band))
+    return max(1, min(MAX_BANDS, n))
 
 
 N_BLOCKS = 8
@@ -122,10 +113,9 @@ def blocked_cosine_pairs(
     block row stays bounded regardless of N — a fixed B would grow block rows
     linearly toward the 2 GB row limit. The result is blocking-invariant.
 
-    Pass ``n_rows`` (e.g. from parquet footer metadata — see
-    :func:`parquet_row_count`) so sizing B costs zero Spark jobs; the
-    ``emb.count()`` fallback is a full extra scan per call and exists only
-    for ad-hoc callers that truly don't know N.
+    The caller gives ``n_blocks``, or ``n_rows`` (e.g. from parquet footer
+    metadata — see :func:`parquet_row_count`), so sizing B costs zero Spark
+    jobs.
     """
     import math
 
@@ -135,8 +125,6 @@ def blocked_cosine_pairs(
     from pyspark.sql import types as T
 
     if n_blocks is None:
-        if n_rows is None:
-            n_rows = emb.count()
         n_blocks = max(N_BLOCKS, math.ceil(n_rows / MAX_BLOCK_ROWS))
 
     blocks = (
@@ -272,15 +260,10 @@ def _band_key(b: int, bits: int):
     return F.concat(*[_plane_bit(b * bits + i) for i in range(bits)])
 
 
-def lsh_verified_pairs(
-    emb: DataFrame,
-    threshold: float = NEARDUP_THRESHOLD,
-    n_rows: int | None = None,
-    bits: int | None = None,
-    n_bands: int | None = None,
-) -> DataFrame:
+def lsh_verified_pairs(emb: DataFrame, n_rows: int) -> DataFrame:
     """The composed 100-TB near-dup shape: banded sign-LSH candidates →
-    exact cosine verify. Returns (vec_a, vec_b, sim) with sim rounded 5dp.
+    exact cosine verify at NEARDUP_THRESHOLD. Returns (vec_a, vec_b, sim)
+    with sim rounded 5dp.
 
     Sizing: band width grows with the corpus (:func:`band_bits` — pass
     ``n_rows`` from parquet footers / the table catalog so sizing costs zero
@@ -298,10 +281,8 @@ def lsh_verified_pairs(
     baseline; this is the sub-quadratic path that must front it at 10⁹
     vectors. Measured candidate recall is asserted in
     tests/test_simsearch.py and recorded in BENCH/BASELINE.md."""
-    if bits is None:
-        bits = band_bits(n_rows if n_rows is not None else emb.count())
-    if n_bands is None:
-        n_bands = bands_for_bits(bits, threshold)
+    bits = band_bits(n_rows)
+    n_bands = bands_for_bits(bits)
     # r6: the tiny single-row-group scan serializes banding AND (worse) the
     # exact verify of every candidate pair onto one task; spread the banding
     # input and pin the candidate exchange at full width (the verify rides
@@ -339,7 +320,7 @@ def lsh_verified_pairs(
     return (
         cand.join(ea, "vec_a")
         .join(eb, "vec_b")
-        .filter(sim > threshold)
+        .filter(sim > NEARDUP_THRESHOLD)
         .select("vec_a", "vec_b", F.round(sim, 5).alias("sim"))
     )
 
@@ -522,9 +503,9 @@ def kmeans_fit(
     return books[0], history
 
 
-def _queries(emb: DataFrame, n: int = N_QUERIES) -> DataFrame:
-    """(query_id, qe): the query vectors — the n lowest vec_ids."""
-    return emb.filter(F.col("vec_id") < n).select(
+def _queries(emb: DataFrame) -> DataFrame:
+    """(query_id, qe): the query vectors — the N_QUERIES lowest vec_ids."""
+    return emb.filter(F.col("vec_id") < N_QUERIES).select(
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("qe")
     )
 
@@ -557,16 +538,16 @@ def _probe(q: DataFrame, cent: DataFrame, key: str, nprobe: int, *keep: str) -> 
     )
 
 
-def _topk(cand: DataFrame, score, order, topk: int = TOPK) -> DataFrame:
-    """Per-query top-k window over candidate (query_id, vec_id, …) rows, the
-    query itself excluded: rank by ``order`` of ``score``, ties to the
+def _topk(cand: DataFrame, score, order) -> DataFrame:
+    """Per-query top-TOPK window over candidate (query_id, vec_id, …) rows,
+    the query itself excluded: rank by ``order`` of ``score``, ties to the
     lowest neighbor id."""
     w = W.partitionBy("query_id").orderBy(order("score"), F.asc("neighbor_id"))
     return (
         cand.filter(F.col("vec_id") != F.col("query_id"))
         .select("query_id", F.col("vec_id").alias("neighbor_id"), score.alias("score"))
         .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= topk)
+        .filter(F.col("rank") <= TOPK)
         .select("query_id", "neighbor_id", "rank")
         .orderBy("query_id", "rank")
     )
@@ -577,20 +558,14 @@ def _cosine_score():
     return F.round(_cosine(F.col("qe"), F.col("embedding")), 5)
 
 
-def ivf_kmeans_topk(
-    spark: SparkSession,
-    sf_dir: str,
-    nprobe: int = IVF_NPROBE,
-    k: int = IVF_N_LISTS,
-    iters: int = 4,
-) -> DataFrame:
+def ivf_kmeans_topk(spark: SparkSession, sf_dir: str, nprobe: int = IVF_NPROBE) -> DataFrame:
     """IVF over LEARNED k-means lists instead of the label column: fit the
     coarse quantizer (kmeans_fit), assign every vector its list with a
     shuffle-free expression, then run the same probe→list-scan→top-k plan
     as :func:`ivf_topk`. nprobe = k degenerates to brute force (invariant
     pinned in tests)."""
     emb = read_table(spark, sf_dir, "embeddings")
-    centroids, _ = kmeans_fit(emb, k=k, iters=iters)
+    centroids, _ = kmeans_fit(emb)
     cent = spark.createDataFrame(
         [(i, c) for i, c in enumerate(centroids)], ["list_id", "cvec"]
     )
@@ -934,11 +909,8 @@ def _adc(t: str = "double"):
 def pq_topk(
     spark: SparkSession,
     sf_dir: str,
-    topk: int = TOPK,
-    n_queries: int = N_QUERIES,
     m: int = PQ_M,
     k: int = PQ_K,
-    iters: int = 3,
     books: list[list[list[float]]] | None = None,
 ) -> DataFrame:
     """ADC top-k over PQ codes: queries keep full precision, corpus rows are
@@ -951,34 +923,27 @@ def pq_topk(
     a fresh Lloyd fit may land on a different local optimum)."""
     emb = read_table(spark, sf_dir, "embeddings")
     if books is None:
-        books = pq_fit(emb, m=m, k=k, iters=iters)
+        books = pq_fit(emb, m=m, k=k)
     # spread: the m×k×(DIM/m) nearest-code encode is the heavy per-row step
     encoded = pq_encode(spread(emb), books)
-    qdf = _adc_tables(spark, _queries(emb, n_queries).collect(), books)
-    return _topk(encoded.crossJoin(F.broadcast(qdf)), F.round(_adc(), 6), F.asc, topk)
+    qdf = _adc_tables(spark, _queries(emb).collect(), books)
+    return _topk(encoded.crossJoin(F.broadcast(qdf)), F.round(_adc(), 6), F.asc)
 
 
 PQ_QUANT = 64  # fixed-books twin: floor(x*64) int quantization, exact cross-engine
 
 
-def _fixed_books_int(m: int = PQ_M, k: int = PQ_K, d: int = DIM // PQ_M) -> list[list[list[int]]]:
-    """Deterministic INTEGER codebook from a pure-integer law — the same law
-    is embedded in the DuckDB oracle, so encode/ADC arithmetic is exact in
-    both engines (no float summation-order hazard)."""
+def _fixed_books_int() -> list[list[list[int]]]:
+    """Deterministic INTEGER PQ_M×PQ_K codebook from a pure-integer law — the
+    same law is embedded in the DuckDB oracle, so encode/ADC arithmetic is
+    exact in both engines (no float summation-order hazard)."""
     return [
-        [[((s * 31 + c * 17 + i * 7) % 129) - 64 for i in range(d)] for c in range(k)]
-        for s in range(m)
+        [[((s * 31 + c * 17 + i * 7) % 129) - 64 for i in range(DIM // PQ_M)] for c in range(PQ_K)]
+        for s in range(PQ_M)
     ]
 
 
-def pq_topk_fixed_books(
-    spark: SparkSession,
-    sf_dir: str,
-    topk: int = TOPK,
-    n_queries: int = N_QUERIES,
-    m: int = PQ_M,
-    k: int = PQ_K,
-) -> DataFrame:
+def pq_topk_fixed_books(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ADC search with an injected deterministic codebook over integer-
     quantized vectors — the query-time half of PQ (encode + table lookup +
     top-k), oracle-backed; the Lloyd fit stays in the rows-only twin.
@@ -986,7 +951,7 @@ def pq_topk_fixed_books(
     per-query ADC tables → per-query top-k window. All distances are exact
     BIGINT sums, so ranks are engine-independent without rounding."""
     emb = read_table(spark, sf_dir, "embeddings")
-    books = _fixed_books_int(m, k, DIM // m)
+    books = _fixed_books_int()
     qe = F.transform(
         F.col("embedding"), lambda x: F.floor(x.cast("double") * PQ_QUANT).cast("long")
     )
@@ -994,8 +959,8 @@ def pq_topk_fixed_books(
     # spread: integer encode (m×k×d squared-diff folds per row) off the
     # single-task scan; all-BIGINT arithmetic, so values are unaffected
     encoded = spread(quant).select("vec_id", _pq_codes_expr(books, "qe", "long").alias("codes"))
-    qdf = _adc_tables(spark, quant.filter(F.col("vec_id") < n_queries).collect(), books, "long")
-    return _topk(encoded.crossJoin(F.broadcast(qdf)), _adc("long"), F.asc, topk)
+    qdf = _adc_tables(spark, quant.filter(F.col("vec_id") < N_QUERIES).collect(), books, "long")
+    return _topk(encoded.crossJoin(F.broadcast(qdf)), _adc("long"), F.asc)
 
 
 def register_pq(query) -> None:
@@ -1059,10 +1024,6 @@ def ivf_pq_topk(
     spark: SparkSession,
     sf_dir: str,
     nprobe: int = IVF_NPROBE,
-    topk: int = TOPK,
-    n_queries: int = N_QUERIES,
-    m: int = PQ_M,
-    k: int = PQ_K,
     books: list[list[list[float]]] | None = None,
 ) -> DataFrame:
     """IVF-PQ — the composed billion-scale ANN shape (Jégou et al. 2011
@@ -1077,13 +1038,13 @@ def ivf_pq_topk(
     codebook this MUST equal exact search (invariant pinned in tests)."""
     emb = read_table(spark, sf_dir, "embeddings")
     if books is None:
-        books = pq_fit(emb, m=m, k=k)
+        books = pq_fit(emb)
     encoded = spread(emb).select("vec_id", "label", _pq_codes_expr(books).alias("codes"))
-    q = _queries(emb, n_queries)
+    q = _queries(emb)
     probes = _probe(q, _label_centroids(emb), "label", nprobe).join(
         _adc_tables(spark, q.collect(), books), "query_id"
     )
-    return _topk(encoded.join(F.broadcast(probes), on="label"), F.round(_adc(), 6), F.asc, topk)
+    return _topk(encoded.join(F.broadcast(probes), on="label"), F.round(_adc(), 6), F.asc)
 
 
 def register_ivf_pq(query) -> None:

@@ -104,6 +104,8 @@ def analyze_layout(elements: DataFrame) -> DataFrame:
             }
             if row.x0 is not None and not pd.isna(row.x0):
                 d["bbox"] = (row.x0, row.y0, row.x1, row.y1)
+            else:
+                d["y0"] = row.y0
             elems.append(d)
         result = analyze_page(elems)
         rows = []

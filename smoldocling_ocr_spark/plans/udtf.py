@@ -42,6 +42,7 @@ class ExtractDoc:
         yield tuple(row[name] for name in _FIELDS)
 
 
-def register_extract_udtf(spark: SparkSession, name: str = "extract_doc") -> str:
+def register_extract_udtf(spark: SparkSession) -> str:
+    name = "extract_doc"
     spark.udtf.register(name, ExtractDoc)
     return name

@@ -40,16 +40,21 @@ def get_spark(
     shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
+    """The session, on ``local[cores]`` when ``cores`` (or the
+    SPARK_GRAFT_CPUS variable) gives N. Otherwise the master is the
+    launcher's (``spark-submit --master``), and a plain ``python`` run with
+    none gets pyspark's own ``local[*]``."""
     if cores is None:
-        cores = os.environ.get("SPARK_GRAFT_CPUS", "*")
-    master = f"local[{cores}]"
-    n_cores = os.cpu_count() or 8 if cores == "*" else int(cores)
+        cores = os.environ.get("SPARK_GRAFT_CPUS")
     if shuffle_partitions is None:
+        n_cores = (os.cpu_count() or 8) if cores in (None, "*") else int(cores)
         shuffle_partitions = max(2 * n_cores, 8)
 
+    builder = SparkSession.builder
+    if cores is not None:
+        builder = builder.master(f"local[{cores}]")
     builder = (
-        SparkSession.builder.master(master)
-        .appName(app_name)
+        builder.appName(app_name)
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
         .config(map=_SQL_CONF)
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "16g"))

@@ -28,21 +28,16 @@ from pyspark.sql import DataFrame, SparkSession
 
 from ..operators.pipeline import resume_filter
 
-DEFAULT_BUCKETS = 16
+BUCKETS = 16
 
 
-def write_bucketed(
-    df: DataFrame,
-    table: str,
-    key: str = "url",
-    buckets: int = DEFAULT_BUCKETS,
-    mode: str = "overwrite",
-) -> None:
-    """Persist ``df`` as a catalog table bucketed (and sorted) by ``key``."""
+def write_bucketed(df: DataFrame, table: str) -> None:
+    """Persist ``df`` as a catalog table bucketed (and sorted) by ``url``,
+    replacing any table of that name."""
     (
-        df.write.mode(mode)
-        .bucketBy(buckets, key)
-        .sortBy(key)
+        df.write.mode("overwrite")
+        .bucketBy(BUCKETS, "url")
+        .sortBy("url")
         .format("parquet")
         .saveAsTable(table)
     )

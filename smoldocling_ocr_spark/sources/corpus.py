@@ -157,14 +157,14 @@ def _make_layout_doc(rng: random.Random, doc_idx: int, lang: str) -> tuple[bytes
         elements: list[dict[str, Any]] = []
 
         def add(kind: str, content: str, x0: float, y0: float, w: float, h: float,
-                conf: float = 0.95, font: float | None = None) -> None:
+                conf: float = 0.95) -> None:
             elements.append(
                 {
                     "type": kind,
                     "content": content,
                     "bbox": [x0, y0, x0 + w, y0 + h],
                     "confidence": round(conf, 2),
-                    "font_size": font,
+                    "font_size": None,
                 }
             )
             if kind == "text":

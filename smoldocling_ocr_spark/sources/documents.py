@@ -32,16 +32,16 @@ def corpus_size_for(sf_dir: str) -> int:
     return max(20, int(sf * _DOCS_PER_SF))
 
 
-def corpus_parquet_path(sf_dir: str, seed: int = SEED, n_docs: int | None = None) -> str:
+def corpus_parquet_path(sf_dir: str, n_docs: int | None = None) -> str:
     """Synthesize (once) and return the CC-style corpus parquet for sf_dir."""
     if n_docs is None:
         n_docs = corpus_size_for(sf_dir)
     cache_dir = os.environ.get("SMOLDOCLING_CORPUS_DIR", "/tmp/smoldocling_corpus")
     os.makedirs(cache_dir, exist_ok=True)
-    path = os.path.join(cache_dir, f"documents_cc_n{n_docs}_s{seed}.parquet")
+    path = os.path.join(cache_dir, f"documents_cc_n{n_docs}_s{SEED}.parquet")
     if not os.path.exists(path):
         tmp = path + ".tmp"
-        write_corpus_parquet(tmp, n_docs, seed)
+        write_corpus_parquet(tmp, n_docs, SEED)
         os.replace(tmp, path)
     return path
 
@@ -77,7 +77,7 @@ TABLE_NAMES = (
 )
 
 
-def register_views(spark: SparkSession, sf_dir: str, include_corpus: bool = True) -> list[str]:
+def register_views(spark: SparkSession, sf_dir: str) -> list[str]:
     """Expose every table as a temp view so the whole engine is usable from
     plain ``spark.sql(...)`` — the raw-SQL surface a reference user expects.
     ``cc_documents`` is the synthesized CC-style corpus for the sf tier."""
@@ -85,7 +85,6 @@ def register_views(spark: SparkSession, sf_dir: str, include_corpus: bool = True
     for name in TABLE_NAMES:
         read_table(spark, sf_dir, name).createOrReplaceTempView(name)
         names.append(name)
-    if include_corpus:
-        read_cc_documents(spark, sf_dir).createOrReplaceTempView("cc_documents")
-        names.append("cc_documents")
+    read_cc_documents(spark, sf_dir).createOrReplaceTempView("cc_documents")
+    names.append("cc_documents")
     return names

@@ -105,7 +105,7 @@ class SnapshotTable:
         os.replace(tmp, os.path.join(self.snap_dir, f"{manifest['sequence']:012d}-{commit_id}.json"))
         return manifest
 
-    def append(self, df: DataFrame, operation: str = "append") -> dict:
+    def append(self, df: DataFrame) -> dict:
         """Commit df as a new snapshot (parent = current)."""
 
         def account(parent: dict | None, added: list[str], rows: int) -> tuple[list[str], int, int]:
@@ -113,7 +113,7 @@ class SnapshotTable:
                 return added, rows, rows
             return parent["files"] + added, rows, parent["total_rows"] + rows
 
-        return self._commit(df, operation, account)
+        return self._commit(df, "append", account)
 
     def merge(self, df: DataFrame, key: str = "url") -> dict:
         """MERGE INTO emulation (idempotent upsert by key): the new snapshot

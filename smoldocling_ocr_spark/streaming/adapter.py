@@ -9,8 +9,6 @@ resume contract as batch).
 
 from __future__ import annotations
 
-from typing import Callable
-
 from pyspark.sql import DataFrame
 from pyspark.sql.streaming import StreamingQuery
 
@@ -27,17 +25,12 @@ def extract_stream(stream_docs: DataFrame) -> DataFrame:
 
 
 def start_extract_stream(
-    stream_docs: DataFrame,
-    output_path: str,
-    checkpoint_path: str,
-    batch_hook: Callable[[DataFrame, int], None] | None = None,
+    stream_docs: DataFrame, output_path: str, checkpoint_path: str
 ) -> StreamingQuery:
     """Start the extraction stream writing parquet per microbatch."""
 
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
         batch_df.write.mode("append").parquet(output_path)
-        if batch_hook is not None:
-            batch_hook(batch_df, batch_id)
 
     return (
         extract_stream(stream_docs)

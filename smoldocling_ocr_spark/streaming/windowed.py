@@ -15,33 +15,28 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
-DEFAULT_WINDOW = "10 minutes"
-DEFAULT_WATERMARK = "20 minutes"
+WINDOW = "10 minutes"
+WATERMARK = "20 minutes"
 
 
-def windowed_event_counts(
-    events: DataFrame,
-    ts_col: str = "ts",
-    key_col: str = "event_type",
-    window: str = DEFAULT_WINDOW,
-    watermark: str = DEFAULT_WATERMARK,
-) -> DataFrame:
-    """Tumbling-window counts + value sums per key with late-data bound.
+def windowed_event_counts(events: DataFrame) -> DataFrame:
+    """Tumbling WINDOW counts + value sums per event_type over ``ts``, with
+    late data bounded by WATERMARK.
 
     Works identically on a batch or streaming relation (withWatermark is a
     no-op for batch), so the batch form doubles as the correctness oracle
     for the streaming run in tests.
     """
     # watermarks require TIMESTAMP (ltz); parquet sources often carry NTZ
-    events = events.withColumn(ts_col, F.col(ts_col).cast("timestamp"))
+    events = events.withColumn("ts", F.col("ts").cast("timestamp"))
     return (
-        events.withWatermark(ts_col, watermark)
-        .groupBy(F.window(F.col(ts_col), window).alias("win"), F.col(key_col))
+        events.withWatermark("ts", WATERMARK)
+        .groupBy(F.window(F.col("ts"), WINDOW).alias("win"), F.col("event_type"))
         .agg(F.count("*").alias("n"), F.round(F.sum("value"), 6).alias("value_sum"))
         .select(
             F.col("win.start").alias("window_start"),
             F.col("win.end").alias("window_end"),
-            key_col,
+            "event_type",
             "n",
             "value_sum",
         )

@@ -233,6 +233,34 @@ def test_spark_submit_pyfiles_cold(spark, cc_docs, tmp_path):
     assert got == want and len(got) == 8
 
 
+def test_spark_submit_master_is_honoured(tmp_path):
+    """With no ``cores`` and no SPARK_GRAFT_CPUS, get_spark leaves the
+    master to the launcher: ``spark-submit --master local[2]`` runs on
+    local[2], not on a local[*] the session forced over it."""
+    import pyspark
+
+    script = tmp_path / "probe.py"
+    script.write_text(
+        "from smoldocling_ocr_spark.session import get_spark\n"
+        "spark = get_spark()\n"
+        "print('MASTER', spark.sparkContext.master, spark.sparkContext.defaultParallelism)\n"
+        "spark.stop()\n"
+    )
+    env = {k: v for k, v in os.environ.items() if k != "SPARK_GRAFT_CPUS"}
+    env.update(PYTHONPATH=ROOT, PYSPARK_PYTHON=sys.executable)
+    submit = os.path.join(os.path.dirname(pyspark.__file__), "bin", "spark-submit")
+    proc = subprocess.run(
+        [submit, "--master", "local[2]", str(script)],
+        capture_output=True,
+        text=True,
+        timeout=300,
+        env=env,
+        cwd=str(tmp_path),
+    )
+    assert proc.returncode == 0, proc.stderr[-3000:]
+    assert "MASTER local[2] 2" in proc.stdout.splitlines()
+
+
 def _run_curate(args: list[str]) -> None:
     env = dict(os.environ, PYTHONPATH=ROOT)
     proc = subprocess.run(

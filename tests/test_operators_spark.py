@@ -43,6 +43,22 @@ def test_staged_path_reads_malformed_confidence(spark):
     assert not any(r["uncertain"] for r in rows)
 
 
+def test_analyze_layout_keeps_y0_without_bbox(spark):
+    """Elements without a bbox (text layer, HTML) carry only a y0 into the
+    grouped layout pass; it comes out unchanged, not None."""
+    from smoldocling_ocr_spark.operators.stages import analyze_layout, parse_elements
+
+    docs = spark.createDataFrame(
+        [Row(url="https://x/plain", html=bytearray(b""), text="First para.\n\nSecond para.\n\nThird para.")],
+        "url string, html binary, text string",
+    )
+    elements = parse_elements(docs)
+    parsed = {r["elem_idx"]: r["y0"] for r in elements.collect()}
+    analyzed = {r["elem_idx"]: (r["x0"], r["y0"]) for r in analyze_layout(elements).collect()}
+    assert len(parsed) == 3 and all(y is not None for y in parsed.values())
+    assert analyzed == {i: (None, y) for i, y in parsed.items()}
+
+
 def test_analyze_layout_grouped_map(spark, cc_docs):
     from smoldocling_ocr_spark.operators.stages import analyze_layout, parse_elements
 
@@ -115,7 +131,7 @@ def test_multimodal_probe_and_features(spark):
     assert offsets[0] == 0 and offsets[-1] > 0
 
 
-def test_decode_image_stub_and_fake():
+def test_decode_image_unsupported_raises():
     from smoldocling_ocr_spark.operators.multimodal import decode_image
 
     # truncated/markerless JPEG → decoder error, never a bogus array
@@ -128,8 +144,6 @@ def test_decode_image_stub_and_fake():
             b"\xff\xd8\xff\xca" + struct.pack(">H", 11)
             + struct.pack(">BHHB", 8, 8, 8, 1) + bytes([1, 0x11, 0])
         )
-    fake = decode_image(_png_bytes(8, 8), fake=True)
-    assert fake.shape == (8, 8, 3)
 
 
 def _encode_png(px, filters):

@@ -63,10 +63,10 @@ def test_lsh_verified_neardup_recall_and_reduction(spark, emb, capsys):
         (r.vec_a, r.vec_b)
         for r in blocked_cosine_pairs(emb, NEARDUP_THRESHOLD, n_blocks=8).collect()
     }
-    got = {(r.vec_a, r.vec_b) for r in lsh_verified_pairs(emb).collect()}
+    n = parquet_row_count(SF_DIR, "embeddings")
+    got = {(r.vec_a, r.vec_b) for r in lsh_verified_pairs(emb, n_rows=n).collect()}
     assert got <= exact  # exact verify ⇒ no false positives
     recall = len(got) / len(exact)
-    n = emb.count()
     print(
         f"lsh_verified_neardup: recall={recall:.3f} ({len(got)}/{len(exact)} pairs), "
         f"corpus={n} vectors"
