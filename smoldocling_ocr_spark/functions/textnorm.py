@@ -1,36 +1,32 @@
-"""Text normalization core (hyphen merge, markdown normalize, defragment).
+"""Text normalization core (hyphen merge, markdown normalize, OCR cleanup).
 
-Reference semantics: /root/reference/cleaner.py:5-13 (strict hyphen merge),
-noise_filter.py:302-310 (loose hyphen merge), cleaner.py:214-269
-(normalize_markdown 6-step chain), cleaner.py:179-211 (defragment),
-noise_filter.py:313-331 (clean_ocr_artifacts). Both hyphen-merge variants are
-deliberately preserved: the enhanced render path uses the loose variant
-(enhanced_pipeline.py:159), the legacy digital path the strict one
-(structure_engine.py:544).
+Reference semantics: noise_filter.py:302-310 (loose hyphen merge, the one
+the enhanced render path uses, enhanced_pipeline.py:159), cleaner.py:214-269
+(normalize_markdown 6-step chain), noise_filter.py:313-331
+(clean_ocr_artifacts). The reference's strict hyphen merge
+(cleaner.py:5-13), used only by its legacy digital path
+(structure_engine.py:544), has no caller here and is not kept.
 """
 
 from __future__ import annotations
 
 import re
 
-# strict: continuation must be lowercase letters (cleaner.py:12)
+# loose: any word chars on both sides (noise_filter.py:309).
 # Possessive quantifiers (3.11+) are semantically identical here — the char
-# after a greedy \w+/[a-zA-Z]+ run is never a word char, so backtracking the
-# group can never produce a match the possessive form misses — but they stop
-# the engine re-trying every prefix of every word in the document (measured
-# ~7% of the whole per-doc extraction cost on the loose variant).
-_HYPHEN_STRICT = re.compile(r"([a-zA-Z]++)-\s*\n\s*+([a-z]++)")
-# loose: any word chars on both sides (noise_filter.py:309)
+# after a greedy \w+ run is never a word char, so backtracking the group can
+# never produce a match the possessive form misses — but they stop the
+# engine re-trying every prefix of every word in the document (measured ~7%
+# of the whole per-doc extraction cost).
 _HYPHEN_LOOSE = re.compile(r"(\w++)-\s*\n\s*+(\w++)")
-# candidate prefilter for both variants: every match contains '-' + optional
-# spaces + newline. This pattern STARTS with the literal '-', so the regex
-# engine memchr-skips to each hyphen instead of attempting \w++ at every
-# position of the document (the \w-leading patterns admit no fast skip —
-# measured ~0.24 ms/doc of pure scan on hyphen-free bodies). Exact
-# semantics: when no candidate exists the sub is the identity, and when one
-# does the ORIGINAL pattern does the whole job (including its chained
-# "a-\nb-\nc" → "ab-\nc" continuation behavior, which a lookaround rewrite
-# would change).
+# candidate prefilter: every match contains '-' + optional spaces + newline.
+# This pattern STARTS with the literal '-', so the regex engine memchr-skips
+# to each hyphen instead of attempting \w++ at every position of the
+# document (the \w-leading pattern admits no fast skip — measured
+# ~0.24 ms/doc of pure scan on hyphen-free bodies). Exact semantics: when no
+# candidate exists the sub is the identity, and when one does the ORIGINAL
+# pattern does the whole job (including its chained "a-\nb-\nc" → "ab-\nc"
+# continuation behavior, which a lookaround rewrite would change).
 _HYPHEN_CAND = re.compile(r"-\s*\n")
 
 _UNICODE_DASHES = {
@@ -51,13 +47,6 @@ _MULTI_SPACE = re.compile(r"[ \t]{2,}")
 _BLANK_RUNS = re.compile(r"\n\s*\n{2,}")
 
 _WORD_NUM = re.compile(r"\b\d+\b")
-
-
-def merge_hyphenated_words_strict(text: str) -> str:
-    """Join words split by an end-of-line hyphen; continuation must be lowercase."""
-    if _HYPHEN_CAND.search(text) is None:
-        return text
-    return _HYPHEN_STRICT.sub(r"\1\2", text)
 
 
 def merge_hyphenated_words_loose(text: str) -> str:
@@ -86,44 +75,12 @@ def normalize_markdown(text: str) -> str:
     return text.strip()
 
 
-def defragment_text(text: str) -> str:
-    """Merge lines not ending in sentence punctuation into one paragraph line.
-
-    Blank lines are kept as paragraph breaks (cleaner.py:179-211 semantics).
-    """
-    out: list[str] = []
-    pending = ""
-    for raw in text.split("\n"):
-        line = raw.strip()
-        if not line:
-            if pending:
-                out.append(pending)
-                pending = ""
-            out.append("")
-            continue
-        if not pending:
-            pending = line
-        elif pending.endswith((".", "?", "!", ":")):
-            out.append(pending)
-            pending = line
-        else:
-            pending += " " + line
-    if pending:
-        out.append(pending)
-    return "\n".join(out)
-
-
 def clean_ocr_artifacts(text: str) -> str:
     """Strip stray line-leading special chars, collapse spaces and blank runs."""
     text = _ARTIFACT_LINE_START.sub("", text)
     text = _MULTI_SPACE.sub(" ", text)
     text = _BLANK_RUNS.sub("\n\n", text)
     return text.strip()
-
-
-def normalize_for_repeater(text: str) -> str:
-    """Lowercase + whitespace-collapse normalization (cleaner.py:95)."""
-    return " ".join(text.lower().split())
 
 
 def mask_numbers(text: str) -> str:

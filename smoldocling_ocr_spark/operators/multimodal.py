@@ -365,58 +365,6 @@ def decode_image(payload: bytes) -> np.ndarray:
     )
 
 
-def decode_audio(payload: bytes) -> tuple[int, np.ndarray]:
-    """PCM WAV → (sample_rate, mono float64 in [-1, 1]). Pure stdlib struct:
-    RIFF chunk walk, 8/16/32-bit integer and 32-bit float PCM; compressed
-    codecs raise NotImplementedError."""
-    if payload[:4] != b"RIFF" or payload[8:12] != b"WAVE":
-        raise ValueError("not a WAV")
-    i = 12
-    fmt = None
-    data = None
-    while i + 8 <= len(payload):
-        cid = payload[i : i + 4]
-        (size,) = _struct.unpack("<I", payload[i + 4 : i + 8])
-        body = payload[i + 8 : i + 8 + size]
-        if cid == b"fmt ":
-            fmt = _struct.unpack("<HHIIHH", body[:16])
-        elif cid == b"data":
-            data = body
-        i += 8 + size + (size & 1)
-    if fmt is None or data is None:
-        raise ValueError("WAV missing fmt/data chunks")
-    audio_format, channels, rate, _, _, bits = fmt
-    if audio_format == 1:  # integer PCM
-        if bits == 8:
-            samples = (np.frombuffer(data, dtype=np.uint8).astype(np.float64) - 128.0) / 128.0
-        elif bits == 16:
-            samples = np.frombuffer(data, dtype="<i2").astype(np.float64) / 32768.0
-        elif bits == 32:
-            samples = np.frombuffer(data, dtype="<i4").astype(np.float64) / 2147483648.0
-        else:
-            raise NotImplementedError(f"{bits}-bit integer PCM")
-    elif audio_format == 3 and bits == 32:  # IEEE float
-        samples = np.frombuffer(data, dtype="<f4").astype(np.float64)
-    else:
-        raise NotImplementedError(f"WAV codec {audio_format} ({bits}-bit)")
-    if channels > 1:
-        samples = samples[: len(samples) // channels * channels]
-        samples = samples.reshape(-1, channels).mean(axis=1)
-    return rate, samples
-
-
-def audio_features(payload: bytes, bands: int = 16) -> list[float]:
-    """Log-energy in ``bands`` linear FFT bands — a real spectral feature
-    vector (numpy rfft), the audio analog of the image byte histogram."""
-    _, samples = decode_audio(payload)
-    if len(samples) == 0:
-        return [0.0] * bands
-    spec = np.abs(np.fft.rfft(samples)) ** 2
-    edges = np.linspace(0, len(spec), bands + 1).astype(int)
-    energies = [float(np.log1p(spec[a:b].sum())) for a, b in zip(edges[:-1], edges[1:])]
-    return energies
-
-
 def probe_media(df: DataFrame) -> DataFrame:
     """binary ``media`` column → media metadata struct (Arrow-batched,
     header-only)."""

@@ -64,12 +64,12 @@ _OUT_COLS = [f.name for f in EXTRACTED_SCHEMA.fields]
 
 
 def extraction_row(
-    url: str, warc_ts: Any, payload: bytes | None, text: str | None, partition_id: int = -1
+    url: str, warc_ts: Any, payload: bytes | None, text: str | None, partition_id: int
 ) -> dict[str, Any]:
     """One documents row → one ``EXTRACTED_SCHEMA`` row. A document the core
     cannot extract becomes a ``parse_failed`` row, never a raise (north rule:
-    record parse failures in lineage). The fused pass and the SQL UDTF
-    (``plans/udtf.py``) both emit this row."""
+    record parse failures in lineage). The fused pass emits it for every
+    document of a partition."""
     try:
         res = extract_document(url, warc_ts, bytes(payload), text)
         res["parse_failed"] = False

@@ -835,28 +835,26 @@ def _nearest_code(sub, book, t: str = "double"):
     return (F.array_position(dists, F.array_min(dists)) - 1).cast("int")
 
 
-def pq_fit(
-    emb: DataFrame, m: int = PQ_M, k: int = PQ_K, iters: int = 3
-) -> list[list[list[float]]]:
+def pq_fit(emb: DataFrame, iters: int = 3) -> list[list[list[float]]]:
     """Per-subspace Lloyd k-means, ALL subspaces in each single job:
-    :func:`_lloyd` with m subspaces over the (sub_id, subvector) rows of a
-    posexplode, assigned by L2 argmin against the codebook matrix literal,
+    :func:`_lloyd` with PQ_M subspaces over the (sub_id, subvector) rows of
+    a posexplode, assigned by L2 argmin against the codebook matrix literal,
     every (sub_id, code) centroid updated in one groupBy with map-side
-    combine. Per iteration: one job, m·k rows to the driver. Deterministic
-    seeds (first k vectors' slices) and first-argmin tie-break, so the
-    codebook is a pure corpus function."""
-    d = DIM // m
+    combine. Per iteration: one job, PQ_M·PQ_K rows to the driver.
+    Deterministic seeds (first PQ_K vectors' slices) and first-argmin
+    tie-break, so the codebook is a pure corpus function."""
+    d = DIM // PQ_M
 
     def assign(work, books):
         book = F.element_at(_matrix_expr(books), F.col("sub_id") + 1)
         return work.select("sub_id", _nearest_code(F.col("embedding"), book).alias("code"), "embedding")
 
-    slices = F.array(*[F.slice("embedding", s * d + 1, d) for s in range(m)])
+    slices = F.array(*[F.slice("embedding", s * d + 1, d) for s in range(PQ_M)])
     books, _ = _lloyd(
         emb,
         [F.posexplode(slices).alias("sub_id", "embedding")],
-        m=m,
-        k=k,
+        m=PQ_M,
+        k=PQ_K,
         iters=iters,
         assign=assign,
         keys=["sub_id", "code"],
@@ -907,11 +905,7 @@ def _adc(t: str = "double"):
 
 
 def pq_topk(
-    spark: SparkSession,
-    sf_dir: str,
-    m: int = PQ_M,
-    k: int = PQ_K,
-    books: list[list[list[float]]] | None = None,
+    spark: SparkSession, sf_dir: str, books: list[list[list[float]]] | None = None
 ) -> DataFrame:
     """ADC top-k over PQ codes: queries keep full precision, corpus rows are
     codes only. Per query the M×K distance table rides as ONE literal; the
@@ -923,7 +917,7 @@ def pq_topk(
     a fresh Lloyd fit may land on a different local optimum)."""
     emb = read_table(spark, sf_dir, "embeddings")
     if books is None:
-        books = pq_fit(emb, m=m, k=k)
+        books = pq_fit(emb)
     # spread: the m×k×(DIM/m) nearest-code encode is the heavy per-row step
     encoded = pq_encode(spread(emb), books)
     qdf = _adc_tables(spark, _queries(emb).collect(), books)

@@ -16,7 +16,7 @@ from __future__ import annotations
 from collections.abc import Iterator
 
 import pandas as pd
-from pyspark.sql import DataFrame, functions as F, types as T
+from pyspark.sql import DataFrame, types as T
 
 from ..functions.confidence import element_confidence
 from ..functions.extract import decode_payload
@@ -135,28 +135,3 @@ def analyze_layout(elements: DataFrame) -> DataFrame:
 
     return elements.groupBy("url", "page").applyInPandas(per_page, schema=ANALYZED_SCHEMA)
 
-
-def table_membership_filter(elements: DataFrame) -> DataFrame:
-    """Theta-join twin of the box-in-table predicate
-    (structure_engine.py:359-374): drop text elements whose bbox center lies
-    inside any table bbox on the same page (left_anti on the containment)."""
-    tables = elements.filter(F.col("type") == "table").select(
-        F.col("url").alias("t_url"),
-        F.col("page").alias("t_page"),
-        F.col("x0").alias("tx0"),
-        F.col("y0").alias("ty0"),
-        F.col("x1").alias("tx1"),
-        F.col("y1").alias("ty1"),
-    )
-    texts = elements.filter(F.col("type") == "text")
-    cx = (F.col("x0") + F.col("x1")) / 2
-    cy = (F.col("y0") + F.col("y1")) / 2
-    cond = (
-        (F.col("url") == F.col("t_url"))
-        & (F.col("page") == F.col("t_page"))
-        & (cx >= F.col("tx0"))
-        & (cx <= F.col("tx1"))
-        & (cy >= F.col("ty0"))
-        & (cy <= F.col("ty1"))
-    )
-    return texts.join(tables, cond, "left_anti")

@@ -3,7 +3,8 @@
 Local-mode defaults mirror what a 1000-executor deployment would set per
 executor: AQE on (runtime re-plan + skew handling), Arrow transfer on with a
 bounded records-per-batch (html payloads are large — SURVEY.md §4.1 item 3),
-shuffle partitions sized to cores not the 200 default.
+shuffle partitions sized to cores not the 200 default (a launcher's
+``--conf spark.sql.shuffle.partitions`` stands).
 """
 
 from __future__ import annotations
@@ -43,7 +44,9 @@ def get_spark(
     """The session, on ``local[cores]`` when ``cores`` (or the
     SPARK_GRAFT_CPUS variable) gives N. Otherwise the master is the
     launcher's (``spark-submit --master``), and a plain ``python`` run with
-    none gets pyspark's own ``local[*]``."""
+    none gets pyspark's own ``local[*]``. The shuffle partition count is
+    ``shuffle_partitions`` (default twice the cores, at least 8) unless the
+    launcher set ``spark.sql.shuffle.partitions``."""
     if cores is None:
         cores = os.environ.get("SPARK_GRAFT_CPUS")
     if shuffle_partitions is None:
@@ -55,7 +58,6 @@ def get_spark(
         builder = builder.master(f"local[{cores}]")
     builder = (
         builder.appName(app_name)
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
         .config(map=_SQL_CONF)
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "16g"))
         .config("spark.ui.enabled", "false")
@@ -63,6 +65,10 @@ def get_spark(
     for key, value in (extra_conf or {}).items():
         builder = builder.config(key, value)
     spark = builder.getOrCreate()
+    # set on the session, not the builder: a builder setting would override
+    # the count a launcher passed (spark-submit --conf), which must stand
+    if not spark.sparkContext.getConf().contains("spark.sql.shuffle.partitions"):
+        spark.conf.set("spark.sql.shuffle.partitions", str(shuffle_partitions))
     spark.sparkContext.setLogLevel("WARN")
     return spark
 

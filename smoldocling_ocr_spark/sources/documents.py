@@ -76,15 +76,3 @@ TABLE_NAMES = (
     "region nation customer supplier part orders lineitem events documents embeddings".split()
 )
 
-
-def register_views(spark: SparkSession, sf_dir: str) -> list[str]:
-    """Expose every table as a temp view so the whole engine is usable from
-    plain ``spark.sql(...)`` — the raw-SQL surface a reference user expects.
-    ``cc_documents`` is the synthesized CC-style corpus for the sf tier."""
-    names = []
-    for name in TABLE_NAMES:
-        read_table(spark, sf_dir, name).createOrReplaceTempView(name)
-        names.append(name)
-    read_cc_documents(spark, sf_dir).createOrReplaceTempView("cc_documents")
-    names.append("cc_documents")
-    return names

@@ -110,29 +110,6 @@ def test_crafted_document_semantics():
     assert 0.0 < res["confidence_score"] <= 1.0
 
 
-def test_span_heuristics():
-    from smoldocling_ocr_spark.functions.spans import (
-        body_font_mode,
-        classify_digital_block,
-        drop_blocks_in_tables,
-        overlap_fraction,
-    )
-
-    assert body_font_mode([12.1, 11.9, 12.0, 18.0]) == 12.0
-    assert classify_digital_block(20.0, 12.0) == "#"      # ratio 1.67
-    assert classify_digital_block(14.0, 12.0) == "##"     # ratio 1.17
-    assert classify_digital_block(12.0, 12.0) is None     # body
-    assert classify_digital_block(36.0, 12.0) is None     # > 2.5x → decorative
-
-    assert overlap_fraction((0, 0, 10, 10), (0, 0, 5, 10)) == 0.5
-    blocks = [
-        {"bbox": (0, 0, 10, 10), "content": "inside"},
-        {"bbox": (100, 100, 120, 120), "content": "outside"},
-    ]
-    kept = drop_blocks_in_tables(blocks, [(0, 0, 10, 7)])  # 70% overlap
-    assert [b["content"] for b in kept] == ["outside"]
-
-
 def test_html_acceptance_gate_requires_chars_and_words():
     """The digital-route acceptance gate mirrors the reference's conjunct
     (structure_engine.py:914-928): >100 chars AND >100 words. A long

@@ -362,56 +362,6 @@ def test_gif_via_decode_image():
     assert np.array_equal(got, px)
 
 
-# --- WAV audio ---------------------------------------------------------------
-
-
-def _encode_wav(samples: np.ndarray, rate: int = 8000, bits: int = 16, channels: int = 1) -> bytes:
-    if bits == 16:
-        raw = (np.clip(samples, -1, 1) * 32767).astype("<i2").tobytes()
-    elif bits == 8:
-        raw = ((np.clip(samples, -1, 1) * 127) + 128).astype(np.uint8).tobytes()
-    else:
-        raw = np.clip(samples, -1, 1).astype("<f4").tobytes()
-    fmt_code = 3 if bits == 33 else (1 if bits in (8, 16) else 3)
-    block = channels * (4 if fmt_code == 3 else bits // 8)
-    fmt = struct.pack("<HHIIHH", fmt_code, channels, rate, rate * block, block,
-                      32 if fmt_code == 3 else bits)
-    body = b"WAVE" + b"fmt " + struct.pack("<I", len(fmt)) + fmt
-    body += b"data" + struct.pack("<I", len(raw)) + raw
-    return b"RIFF" + struct.pack("<I", len(body)) + body
-
-
-def test_wav_decode_and_features():
-    from smoldocling_ocr_spark.operators.multimodal import audio_features, decode_audio
-
-    t = np.arange(8000) / 8000.0
-    tone = 0.5 * np.sin(2 * np.pi * 440.0 * t)
-    rate, got = decode_audio(_encode_wav(tone, bits=16))
-    assert rate == 8000 and len(got) == 8000
-    assert np.abs(got - tone).max() < 1e-3
-
-    # stereo downmix + 8-bit path
-    stereo = np.stack([tone, -tone], axis=1).reshape(-1)
-    rate2, mono = decode_audio(_encode_wav(stereo, bits=16, channels=2))
-    assert np.abs(mono).max() < 1e-3  # L + R cancel
-
-    feats = audio_features(_encode_wav(tone), bands=16)
-    assert len(feats) == 16
-    # a 440 Hz tone at 8 kHz concentrates energy in the lowest band (0-250Hz
-    # per band over 0-4kHz)
-    assert feats.index(max(feats)) <= 1
-
-    import pytest as _pytest
-
-    with _pytest.raises(ValueError):
-        decode_audio(b"RIFFxxxxNOPE")
-
-
-# --- progressive JPEG --------------------------------------------------------
-# Independent in-test progressive encoder (ITU T.81 §G.1 / libjpeg
-# cjpeg-style): DC first + refinement, per-band AC first with EOB runs,
-# two AC successive-approximation refinement passes with correction bits.
-
 _PROG_AC_SYMBOLS = bytes(
     [(r << 4) for r in range(16)] + [(r << 4) | s for r in range(16) for s in range(1, 11)]
 )

@@ -233,24 +233,25 @@ def test_spark_submit_pyfiles_cold(spark, cc_docs, tmp_path):
     assert got == want and len(got) == 8
 
 
-def test_spark_submit_master_is_honoured(tmp_path):
-    """With no ``cores`` and no SPARK_GRAFT_CPUS, get_spark leaves the
-    master to the launcher: ``spark-submit --master local[2]`` runs on
-    local[2], not on a local[*] the session forced over it."""
+def _submit_probe(tmp_path, *submit_args: str) -> str:
+    """Run ``get_spark()`` under pyspark's bundled spark-submit with
+    SPARK_GRAFT_CPUS unset; return the ``MASTER master parallelism
+    shuffle_partitions`` line the session reports."""
     import pyspark
 
     script = tmp_path / "probe.py"
     script.write_text(
         "from smoldocling_ocr_spark.session import get_spark\n"
         "spark = get_spark()\n"
-        "print('MASTER', spark.sparkContext.master, spark.sparkContext.defaultParallelism)\n"
+        "print('MASTER', spark.sparkContext.master, spark.sparkContext.defaultParallelism,\n"
+        "      spark.conf.get('spark.sql.shuffle.partitions'))\n"
         "spark.stop()\n"
     )
     env = {k: v for k, v in os.environ.items() if k != "SPARK_GRAFT_CPUS"}
     env.update(PYTHONPATH=ROOT, PYSPARK_PYTHON=sys.executable)
     submit = os.path.join(os.path.dirname(pyspark.__file__), "bin", "spark-submit")
     proc = subprocess.run(
-        [submit, "--master", "local[2]", str(script)],
+        [submit, *submit_args, str(script)],
         capture_output=True,
         text=True,
         timeout=300,
@@ -258,7 +259,27 @@ def test_spark_submit_master_is_honoured(tmp_path):
         cwd=str(tmp_path),
     )
     assert proc.returncode == 0, proc.stderr[-3000:]
-    assert "MASTER local[2] 2" in proc.stdout.splitlines()
+    return next(line for line in proc.stdout.splitlines() if line.startswith("MASTER "))
+
+
+def test_spark_submit_master_is_honoured(tmp_path):
+    """With no ``cores`` and no SPARK_GRAFT_CPUS, get_spark leaves the
+    master to the launcher: ``spark-submit --master local[2]`` runs on
+    local[2], not on a local[*] the session forced over it. With no
+    ``--conf``, the shuffle count is get_spark's own default (twice the
+    host's cores, at least 8)."""
+    got = _submit_probe(tmp_path, "--master", "local[2]")
+    assert got == f"MASTER local[2] 2 {max(2 * (os.cpu_count() or 8), 8)}"
+
+
+def test_spark_submit_shuffle_partitions_are_honoured(tmp_path):
+    """A launcher's ``--conf spark.sql.shuffle.partitions`` (the cluster
+    profile's ``cluster_conf`` count) stands: get_spark does not override
+    it with its own default."""
+    got = _submit_probe(
+        tmp_path, "--master", "local[2]", "--conf", "spark.sql.shuffle.partitions=64"
+    )
+    assert got == "MASTER local[2] 2 64"
 
 
 def _run_curate(args: list[str]) -> None:

@@ -1,5 +1,5 @@
 """Spark operator tests: staged element pipeline, streaming adapter,
-multimodal plumbing, figure detection, export formats."""
+multimodal plumbing, figure detection, resume, lineage and payload tiers."""
 
 from __future__ import annotations
 
@@ -75,15 +75,6 @@ def test_analyze_layout_grouped_map(spark, cc_docs):
     for r in per_page.collect():
         assert r["lo"] == 1
         assert r["hi"] <= r["n"] + 1  # low-conf postfix may share rank N+1
-
-
-def test_table_membership_anti_join(spark, cc_docs):
-    from smoldocling_ocr_spark.operators.stages import parse_elements, table_membership_filter
-
-    elements = parse_elements(cc_docs.filter(F.col("url").contains("/layout/")))
-    texts = elements.filter(F.col("type") == "text")
-    kept = table_membership_filter(elements)
-    assert kept.count() <= texts.count()
 
 
 def test_streaming_foreachbatch(spark, cc_docs, tmp_path):
@@ -250,21 +241,6 @@ def test_occupancy_grid_figures():
     assert detect_figure_regions(800, 800, []) == []
 
 
-def test_export_formats():
-    from smoldocling_ocr_spark.functions.formats import count_stats, estimate_quality_score, markdown_to_html, markdown_to_txt
-
-    md = "## Title\n\nSome **bold** and `code`.\n\n| A | B |\n|---|---|\n| 1 | 2 |\n\n- item one\n"
-    txt = markdown_to_txt(md)
-    assert "Title" in txt and "#" not in txt and "**" not in txt
-    html = markdown_to_html(md)
-    assert "<h2>Title</h2>" in html
-    assert "<table>" in html and "<th>A</th>" in html and "<td>1</td>" in html
-    assert "<li>item one</li>" in html
-    words, chars = count_stats(md)
-    assert words > 0 and chars == len(md)
-    assert estimate_quality_score(md, "layout_ocr") == 50 + 20 + 10 + 10
-
-
 def test_resume_and_lineage(spark, cc_docs):
     from smoldocling_ocr_spark.operators.lineage import extraction_metrics
     from smoldocling_ocr_spark.operators.pipeline import extract_documents
@@ -400,78 +376,6 @@ def test_empty_input_yields_empty_output(spark, cc_docs):
     assert out.count() == 0
     # schema survives the empty path (Arrow empty-batch handling)
     assert "markdown" in out.columns and "parse_failed" in out.columns
-
-
-def test_streaming_windowed_watermark_agg(spark, tmp_path):
-    """Event-time tumbling window + watermark over a streamed events table;
-    the batch run of the same relation is the oracle (complete mode drains
-    all windows under availableNow)."""
-    from smoldocling_ocr_spark.streaming.windowed import windowed_event_counts
-
-    events = spark.read.parquet("/root/testdata/sf0.001/events.parquet")
-    src = str(tmp_path / "ev_src")
-    events.write.parquet(src)
-
-    stream = spark.readStream.schema(events.schema).parquet(src)
-    q = (
-        windowed_event_counts(stream)
-        .writeStream.format("memory")
-        .queryName("win_counts")
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-
-    got = {
-        (r["window_start"], r["event_type"]): (r["n"], r["value_sum"])
-        for r in spark.sql("SELECT * FROM win_counts").collect()
-    }
-    want = {
-        (r["window_start"], r["event_type"]): (r["n"], r["value_sum"])
-        for r in windowed_event_counts(events).collect()
-    }
-    assert got == want and len(got) > 1
-
-
-def test_streaming_stateful_first_seen_dedup(spark, cc_docs, tmp_path):
-    """applyInPandasWithState first-seen filter: duplicates split across two
-    microbatches (maxFilesPerTrigger=1) must dedup ACROSS batches via the
-    state store, not just within one batch."""
-    import datetime as dt
-    from pyspark.sql import functions as F
-    from smoldocling_ocr_spark.streaming.stateful import first_seen_filter
-
-    base = cc_docs.limit(4).cache()
-    src = str(tmp_path / "dup_src")
-    base.coalesce(1).write.parquet(src)  # batch 1: originals (one file)
-    # batch 2: re-crawls of the same urls, later warc_ts
-    base.withColumn(
-        "warc_ts", F.col("warc_ts") + F.expr("INTERVAL 1 DAY")
-    ).coalesce(1).write.mode("append").parquet(src)
-
-    stream = (
-        spark.readStream.schema(base.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-    )
-    q = (
-        first_seen_filter(stream)
-        .writeStream.format("memory")
-        .queryName("first_seen")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-
-    out = spark.sql("SELECT url, warc_ts FROM first_seen").collect()
-    assert len(out) == 4
-    firsts = {r["url"]: r["warc_ts"] for r in base.select("url", "warc_ts").collect()}
-    got = {r["url"]: r["warc_ts"] for r in out}
-    assert set(got) == set(firsts)
-    # every emitted row is the earliest crawl of its url
-    assert all(got[u] == min(firsts[u], firsts[u] + dt.timedelta(days=1)) for u in got)
 
 
 def test_extraction_lineage_run_pass_discriminators(spark, cc_docs):
@@ -680,52 +584,6 @@ def test_exif_entry_sized_by_tiff_type():
     assert parse_exif(tiff) == {"Orientation": value.hex()}
 
 
-def test_markdown_to_docx_pure_stdlib():
-    """DOCX export (reference app.py:167-183 line-based conversion) as a
-    pure-stdlib OOXML zip: headings 1-3, List Bullet, plain paragraphs,
-    blanks skipped; deterministic bytes."""
-    import io
-    import xml.etree.ElementTree as ET
-    import zipfile
-
-    from smoldocling_ocr_spark.functions.formats import markdown_to_docx
-
-    md = "# Title\n\nBody text.\n\n## Section\n\n- item one\n* item two\n\n### Sub\nplain"
-    data = markdown_to_docx(md)
-    zf = zipfile.ZipFile(io.BytesIO(data))
-    assert set(zf.namelist()) == {
-        "[Content_Types].xml", "_rels/.rels", "word/_rels/document.xml.rels",
-        "word/styles.xml", "word/document.xml",
-    }
-    W = "{http://schemas.openxmlformats.org/wordprocessingml/2006/main}"
-    root = ET.fromstring(zf.read("word/document.xml"))
-    got = []
-    for p in root.findall(f".//{W}p"):
-        style = p.find(f"{W}pPr/{W}pStyle")
-        text = "".join(t.text or "" for t in p.findall(f".//{W}t"))
-        got.append((style.get(f"{W}val") if style is not None else None, text))
-    assert got == [
-        ("Heading1", "Title"), (None, "Body text."), ("Heading2", "Section"),
-        ("ListBullet", "item one"), ("ListBullet", "item two"),
-        ("Heading3", "Sub"), (None, "plain"),
-    ]
-    assert markdown_to_docx(md) == data  # deterministic zip
-
-
-def test_register_views_sql_surface(spark):
-    """Raw spark.sql() over every registered table — the SQL entry point a
-    reference user expects alongside the DataFrame API."""
-    from smoldocling_ocr_spark.sources.documents import register_views
-
-    names = register_views(spark, "/root/testdata/sf0.001")
-    assert "documents" in names and "cc_documents" in names
-    row = spark.sql(
-        "SELECT count(*) AS docs, count(DISTINCT lang) AS langs FROM documents"
-    ).collect()[0]
-    assert row["docs"] > 0 and row["langs"] >= 1
-    assert spark.sql("SELECT count(*) AS n FROM cc_documents").collect()[0]["n"] == 60
-
-
 def test_cluster_conf_profile():
     from smoldocling_ocr_spark.session import cluster_conf
 
@@ -735,28 +593,6 @@ def test_cluster_conf_profile():
     assert conf["spark.speculation"] == "true"
     # every value must be a string (spark-submit --conf k=v form)
     assert all(isinstance(v, str) for v in conf.values())
-
-
-def test_extract_doc_udtf_sql_surface(spark, cc_docs):
-    """The extractor as a SQL lateral table function (Spark 4 Python UDTF):
-    markdown from plain SQL matches the mapInPandas pipeline byte-for-byte."""
-    from smoldocling_ocr_spark.operators.pipeline import extract_documents
-    from smoldocling_ocr_spark.plans.udtf import register_extract_udtf
-
-    register_extract_udtf(spark)
-    cc_docs.limit(6).createOrReplaceTempView("udtf_docs")
-    got = {
-        r["url"]: (r["markdown"], r["method"])
-        for r in spark.sql(
-            "SELECT e.* FROM udtf_docs AS t, "
-            "LATERAL extract_doc(t.url, t.warc_ts, t.html, t.text) AS e"
-        ).collect()
-    }
-    want = {
-        r["url"]: (r["markdown"], r["method"])
-        for r in extract_documents(cc_docs.limit(6), salt=False).collect()
-    }
-    assert got == want and len(got) == 6
 
 
 def test_streaming_restart_exactly_once(spark, cc_docs, tmp_path):

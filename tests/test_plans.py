@@ -219,37 +219,6 @@ def test_staged_layout_single_exchange_on_url_page(spark):
     assert "FlatMapGroupsInPandas" in plan or "FlatMapGroupsIn" in plan
 
 
-def test_bucketed_colocated_anti_join_no_shuffle(spark, tmp_path):
-    """Both sides bucketed by url with equal bucket counts → the resume
-    anti-join plans with ZERO Exchange (bucket i joins bucket i in place).
-    Broadcast is disabled so the test proves co-location, not small-table
-    broadcast — at 10^12 docs neither side broadcasts."""
-    from smoldocling_ocr_spark.sources.bucketed import (
-        colocated_resume_pending,
-        write_bucketed,
-    )
-    from smoldocling_ocr_spark.sources.documents import read_cc_documents
-
-    spark.sql(f"CREATE DATABASE IF NOT EXISTS bkt LOCATION '{tmp_path}/bkt'")
-    old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        docs = read_cc_documents(spark, SF_DIR)
-        write_bucketed(docs.select("url", "warc_ts", "text"), "bkt.docs_b")
-        write_bucketed(docs.select("url").limit(30), "bkt.extracted_b")
-        pending = colocated_resume_pending(spark, "bkt.docs_b", "bkt.extracted_b")
-        plan = _plan(pending)
-        assert plan.count(") Exchange") == 0, plan
-        assert "SortMergeJoin LeftAnti" in plan
-        assert pending.count() == docs.count() - 30
-        # un-bucketed control: the same join must shuffle both sides
-        control = docs.join(docs.select("url").limit(30), on="url", how="left_anti")
-        assert _plan(control).count(") Exchange") >= 2
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
-        spark.sql("DROP DATABASE IF EXISTS bkt CASCADE")
-
-
 def test_aqe_skew_join_splits_hot_domain(spark):
     """The hot-domain skew story is executable, not aspirational: with the
     skew thresholds scaled down to test-size data, AQE splits the hot

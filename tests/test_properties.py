@@ -35,16 +35,8 @@ def test_normalize_no_unicode_dashes_remain(s):
 
 @given(text_lines)
 @settings(max_examples=200, deadline=None)
-def test_defragment_idempotent(s):
-    once = textnorm.defragment_text(s)
-    assert textnorm.defragment_text(once) == once
-
-
-@given(text_lines)
-@settings(max_examples=200, deadline=None)
 def test_hyphen_merge_never_grows(s):
     assert len(textnorm.merge_hyphenated_words_loose(s)) <= len(s)
-    assert len(textnorm.merge_hyphenated_words_strict(s)) <= len(s)
 
 
 @given(st.lists(st.lists(st.text(alphabet=st.characters(codec="utf-8", exclude_characters="|\n\r"), max_size=12), min_size=1, max_size=5), min_size=2, max_size=8))

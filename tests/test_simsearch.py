@@ -246,7 +246,7 @@ def test_pq_adc_invariants(spark, capsys):
     toy_books_l = [[[float(v) for v in c] for c in book] for book in toy_books]
     got = {
         (r.query_id, r.rank): r.neighbor_id
-        for r in pq_topk(spark, tmp, m=PQ_M, k=4, books=toy_books_l).collect()
+        for r in pq_topk(spark, tmp, books=toy_books_l).collect()
     }
     vecs = {r.vec_id: np.array(r.embedding) for r in rows}
     for q in range(5):

@@ -4,13 +4,6 @@ test_list_normalization.py, test_hyphen_rendering.py)."""
 from smoldocling_ocr_spark.functions import textnorm
 
 
-def test_hyphen_merge_strict():
-    assert textnorm.merge_hyphenated_words_strict("This is a bro- \n ken sentence.") == "This is a broken sentence."
-    assert textnorm.merge_hyphenated_words_strict("No hyphen here.") == "No hyphen here."
-    # strict: uppercase continuation is NOT merged
-    assert textnorm.merge_hyphenated_words_strict("UPPER-\nCase") == "UPPER-\nCase"
-
-
 def test_hyphen_merge_loose():
     assert textnorm.merge_hyphenated_words_loose("docu-\nment") == "document"
     assert textnorm.merge_hyphenated_words_loose("ABC-\nDEF") == "ABCDEF"
@@ -46,18 +39,9 @@ def test_normalize_combined_unicode_dash_list():
     assert "−" not in out
 
 
-def test_defragment():
-    assert textnorm.defragment_text("This is a sentence\nthat was broken.") == "This is a sentence that was broken."
-    # colon terminates a line; unpunctuated list items merge (reference-documented behavior)
-    assert textnorm.defragment_text("List item:\n- one\n- two") == "List item:\n- one - two"
-    # blank lines preserved as paragraph breaks
-    assert textnorm.defragment_text("Para one.\n\nPara two.") == "Para one.\n\nPara two."
-
-
 def test_clean_ocr_artifacts():
     assert textnorm.clean_ocr_artifacts("|||--- hello   world") == "hello world"
 
 
 def test_repeater_normalization():
-    assert textnorm.normalize_for_repeater("  Page   FOUR  ") == "page four"
     assert textnorm.mask_numbers("Page 3 of 10") == "Page [NUM] of [NUM]"
