@@ -83,14 +83,6 @@ HEADER_FOOTER_THRESHOLD = 0.5
 MIN_PAGES_FOR_DETECTION = 3
 
 
-def is_page_number(content: str) -> bool:
-    return _PAGE_NUMBER_ANY.match(content.strip()) is not None
-
-
-def is_watermark(content: str) -> bool:
-    return _WATERMARK_ANY.match(content.strip()) is not None
-
-
 def is_garbled(text: str) -> bool:
     """High special-char ratio, 5+ consecutive consonants, or char repeated 5+."""
     if len(text) < 3:
@@ -99,10 +91,6 @@ def is_garbled(text: str) -> bool:
     if specials / len(text) > 0.5:
         return True
     return _GARBLE_RUN_ANY.search(text) is not None
-
-
-def is_artifact(content: str, confidence: float = 1.0) -> bool:
-    return _artifact(content.strip(), confidence)
 
 
 def _artifact(s: str, confidence: float) -> bool:
@@ -166,9 +154,6 @@ def classify_noise(
     Predicate order matters (noise_filter.py:117-128): page_number >
     header/footer repeater > watermark > artifact.
     """
-    # the _ANY banks are matched on the stripped text directly — the
-    # is_page_number/is_watermark/is_artifact wrappers would re-strip it
-    # once per predicate (r6; same matches)
     if _PAGE_NUMBER_ANY.match(content):
         return "page_number"
     if repeaters is not None:

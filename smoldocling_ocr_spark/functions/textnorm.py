@@ -1,11 +1,12 @@
-"""Text normalization core (hyphen merge, markdown normalize, OCR cleanup).
+"""Text normalization core (hyphen merge, markdown normalize, repeater keys).
 
 Reference semantics: noise_filter.py:302-310 (loose hyphen merge, the one
 the enhanced render path uses, enhanced_pipeline.py:159), cleaner.py:214-269
-(normalize_markdown 6-step chain), noise_filter.py:313-331
-(clean_ocr_artifacts). The reference's strict hyphen merge
+(normalize_markdown 6-step chain) and noise_filter.py:192-196 (digit
+masking for repeater keys). The reference's strict hyphen merge
 (cleaner.py:5-13), used only by its legacy digital path
-(structure_engine.py:544), has no caller here and is not kept.
+(structure_engine.py:544), and its OCR-artifact cleanup
+(noise_filter.py:313-331) have no caller here and are not kept.
 """
 
 from __future__ import annotations
@@ -42,10 +43,6 @@ _STAR_BULLET = re.compile(r"^(\s*)\* ", re.MULTILINE)
 _HEADING_BLANK = re.compile(r"([^\n])\n(#{1,6} )")
 _EMPTY_ROLE_TAG = re.compile(r"<!-- role:\w+ -->\s*<!-- /role -->")
 
-_ARTIFACT_LINE_START = re.compile(r"^[|_\-=+]+\s*", re.MULTILINE)
-_MULTI_SPACE = re.compile(r"[ \t]{2,}")
-_BLANK_RUNS = re.compile(r"\n\s*\n{2,}")
-
 _WORD_NUM = re.compile(r"\b\d+\b")
 
 
@@ -72,14 +69,6 @@ def normalize_markdown(text: str) -> str:
     text = _STAR_BULLET.sub(r"\1- ", text)
     text = _HEADING_BLANK.sub(r"\1\n\n\2", text)
     text = _EMPTY_ROLE_TAG.sub("", text)
-    return text.strip()
-
-
-def clean_ocr_artifacts(text: str) -> str:
-    """Strip stray line-leading special chars, collapse spaces and blank runs."""
-    text = _ARTIFACT_LINE_START.sub("", text)
-    text = _MULTI_SPACE.sub(" ", text)
-    text = _BLANK_RUNS.sub("\n\n", text)
     return text.strip()
 
 

@@ -6,8 +6,8 @@ codes (simple and code-length-coded), color cache, LZ77 backward references
 with the 120-entry 2D distance map, meta prefix groups via the entropy
 image, and all four transforms — predictor (14 modes), color, subtract
 green, color indexing (incl. pixel bundling for palettes ≤ 16 colors).
-Lossy VP8 and animated/extended containers raise NotImplementedError —
-declared codec boundaries like the arithmetic-JPEG stubs in imagedec.py.
+Lossy VP8 and animated containers raise NotImplementedError — declared
+codec boundaries like the tiled and non-8-bit TIFF cases in imagedec.py.
 
 Encoder scope (fixtures only): no transforms, no cache, single meta group,
 balanced complete prefix codes — enough to produce REAL spec-valid VP8L

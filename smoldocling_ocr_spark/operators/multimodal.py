@@ -1,23 +1,17 @@
-"""Multimodal column plumbing: opaque binary payloads + typed metadata.
+"""Multimodal surface: image decode over ``binary`` columns, value-checked.
 
-Image/audio/video payloads ride as ``binary`` columns with struct metadata —
-the Spark-side contract (schema, partitioning, Arrow batch shape, UDF
-signatures) is real and tested. No image library ships in this container;
-decode is nevertheless REAL for the formats that need no native codec:
-PNG (stdlib zlib + scanline unfiltering; gray/RGB/RGBA/gray+alpha/palette,
-bit depths 1-16, Adam7 interlace), uncompressed BMP, baseline + progressive
-JPEG, GIF, TIFF (functions/imagedec.py), and WebP-lossless
-(functions/vp8l.py). Arithmetic-coded JPEG, lossy VP8, and exotic variants
-stay declared NotImplementedError stubs.
-
-Ops:
-* ``probe_media``      — container format + dimensions + EXIF
-                         (orientation/datetime/map) from headers
-* ``decode_image``     — PNG/BMP/JPEG/GIF/TIFF/WebP-lossless → HxWx3 uint8
-* ``extract_features`` — mapInPandas over binary batches → fixed-width float
-                         vector per row (deterministic fake: byte histogram)
-* ``frame_sample``     — UDTF-shaped: one media row → N frame rows (offsets
-                         computed for real; frame bytes are zero-stubs)
+Its entry point is the catalog query ``multimodal_decode_stats``: Spark
+decodes a deterministic 96-row fixture of real PNG / BMP / TIFF /
+WebP-lossless encodings inside Arrow batches, and a DuckDB oracle predicts
+every aggregate from the fixture's generation law. No image library ships
+in this container; decode is REAL for exactly those four formats, which
+need no native codec: PNG (stdlib zlib + scanline unfiltering; gray / RGB /
+RGBA / gray+alpha / palette, bit depths 1-16, Adam7 interlace),
+uncompressed BMP, TIFF (functions/imagedec.py) and WebP-lossless
+(functions/vp8l.py). Lossy VP8 and animated WebP raise their declared
+NotImplementedError from the WebP chunk walk; any other payload (JPEG, GIF,
+...) raises NotImplementedError from ``decode_image`` and never yields
+pixels.
 """
 
 from __future__ import annotations
@@ -26,173 +20,20 @@ import struct as _struct
 from collections.abc import Iterator
 
 import numpy as np
-import pandas as pd
-from pyspark.sql import DataFrame, functions as F, types as T
-
-from ..functions.imagedec import ifd_entries
-
-MEDIA_META_SCHEMA = T.StructType(
-    [
-        T.StructField("format", T.StringType(), True),
-        T.StructField("width", T.IntegerType(), True),
-        T.StructField("height", T.IntegerType(), True),
-        T.StructField("bytes", T.LongType(), True),
-        T.StructField("orientation", T.IntegerType(), True),
-        T.StructField("datetime", T.StringType(), True),
-        T.StructField("exif", T.MapType(T.StringType(), T.StringType()), True),
-    ]
-)
-
-FEATURE_DIM = 64
+from pyspark.sql import DataFrame, functions as F
 
 
-def sniff_media(payload: bytes) -> tuple[str, int | None, int | None]:
-    """Parse container magic + dimensions from headers (no codec needed)."""
+def sniff_media(payload: bytes) -> str:
+    """Container format from the magic bytes (no codec needed)."""
     if payload[:8] == b"\x89PNG\r\n\x1a\n" and len(payload) >= 24:
-        width, height = _struct.unpack(">II", payload[16:24])
-        return "png", int(width), int(height)
-    if payload[:3] == b"\xff\xd8\xff":
-        # walk JPEG segments to SOF0/SOF2
-        i = 2
-        while i + 9 < len(payload):
-            if payload[i] != 0xFF:
-                break
-            marker = payload[i + 1]
-            if marker in (0xC0, 0xC2):
-                height, width = _struct.unpack(">HH", payload[i + 5 : i + 9])
-                return "jpeg", int(width), int(height)
-            seg_len = _struct.unpack(">H", payload[i + 2 : i + 4])[0]
-            i += 2 + seg_len
-        return "jpeg", None, None
-    if payload[:6] in (b"GIF87a", b"GIF89a") and len(payload) >= 10:
-        width, height = _struct.unpack("<HH", payload[6:10])
-        return "gif", int(width), int(height)
+        return "png"
     if payload[:2] == b"BM" and len(payload) >= 26:
-        width, height = _struct.unpack_from("<ii", payload, 18)
-        return "bmp", int(width), abs(int(height))
-    if payload[:4] == b"RIFF" and payload[8:12] == b"WAVE":
-        return "wav", None, None
+        return "bmp"
     if payload[:4] in (b"II*\x00", b"MM\x00*"):
-        # bare TIFF: dimensions live in IFD0 tags 0x0100/0x0101
-        exif = parse_exif(payload)
-        w, h = exif.get("ImageWidth"), exif.get("ImageLength")
-        return (
-            "tiff",
-            int(w) if w and w.isdigit() else None,
-            int(h) if h and h.isdigit() else None,
-        )
+        return "tiff"
     if payload[:4] == b"RIFF" and payload[8:12] == b"WEBP" and len(payload) >= 30:
-        chunk = payload[12:16]
-        if chunk == b"VP8L" and payload[20] == 0x2F:
-            # 14-bit width-1 / height-1, LSB-first from byte 21
-            bits = int.from_bytes(payload[21:25], "little")
-            return "webp", (bits & 0x3FFF) + 1, ((bits >> 14) & 0x3FFF) + 1
-        if chunk == b"VP8 ":  # lossy: dims live in the frame header —
-            # classified DISTINCTLY (webp_lossy) because decode routes it to
-            # the declared ship-PIL boundary, not the in-repo VP8L decoder
-            if payload[23:26] == b"\x9d\x01\x2a":
-                w, h = _struct.unpack_from("<HH", payload, 26)
-                return "webp_lossy", (w & 0x3FFF), (h & 0x3FFF)
-            return "webp_lossy", None, None
-        if chunk == b"VP8X" and len(payload) >= 30:
-            w = int.from_bytes(payload[24:27], "little") + 1
-            h = int.from_bytes(payload[27:30], "little") + 1
-            # extended container: animation flag bit 1 of the feature byte
-            kind = "webp_anim" if payload[20] & 0x02 else "webp_extended"
-            return kind, w, h
-        return "webp", None, None
-    return "unknown", None, None
-
-
-# EXIF tag-id → name subset (reference metadata_extractor.py:168-175 uses
-# PIL's TAGS mapping and stringifies every value; this is the no-codec
-# equivalent — the IFD walk itself needs no image library)
-_EXIF_TAGS = {
-    0x0100: "ImageWidth",
-    0x0101: "ImageLength",
-    0x010F: "Make",
-    0x0110: "Model",
-    0x0112: "Orientation",
-    0x0131: "Software",
-    0x0132: "DateTime",
-    0x829A: "ExposureTime",
-    0x8827: "ISOSpeedRatings",
-    0x9003: "DateTimeOriginal",
-    0x9004: "DateTimeDigitized",
-    0xA002: "PixelXDimension",
-    0xA003: "PixelYDimension",
-}
-_EXIF_IFD_POINTER = 0x8769
-
-
-def _find_tiff(payload: bytes) -> bytes | None:
-    """Return the TIFF stream (EXIF container): bare TIFF files start with
-    it; JPEGs carry it in an APP1 segment tagged ``Exif\\0\\0``."""
-    if payload[:4] in (b"II*\x00", b"MM\x00*"):
-        return payload
-    if payload[:3] != b"\xff\xd8\xff":
-        return None
-    i = 2
-    while i + 4 <= len(payload) and payload[i] == 0xFF:
-        marker = payload[i + 1]
-        if marker in (0xD8, 0x01) or 0xD0 <= marker <= 0xD7:
-            i += 2
-            continue
-        if i + 4 > len(payload):
-            break
-        seg_len = _struct.unpack(">H", payload[i + 2 : i + 4])[0]
-        if marker == 0xE1 and payload[i + 4 : i + 10] == b"Exif\x00\x00":
-            return payload[i + 10 : i + 2 + seg_len]
-        if marker == 0xDA:  # start of scan — no EXIF before image data
-            break
-        i += 2 + seg_len
-    return None
-
-
-def _exif_ifd(tiff: bytes, offset: int, bo: str, out: dict[str, str]) -> int | None:
-    """Stringify one IFD's known tags into ``out`` (reference parity: every
-    EXIF value is str()-ed); returns the Exif sub-IFD offset if seen."""
-    sub_ifd = None
-    for tag, typ, count, raw in ifd_entries(tiff, offset, bo):
-        if typ == 2:  # ASCII, NUL-terminated
-            value: object = raw.split(b"\x00")[0].decode("ascii", errors="replace")
-        elif typ == 3:
-            vals = _struct.unpack(bo + f"{count}H", raw)
-            value = vals[0] if count == 1 else vals
-        elif typ in (4, 9):
-            vals = _struct.unpack(bo + f"{count}{'I' if typ == 4 else 'i'}", raw)
-            value = vals[0] if count == 1 else vals
-        elif typ in (5, 10):
-            code = "I" if typ == 5 else "i"
-            nums = _struct.unpack(bo + f"{2 * count}{code}", raw)
-            pairs = [f"{nums[2 * j]}/{nums[2 * j + 1]}" for j in range(count)]
-            value = pairs[0] if count == 1 else tuple(pairs)
-        else:
-            value = raw.hex()
-        if tag == _EXIF_IFD_POINTER:
-            sub_ifd = int(value) if isinstance(value, int) else None
-        elif tag in _EXIF_TAGS:
-            out[_EXIF_TAGS[tag]] = str(value)
-    return sub_ifd
-
-
-def parse_exif(payload: bytes) -> dict[str, str]:
-    """Pure-Python EXIF extraction: APP1/TIFF header → byte order → IFD0 →
-    Exif sub-IFD, stringified values (metadata_extractor.py:166-175 parity,
-    no codec needed for the IFD walk)."""
-    tiff = _find_tiff(payload)
-    out: dict[str, str] = {}
-    if tiff is None or len(tiff) < 8:
-        return out
-    bo = "<" if tiff[:2] == b"II" else ">"
-    (ifd0,) = _struct.unpack_from(bo + "I", tiff, 4)
-    try:
-        sub = _exif_ifd(tiff, ifd0, bo, out)
-        if sub:
-            _exif_ifd(tiff, sub, bo, out)
-    except (_struct.error, IndexError, ValueError):
-        pass
-    return out
+        return "webp"
+    return "unknown"
 
 
 _PNG_CHANNELS = {0: 1, 2: 3, 3: 1, 4: 2, 6: 4}  # color type → samples/pixel
@@ -328,32 +169,19 @@ def _decode_bmp(payload: bytes) -> np.ndarray:
 
 
 def decode_image(payload: bytes) -> np.ndarray:
-    """Decode to an HxWx3 uint8 array.
-
-    REAL for PNG (pure-Python: stdlib zlib + scanline unfiltering) and
-    uncompressed BMP; JPEG/GIF still need a codec (PIL via --py-files in a
-    full deployment) and raise NotImplementedError.
-    """
-    fmt, _, _ = sniff_media(payload)
+    """Decode a PNG / BMP / TIFF / WebP-lossless payload to an HxWx3 uint8
+    array. Any other format raises NotImplementedError: decoding it needs
+    an image codec (PIL via --py-files in a full deployment)."""
+    fmt = sniff_media(payload)
     if fmt == "png":
         return _decode_png(payload)
     if payload[:2] == b"BM":
         return _decode_bmp(payload)
-    if fmt == "jpeg":
-        from ..functions.imagedec import decode_jpeg
-
-        # baseline (SOF0) and progressive (SOF2); arithmetic coding and
-        # 12-bit raise NotImplementedError from the decoder itself
-        return decode_jpeg(payload)
-    if fmt == "gif":
-        from ..functions.imagedec import decode_gif
-
-        return decode_gif(payload)
     if fmt == "tiff":
         from ..functions.imagedec import decode_tiff
 
         return decode_tiff(payload)
-    if fmt in ("webp", "webp_lossy", "webp_extended", "webp_anim"):
+    if fmt == "webp":
         # decode_webp walks the RIFF chunks: VP8L decodes for real; lossy
         # VP8 / animation raise their specific declared-boundary message
         from ..functions.vp8l import decode_webp
@@ -363,95 +191,6 @@ def decode_image(payload: bytes) -> np.ndarray:
         f"image decode for format={fmt!r} requires an image codec; "
         "ship PIL via --py-files in a full deployment"
     )
-
-
-def probe_media(df: DataFrame) -> DataFrame:
-    """binary ``media`` column → media metadata struct (Arrow-batched,
-    header-only)."""
-    meta_schema = MEDIA_META_SCHEMA
-
-    out_cols = ["key"] + [f.name for f in meta_schema.fields]
-
-    def probe(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for key, payload in zip(pdf["key"], pdf["media"]):
-                b = bytes(payload)
-                fmt, width, height = sniff_media(b)
-                exif = parse_exif(b)
-                orient = exif.get("Orientation")
-                rows.append(
-                    {
-                        "key": key,
-                        "format": fmt,
-                        "width": width,
-                        "height": height,
-                        "bytes": len(b),
-                        "orientation": int(orient) if orient and orient.isdigit() else None,
-                        "datetime": exif.get("DateTimeOriginal") or exif.get("DateTime"),
-                        "exif": exif or None,
-                    }
-                )
-            yield pd.DataFrame(rows, columns=out_cols)
-
-    schema = T.StructType([T.StructField("key", T.StringType(), False)] + list(meta_schema.fields))
-    return df.select(F.col("key"), F.col("media")).mapInPandas(probe, schema=schema)
-
-
-def extract_features(df: DataFrame) -> DataFrame:
-    """binary ``media`` column → array<float> feature vector (deterministic fake:
-    64-bin normalized byte histogram; the Arrow plumbing is the real part)."""
-
-    schema = T.StructType(
-        [
-            T.StructField("key", T.StringType(), False),
-            T.StructField("features", T.ArrayType(T.FloatType()), True),
-        ]
-    )
-
-    def featurize(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for key, payload in zip(pdf["key"], pdf["media"]):
-                arr = np.frombuffer(bytes(payload), dtype=np.uint8)
-                hist, _ = np.histogram(arr, bins=FEATURE_DIM, range=(0, 256))
-                total = hist.sum() or 1
-                rows.append({"key": key, "features": (hist / total).astype(np.float32).tolist()})
-            yield pd.DataFrame(rows, columns=["key", "features"])
-
-    return df.select(F.col("key"), F.col("media")).mapInPandas(featurize, schema=schema)
-
-
-def frame_sample(df: DataFrame, n_frames: int = 4) -> DataFrame:
-    """One ``media`` row → n frame rows with computed byte offsets (UDTF shape).
-    Frame payloads are zero-stubs; offsets/indices are real."""
-
-    schema = T.StructType(
-        [
-            T.StructField("key", T.StringType(), False),
-            T.StructField("frame_idx", T.IntegerType(), False),
-            T.StructField("byte_offset", T.LongType(), False),
-            T.StructField("frame", T.BinaryType(), True),
-        ]
-    )
-
-    def sample(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for key, payload in zip(pdf["key"], pdf["media"]):
-                size = len(bytes(payload))
-                for idx in range(n_frames):
-                    rows.append(
-                        {
-                            "key": key,
-                            "frame_idx": idx,
-                            "byte_offset": (size * idx) // n_frames,
-                            "frame": b"",  # STUB: codec required for real frames
-                        }
-                    )
-            yield pd.DataFrame(rows, columns=["key", "frame_idx", "byte_offset", "frame"])
-
-    return df.select(F.col("key"), F.col("media")).mapInPandas(sample, schema=schema)
 
 
 # --------------------------------------------------------------------------
@@ -574,7 +313,7 @@ def decoded_image_stats(df: DataFrame) -> DataFrame:
             rows = []
             for key, payload in zip(pdf["key"], pdf["media"]):
                 b = bytes(payload)
-                fmt, _, _ = sniff_media(b)
+                fmt = sniff_media(b)
                 px = decode_image(b)
                 rows.append(
                     {

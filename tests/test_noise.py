@@ -31,24 +31,28 @@ def _pages():
     ]
 
 
+def _label(s: str, conf: float = 1.0) -> str | None:
+    return noise.classify_noise(s.strip(), conf, None)
+
+
 def test_page_number_predicate():
     for s in ("Page 1", "Page 12 of 30", "3 / 10", "- 4 -", "[ 7 ]", "42", "pg. 9"):
-        assert noise.is_page_number(s), s
-    assert not noise.is_page_number("Page numbering discussion")
+        assert _label(s) == "page_number", s
+    assert _label("Page numbering discussion") != "page_number"
 
 
 def test_watermark_predicate():
     for s in ("CONFIDENTIAL", "Draft", "DO NOT COPY", "All rights reserved.", "www.example.com", "Copyright © 2024"):
-        assert noise.is_watermark(s), s
-    assert not noise.is_watermark("This draft chapter covers watermarks")
+        assert _label(s) == "watermark", s
+    assert _label("This draft chapter covers watermarks") != "watermark"
 
 
 def test_artifact_predicates():
-    assert noise.is_artifact("|||---===", 0.2)
-    assert noise.is_artifact("...,,,", 1.0)
-    assert noise.is_artifact("ab", 1.0)  # 1-2 letter fragment
-    assert noise.is_artifact("xx", 0.2)
-    assert not noise.is_artifact("This is normal text content.", 0.95)
+    assert _label("|||---===", 0.2) == "artifact"
+    assert _label("...,,,", 1.0) == "artifact"
+    assert _label("ab", 1.0) == "artifact"  # 1-2 letter fragment
+    assert _label("xx", 0.2) == "artifact"
+    assert _label("This is normal text content.", 0.95) != "artifact"
 
 
 def test_garbled():

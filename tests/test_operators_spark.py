@@ -92,49 +92,21 @@ def test_streaming_foreachbatch(spark, cc_docs, tmp_path):
     assert "markdown" in out.columns
 
 
-def _png_bytes(width: int, height: int) -> bytes:
-    return (
-        b"\x89PNG\r\n\x1a\n" + b"\x00\x00\x00\rIHDR" + struct.pack(">II", width, height) + b"\x08\x06" + b"\x00" * 100
-    )
-
-
-def test_multimodal_probe_and_features(spark):
-    from smoldocling_ocr_spark.operators.multimodal import extract_features, frame_sample, probe_media
-
-    rows = [
-        Row(key="a", media=bytearray(_png_bytes(640, 480))),
-        Row(key="b", media=bytearray(b"GIF89a" + struct.pack("<HH", 32, 16) + b"\0" * 50)),
-        Row(key="c", media=bytearray(b"\x00\x01garbage" * 20)),
-    ]
-    df = spark.createDataFrame(rows)
-    meta = {r["key"]: r for r in probe_media(df).collect()}
-    assert meta["a"]["format"] == "png" and meta["a"]["width"] == 640 and meta["a"]["height"] == 480
-    assert meta["b"]["format"] == "gif" and meta["b"]["width"] == 32
-    assert meta["c"]["format"] == "unknown"
-
-    feats = {r["key"]: r["features"] for r in extract_features(df).collect()}
-    assert len(feats["a"]) == 64
-    assert abs(sum(feats["a"]) - 1.0) < 1e-3  # normalized histogram
-
-    frames = frame_sample(df, n_frames=4).collect()
-    assert len(frames) == 12
-    offsets = sorted(r["byte_offset"] for r in frames if r["key"] == "a")
-    assert offsets[0] == 0 and offsets[-1] > 0
-
-
 def test_decode_image_unsupported_raises():
+    """Only PNG, BMP, TIFF and WebP-lossless decode; a JPEG (truncated or
+    arithmetic-coded SOF10), a GIF or garbage is a declared boundary that
+    raises NotImplementedError, never a bogus array."""
     from smoldocling_ocr_spark.operators.multimodal import decode_image
 
-    # truncated/markerless JPEG → decoder error, never a bogus array
-    with pytest.raises(ValueError):
-        decode_image(b"\xff\xd8\xff\xe0" + b"\x00" * 64)
-    # arithmetic-coded JPEG (SOF10) → declared unsupported
-    # (progressive SOF2 is a real decode path since r3 — test_imagedec.py)
-    with pytest.raises(NotImplementedError):
-        decode_image(
-            b"\xff\xd8\xff\xca" + struct.pack(">H", 11)
-            + struct.pack(">BHHB", 8, 8, 8, 1) + bytes([1, 0x11, 0])
-        )
+    for payload in (
+        b"\xff\xd8\xff\xe0" + b"\x00" * 64,
+        b"\xff\xd8\xff\xca" + struct.pack(">H", 11)
+        + struct.pack(">BHHB", 8, 8, 8, 1) + bytes([1, 0x11, 0]),
+        b"GIF89a" + struct.pack("<HH", 32, 16) + b"\0" * 50,
+        b"\x00\x01garbage" * 20,
+    ):
+        with pytest.raises(NotImplementedError):
+            decode_image(payload)
 
 
 def _encode_png(px, filters):
@@ -499,89 +471,16 @@ def test_scan_path_emits_grid_figures_in_flow():
     assert n_pages > 100
 
 
-def _exif_tiff(bo: str = "<") -> bytes:
-    """Minimal TIFF stream: IFD0 with Make (ASCII, offset), Orientation
-    (SHORT, inline), DateTime (ASCII, offset), ImageWidth/Length (SHORT),
-    and an Exif sub-IFD holding DateTimeOriginal."""
-    import struct
-
-    def e(tag, typ, count, val4):
-        return struct.pack(bo + "HHI", tag, typ, count) + val4
-
-    make = b"Acme\x00"
-    dt = b"2024:01:02 03:04:05\x00"
-    dto = b"2023:12:31 23:59:58\x00"
-    # layout: header(8) IFD0(2+6*12+4) make dt subIFD(2+1*12+4) dto
-    ifd0_off = 8
-    ifd0_size = 2 + 6 * 12 + 4
-    make_off = ifd0_off + ifd0_size
-    dt_off = make_off + len(make)
-    sub_off = dt_off + len(dt)
-    sub_size = 2 + 1 * 12 + 4
-    dto_off = sub_off + sub_size
-    hdr = (b"II*\x00" if bo == "<" else b"MM\x00*") + struct.pack(bo + "I", ifd0_off)
-    ifd0 = struct.pack(bo + "H", 6)
-    ifd0 += e(0x0100, 3, 1, struct.pack(bo + "HH", 640, 0))      # ImageWidth
-    ifd0 += e(0x0101, 3, 1, struct.pack(bo + "HH", 480, 0))      # ImageLength
-    ifd0 += e(0x010F, 2, len(make), struct.pack(bo + "I", make_off))
-    ifd0 += e(0x0112, 3, 1, struct.pack(bo + "HH", 6, 0))        # Orientation
-    ifd0 += e(0x0132, 2, len(dt), struct.pack(bo + "I", dt_off))
-    ifd0 += e(0x8769, 4, 1, struct.pack(bo + "I", sub_off))      # Exif IFD
-    ifd0 += struct.pack(bo + "I", 0)
-    sub = struct.pack(bo + "H", 1)
-    sub += e(0x9003, 2, len(dto), struct.pack(bo + "I", dto_off))
-    sub += struct.pack(bo + "I", 0)
-    return hdr + ifd0 + make + dt + sub + dto
-
-
-def _jpeg_with_exif() -> bytes:
-    import struct
-
-    tiff = _exif_tiff("<")
-    app1 = b"Exif\x00\x00" + tiff
-    sof0 = b"\xff\xc0" + struct.pack(">H", 11) + b"\x08" + struct.pack(">HH", 480, 640) + b"\x01\x01\x11\x00"
-    return b"\xff\xd8" + b"\xff\xe1" + struct.pack(">H", len(app1) + 2) + app1 + sof0 + b"\xff\xd9"
-
-
-def test_exif_ifd_parser(spark):
-    """Pure-Python EXIF: JPEG APP1 and bare TIFF, both byte orders, values
-    stringified like the reference's PIL TAGS loop
-    (metadata_extractor.py:166-175)."""
-    from smoldocling_ocr_spark.operators.multimodal import parse_exif, probe_media, sniff_media
-
-    jpg = _jpeg_with_exif()
-    exif = parse_exif(jpg)
-    assert exif["Make"] == "Acme"
-    assert exif["Orientation"] == "6"
-    assert exif["DateTime"] == "2024:01:02 03:04:05"
-    assert exif["DateTimeOriginal"] == "2023:12:31 23:59:58"
-
-    # big-endian bare TIFF parses identically, and sniff reads its dims
-    tiff_be = _exif_tiff(">")
-    assert parse_exif(tiff_be)["Orientation"] == "6"
-    assert sniff_media(tiff_be) == ("tiff", 640, 480)
-
-    # no EXIF / garbage → empty dict, never raises
-    assert parse_exif(b"\xff\xd8\xff\xdb" + b"\x00" * 40) == {}
-    assert parse_exif(b"garbage") == {}
-
-    meta = probe_media(spark.createDataFrame([Row(key="j", media=bytearray(jpg))])).collect()[0]
-    assert meta["format"] == "jpeg" and meta["width"] == 640 and meta["height"] == 480
-    assert meta["orientation"] == 6
-    assert meta["datetime"] == "2023:12:31 23:59:58"
-    assert meta["exif"]["Make"] == "Acme"
-
-
 def test_exif_entry_sized_by_tiff_type():
     """An SSHORT (type 8) entry with count 3 holds 6 bytes, more than fit in
     the entry, so its value is read from the offset the entry holds."""
-    from smoldocling_ocr_spark.operators.multimodal import parse_exif
+    from smoldocling_ocr_spark.functions.imagedec import ifd_entries
 
     value = struct.pack("<3h", -1, 2, -3)
     ifd0 = struct.pack("<H", 1) + struct.pack("<HHII", 0x0112, 8, 3, 26) + struct.pack("<I", 0)
     tiff = b"II*\x00" + struct.pack("<I", 8) + ifd0 + value
     assert len(tiff) == 26 + len(value)
-    assert parse_exif(tiff) == {"Orientation": value.hex()}
+    assert list(ifd_entries(tiff, 8, "<")) == [(0x0112, 8, 3, value)]
 
 
 def test_cluster_conf_profile():

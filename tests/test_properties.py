@@ -185,31 +185,3 @@ def test_extract_document_total_on_arbitrary_payloads(payload, text):
     )
     assert res["pages"] >= 1
     assert 0.0 <= res["quality_score"] <= 1.0
-
-
-@given(
-    st.integers(min_value=1, max_value=3),
-    st.integers(min_value=8, max_value=28),
-    st.integers(min_value=8, max_value=28),
-    st.integers(min_value=0, max_value=2**31 - 1),
-)
-@settings(max_examples=25, deadline=None)
-def test_progressive_equals_baseline_decode(channels, h, w, seed):
-    """For ANY image, the progressive (SOF2) scan script must reconstruct
-    the same quantized coefficients as the sequential scan — successive
-    approximation is lossless once all passes land — so decode output is
-    bit-identical between the two encodings of the same pixels."""
-    import numpy as np
-
-    from smoldocling_ocr_spark.functions.imagedec import decode_jpeg
-    from tests.test_imagedec import encode_jpeg, encode_jpeg_progressive
-
-    rng = np.random.default_rng(seed)
-    if channels == 1:
-        px = rng.integers(0, 256, size=(h, w)).astype(np.uint8)
-    else:
-        px = rng.integers(0, 256, size=(h, w, 3)).astype(np.uint8)
-    prog = decode_jpeg(encode_jpeg_progressive(px))
-    base = decode_jpeg(encode_jpeg(px))
-    assert prog.shape == base.shape
-    assert (prog == base).all()

@@ -23,18 +23,16 @@ from __future__ import annotations
 
 import math
 
-import pytest
 from pyspark.sql import functions as F
 
 SF_DIR = "/root/testdata/sf0.001"
 
 
-@pytest.fixture(scope="module")
-def spark():
-    from smoldocling_ocr_spark.session import get_spark
-
-    s = get_spark(app_name="test_r6_opt", cores=8)
-    yield s
+def test_module_keeps_the_session_shuffle_width(spark):
+    """This module runs on conftest's session and leaves its width alone:
+    re-applying ``get_spark``'s default here would hand every later test
+    module a different ``spark.sql.shuffle.partitions``."""
+    assert spark.conf.get("spark.sql.shuffle.partitions") == "8"
 
 
 # awkward values: shortest-repr scientific notation, negative zero,

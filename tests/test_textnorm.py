@@ -39,9 +39,5 @@ def test_normalize_combined_unicode_dash_list():
     assert "−" not in out
 
 
-def test_clean_ocr_artifacts():
-    assert textnorm.clean_ocr_artifacts("|||--- hello   world") == "hello world"
-
-
 def test_repeater_normalization():
     assert textnorm.mask_numbers("Page 3 of 10") == "Page [NUM] of [NUM]"
