@@ -27,7 +27,7 @@ Usage (cluster):
     spark-submit --py-files dist/deps.zip jobs/curate_job.py \
         --input  <documents table path> \
         --output <curated output dir>   \
-        [--skip-decontamination] [--skip-sampling]
+        [--skip-sampling]
 
 Every decision in the pipeline is deterministic (md5 laws, min-owner
 clustering), so a re-run over the same input produces byte-identical
@@ -38,14 +38,15 @@ from __future__ import annotations
 
 import argparse
 
+# the word-count gate's floor: a curated doc has at least this many words
+MIN_WORDS = 3
+
 
 def main(argv: list[str] | None = None) -> None:
     parser = argparse.ArgumentParser(description="curate a documents corpus")
     parser.add_argument("--input", required=True)
     parser.add_argument("--output", required=True)
-    parser.add_argument("--skip-decontamination", action="store_true")
     parser.add_argument("--skip-sampling", action="store_true")
-    parser.add_argument("--min-words", type=int, default=3)
     parser.add_argument("--cores", default=None, help="local[N] cores (local mode only)")
     args = parser.parse_args(argv)
 
@@ -81,22 +82,19 @@ def main(argv: list[str] | None = None) -> None:
         comps.filter(F.col("doc_id") == F.col("component")).select("doc_id"), "doc_id"
     )
 
-    # 2. decontamination: drop docs sharing any benchmark 5-gram. The
-    # benchmark split is held out of the training corpus UNCONDITIONALLY
-    # (r6, ADVICE r5: --skip-decontamination used to ship the held-out
-    # benchmark docs); the flag skips only the n-gram overlap scan, whose
-    # benchmark index comes from ALL input docs, so a benchmark doc removed
-    # by duplicate clustering still contaminates its surviving twin.
+    # 2. decontamination: hold the benchmark split out of the training
+    # corpus, then drop docs sharing any benchmark 5-gram. The benchmark
+    # index comes from ALL input docs, so a benchmark doc removed by
+    # duplicate clustering still contaminates its surviving twin.
     survivors = survivors.filter(~is_bench())
-    if not args.skip_decontamination:
-        survivors = survivors.join(benchmark_hits(survivors, docs), "doc_id", "left_anti")
+    survivors = survivors.join(benchmark_hits(survivors, docs), "doc_id", "left_anti")
 
     # 3. cheap quality gate (full Gopher bank lives in textstats; the word
     # band is the stage-gate form)
     # count WORDS, not split fragments: consecutive/leading spaces yield
     # empty strings that must not pass the gate
     survivors = survivors.filter(
-        F.size(F.filter(F.split(F.col("text"), " "), lambda x: x != "")) >= args.min_words
+        F.size(F.filter(F.split(F.col("text"), " "), lambda x: x != "")) >= MIN_WORDS
     )
 
     # 4. per-language deterministic downsampling

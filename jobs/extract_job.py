@@ -7,7 +7,6 @@ Usage (cluster):
         --output <extracted table path>    \
         --lineage <lineage table path>     \
         [--resume]          # anti-join urls already present in --output
-        [--partitions N]    # salted repartition width (default: one task per core)
 
 The package is pure Python (stdlib + pyspark/pandas/numpy which executors
 already have), so the deps zip is all that ships — no native wheels
@@ -26,7 +25,6 @@ def main(argv: list[str] | None = None) -> None:
     parser.add_argument("--output", required=True)
     parser.add_argument("--lineage", default=None)
     parser.add_argument("--resume", action="store_true")
-    parser.add_argument("--partitions", type=int, default=None)
     parser.add_argument("--cores", default=None, help="local[N] cores (local mode only)")
     args = parser.parse_args(argv)
 
@@ -67,7 +65,7 @@ def main(argv: list[str] | None = None) -> None:
 
     normal, oversized = split_by_tier(docs)
     extracted = (
-        extract_documents(normal, num_partitions=args.partitions, already_extracted=already)
+        extract_documents(normal, already_extracted=already)
         .withColumn("run_id", F.lit(run_id))
         .withColumn("extract_pass", F.lit("normal"))
     )

@@ -151,6 +151,8 @@ def _decode_png(payload: bytes) -> np.ndarray:
 
 def _decode_bmp(payload: bytes) -> np.ndarray:
     """Uncompressed 24/32-bit BMP → HxWx3 uint8 (bottom-up rows, BGR)."""
+    if len(payload) < 34:  # the header fields read below end at byte 34
+        raise ValueError(f"truncated BMP header: {len(payload)} bytes")
     (data_off,) = _struct.unpack_from("<I", payload, 10)
     width, height = _struct.unpack_from("<ii", payload, 18)
     (bpp,) = _struct.unpack_from("<H", payload, 28)
@@ -175,7 +177,7 @@ def decode_image(payload: bytes) -> np.ndarray:
     fmt = sniff_media(payload)
     if fmt == "png":
         return _decode_png(payload)
-    if payload[:2] == b"BM":
+    if fmt == "bmp":
         return _decode_bmp(payload)
     if fmt == "tiff":
         from ..functions.imagedec import decode_tiff

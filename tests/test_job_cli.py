@@ -5,8 +5,9 @@ calls spark.stop()): a fresh extraction, then a --resume re-run over the
 same input, which must anti-join every url away and append nothing. This
 is the checkpoint-resume contract from the north rule at job level.
 In-process runs (``SparkSession.stop`` held off) cover the resume over an
-older package version's output, pin the job's Spark-job count, and show
-that a curate_job run leaves no persisted block behind in the session.
+older package version's output and after a crash between the two passes,
+pin the job's Spark-job count, and show that a curate_job run leaves no
+persisted block behind in the session.
 """
 
 from __future__ import annotations
@@ -131,6 +132,61 @@ def test_extract_job_resume_over_older_output(spark, cc_docs, tmp_path, extract_
     want = extraction_lineage(spark.read.option("mergeSchema", "true").parquet(out))
     got = spark.read.parquet(lineage)
     # a parquet read marks every column nullable; names and types must agree
+    assert [(f.name, f.dataType) for f in got.schema] == [(f.name, f.dataType) for f in want.schema]
+    assert got.collect() == want.collect()
+
+
+def test_extract_job_resume_after_crash_between_passes(spark, cc_docs, tmp_path, extract_main, monkeypatch):
+    """A run that dies after the normal pass committed and before the
+    oversized pass: the committed part files hold complete rows, --resume
+    extracts only the missing doc, and the lineage, recomputed over the
+    whole output, covers both runs."""
+    from pyspark.sql import functions as F
+
+    from smoldocling_ocr_spark.operators import pipeline
+    from smoldocling_ocr_spark.operators.lineage import extraction_lineage
+
+    inp = str(tmp_path / "docs_in")
+    out = str(tmp_path / "extracted")
+    lineage = str(tmp_path / "lineage")
+    null_doc = cc_docs.limit(1).select(
+        *[
+            (F.lit("https://x/null") if f.name == "url" else F.lit(None)).cast(f.dataType).alias(f.name)
+            for f in cc_docs.schema
+        ]
+    )
+    cc_docs.limit(8).unionByName(null_doc).write.parquet(inp)
+    args = ["--input", inp, "--output", out, "--lineage", lineage]
+
+    extract = pipeline.extract_documents
+    calls = []
+
+    def crash_on_oversized_pass(*a, **kw):
+        calls.append(1)
+        if len(calls) == 2:
+            raise RuntimeError("injected crash before the oversized pass")
+        return extract(*a, **kw)
+
+    monkeypatch.setattr(pipeline, "extract_documents", crash_on_oversized_pass)
+    with pytest.raises(RuntimeError, match="injected crash"):
+        extract_main(args)
+    monkeypatch.setattr(pipeline, "extract_documents", extract)
+    first = spark.read.parquet(out).select("url", "run_id").collect()
+    assert len(first) == 8 and len({r["run_id"] for r in first}) == 1
+    first_run = first[0]["run_id"]
+
+    extract_main([*args, "--resume"])
+
+    rows = spark.read.parquet(out).collect()
+    urls = [r["url"] for r in rows]
+    assert len(urls) == 9 and len(set(urls)) == 9
+    assert {r["url"]: r["run_id"] for r in rows if r["url"] != "https://x/null"} == {
+        r["url"]: first_run for r in first
+    }
+    (null_row,) = [r for r in rows if r["url"] == "https://x/null"]
+    assert null_row["parse_failed"] is True and null_row["extract_pass"] == "oversized"
+    want = extraction_lineage(spark.read.parquet(out))
+    got = spark.read.parquet(lineage)
     assert [(f.name, f.dataType) for f in got.schema] == [(f.name, f.dataType) for f in want.schema]
     assert got.collect() == want.collect()
 

@@ -94,8 +94,9 @@ def test_streaming_foreachbatch(spark, cc_docs, tmp_path):
 
 def test_decode_image_unsupported_raises():
     """Only PNG, BMP, TIFF and WebP-lossless decode; a JPEG (truncated or
-    arithmetic-coded SOF10), a GIF or garbage is a declared boundary that
-    raises NotImplementedError, never a bogus array."""
+    arithmetic-coded SOF10), a GIF, a "BM" too short to sniff as BMP or
+    garbage is a declared boundary that raises NotImplementedError, never a
+    bogus array or a struct.error."""
     from smoldocling_ocr_spark.operators.multimodal import decode_image
 
     for payload in (
@@ -103,6 +104,7 @@ def test_decode_image_unsupported_raises():
         b"\xff\xd8\xff\xca" + struct.pack(">H", 11)
         + struct.pack(">BHHB", 8, 8, 8, 1) + bytes([1, 0x11, 0]),
         b"GIF89a" + struct.pack("<HH", 32, 16) + b"\0" * 50,
+        b"BM" + bytes(10),
         b"\x00\x01garbage" * 20,
     ):
         with pytest.raises(NotImplementedError):
@@ -179,7 +181,7 @@ def test_decode_bmp_real():
     import numpy as np
     import struct
 
-    from smoldocling_ocr_spark.operators.multimodal import decode_image
+    from smoldocling_ocr_spark.operators.multimodal import decode_image, sniff_media
 
     rng = np.random.default_rng(4)
     px = rng.integers(0, 256, size=(3, 5, 3), dtype=np.uint8)
@@ -193,6 +195,11 @@ def test_decode_bmp_real():
     dib = struct.pack("<IiiHHIIiiII", 40, w, h, 1, 24, 0, len(rows), 2835, 2835, 0, 0)
     got = decode_image(header + dib + rows)
     assert np.array_equal(got, px)
+    # sniffed as BMP but cut inside the header fields: a declared error
+    truncated = (header + dib)[:30]
+    assert sniff_media(truncated) == "bmp"
+    with pytest.raises(ValueError, match="truncated BMP header"):
+        decode_image(truncated)
 
 
 def test_occupancy_grid_figures():

@@ -1,4 +1,5 @@
-"""Every program module and top-level definition is reached from an entry point.
+"""Every program module and top-level definition is reached from an entry
+point, and every job flag is passed by a caller.
 
 An AST import walk from the engine's entry points (the jobs, the query
 catalog, ``bench.py``, ``__spark_entry__.py`` and perfbench, its tests
@@ -17,6 +18,11 @@ definition that shares a live one's name, but never flags a live one. A
 definition that only tests call fails unless it is in
 ``_KEPT_UNREACHED_DEFS``. Each kept unit has its reason in COVERAGE.md
 ("Kept without an entry point").
+
+A third pass checks the jobs' options: every ``add_argument`` flag in
+``jobs/*.py`` must appear as a string literal in a caller (the tests,
+perfbench, ``bench.py``). A flag no caller passes is a constant in
+disguise, and the path behind it is never run.
 """
 
 from __future__ import annotations
@@ -28,7 +34,7 @@ from pathlib import Path
 ROOT = Path(__file__).resolve().parents[1]
 PKG = "smoldocling_ocr_spark"
 
-_KEPT_UNREACHED = {"sources.tablestore", "streaming", "streaming.adapter"}
+_KEPT_UNREACHED = {"streaming", "streaming.adapter"}
 _KEPT_UNREACHED_DEFS = {"session.cluster_conf", "operators.bpe.apply_merges"}
 
 
@@ -131,3 +137,23 @@ def test_every_program_module_is_reached():
 
 def test_every_top_level_definition_is_reached():
     assert unreached_definitions() == _KEPT_UNREACHED_DEFS
+
+
+def unset_job_flags() -> set[str]:
+    flags = set()
+    for path in (ROOT / "jobs").glob("*.py"):
+        for node in ast.walk(ast.parse(path.read_text())):
+            if isinstance(node, ast.Call) and getattr(node.func, "attr", None) == "add_argument":
+                flags |= {a.value for a in node.args if isinstance(a, ast.Constant) and a.value.startswith("--")}
+    callers = [*(ROOT / "tests").rglob("*.py"), *(ROOT / "perfbench").rglob("*.py"), ROOT / "bench.py"]
+    passed = {
+        n.value
+        for path in callers
+        for n in ast.walk(ast.parse(path.read_text()))
+        if isinstance(n, ast.Constant) and isinstance(n.value, str)
+    }
+    return flags - passed
+
+
+def test_every_job_flag_is_set_by_a_caller():
+    assert unset_job_flags() == set()
