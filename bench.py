@@ -5,10 +5,11 @@ on local[$SPARK_GRAFT_CPUS] and prints ONE JSON line:
   {"metric": "...", "value": N, "unit": "sec", "queries": {...}, "sf": ...}
 
 Headline metric: end-to-end extract-to-markdown wall time over the CC-style
-corpus (docs/sec reported alongside). Set BENCH_SCALING=1 to additionally run
-the extraction job at local[8] and local[32] on the same input and report
-throughput at both plus scaling efficiency (sandbox stand-in for N vs 4N
-executors per BASELINE.md).
+corpus (docs/sec reported alongside). By default it then also runs the
+skew-split evidence and the extraction job at local[8] and local[32] on a
+larger corpus, and reports throughput at both plus scaling efficiency
+(sandbox stand-in for N vs 4N executors per BASELINE.md); BENCH_SCALING=0
+skips that block.
 """
 
 from __future__ import annotations
@@ -57,7 +58,7 @@ BENCH_QUERIES = [
 ]
 
 
-def _run_extraction(spark, sf_dir: str, warmup: bool = True) -> tuple[int, float]:
+def _run_extraction(spark, sf_dir: str) -> tuple[int, float]:
     """Time the steady-state extraction job. A small warm-up run first pays
     the one-time JVM codegen + Python-worker spin-up cost outside the timed
     region — on a long-lived cluster that cost is amortized to zero, and
@@ -67,11 +68,10 @@ def _run_extraction(spark, sf_dir: str, warmup: bool = True) -> tuple[int, float
     from smoldocling_ocr_spark.sources.documents import read_cc_documents
 
     docs = read_cc_documents(spark, sf_dir)
-    if warmup:
-        # enough rows that every executor thread forks (and reuses) a python
-        # worker before the timed run — the salted repartition spreads the
-        # warm-up batch across all default partitions
-        extract_documents(docs.limit(512)).count()
+    # enough rows that every executor thread forks (and reuses) a python
+    # worker before the timed run — the salted repartition spreads the
+    # warm-up batch across all default partitions
+    extract_documents(docs.limit(512)).count()
     t0 = time.time()
     n = extract_documents(docs).count()
     return n, time.time() - t0
@@ -79,6 +79,7 @@ def _run_extraction(spark, sf_dir: str, warmup: bool = True) -> tuple[int, float
 
 _MP_ROWS: list = []
 _MP_CHUNK = 250
+_MP_DOCS = 24000
 
 
 def _mp_work(chunk_id: int) -> int:
@@ -97,7 +98,7 @@ def _mp_work(chunk_id: int) -> int:
     return len(rows)
 
 
-def _host_scaling_ceiling(n_docs: int = 24000) -> float:
+def _host_scaling_ceiling() -> float:
     """Host scaling ceiling 8→32 busy cores measured on the ACTUAL per-doc
     workload under bare multiprocessing (no Spark at all): captures CPU
     frequency scaling AND memory-bandwidth/LLC contention that the string-
@@ -115,8 +116,8 @@ def _host_scaling_ceiling(n_docs: int = 24000) -> float:
         # spawn start method workers see it empty and _mp_work regenerates
         # its own chunk deterministically instead (no div-by-zero, no
         # 32-way full-corpus regeneration).
-        _MP_ROWS = generate_rows(n_docs)
-    n_chunks = n_docs // _MP_CHUNK
+        _MP_ROWS = generate_rows(_MP_DOCS)
+    n_chunks = _MP_DOCS // _MP_CHUNK
     rates = {}
     for procs in (8, 32):
         with mp.Pool(procs) as pool:

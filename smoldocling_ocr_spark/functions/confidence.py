@@ -22,8 +22,8 @@ LOW_THRESHOLD = 0.7
 def element_confidence(elem: dict[str, Any]) -> float:
     """An element's OCR confidence as a float, unclamped; a missing, None or
     unparseable value reads as 1.0. Every stage that reads confidence (the
-    layout split, the noise artifact rule, the render, these statistics and
-    the staged element relation) reads it through here."""
+    layout split, the noise artifact rule, the render and these
+    statistics) reads it through here."""
     value = elem.get("confidence")
     if value is None:
         return 1.0

@@ -10,7 +10,7 @@ page-level orchestration (:428-493).
 The fused extraction path (``functions.extract``) calls only ``order_page``:
 its render classifies text with ``annotate.classify_text_role`` and never
 reads ``semantic_role``. The multi-signal role ladder in ``analyze_page``
-feeds the staged path (``operators.stages.analyze_layout``).
+feeds only the ``role_distribution`` catalog query.
 
 Relational twins of the window-function formulations live in
 ``smoldocling_ocr_spark.plans.catalog`` (lag/cumsum gap clustering,
@@ -261,8 +261,8 @@ def order_page(elements: list[dict[str, Any]]) -> dict[str, Any]:
 
 
 def analyze_page(elements: list[dict[str, Any]]) -> dict[str, Any]:
-    """Full per-page layout pass (the staged path): ``order_page``, then
-    multi-signal roles over the high-confidence run; low-confidence
+    """Full per-page layout pass (``role_distribution``): ``order_page``,
+    then multi-signal roles over the high-confidence run; low-confidence
     elements are plain paragraphs."""
     result = order_page(elements)
     n_high = result["high_confidence_count"]

@@ -1,2 +1,2 @@
-"""Spark DataFrame operators: the fused extraction pipeline, staged element
-relations, dedup / similarity-search / text-stats operators, lineage."""
+"""Spark DataFrame operators: the fused extraction pipeline, dedup /
+similarity-search / text-stats operators, lineage."""

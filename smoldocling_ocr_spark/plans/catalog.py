@@ -1056,16 +1056,45 @@ def q_extract_full(spark: SparkSession, sf_dir: str) -> DataFrame:
     return extract_documents(docs).orderBy("url")
 
 
+def _role_counts(docs: DataFrame) -> DataFrame:
+    """Element count per ``semantic_role`` over (html, text) documents. One
+    Python pass per document decodes the payload and runs the multi-signal
+    layout pass (``layout.analyze_page``) on each page, so only one role
+    string per element leaves the Python worker and element rows never
+    shuffle; a payload that fails to decode contributes no elements."""
+    from ..functions.extract import decode_payload
+    from ..functions.layout import analyze_page
+
+    def roles(batches):
+        import pandas as pd
+
+        for pdf in batches:
+            out = []
+            for payload, text in zip(pdf["html"], pdf["text"]):
+                try:
+                    pages, _, _, _ = decode_payload(bytes(payload), text)
+                except Exception:
+                    continue
+                for page in pages:
+                    out.extend(e["semantic_role"] for e in analyze_page(page)["elements"])
+            yield pd.DataFrame({"semantic_role": pd.Series(out, dtype=object)})
+
+    return (
+        docs.select("html", "text")
+        .mapInPandas(roles, schema="semantic_role string")
+        .groupBy("semantic_role")
+        .agg(F.count("*").alias("n"))
+        .orderBy("semantic_role")
+    )
+
+
 @query("role_distribution")  # rows-only: multi-signal classifier is a 30-branch tree
 def q_role_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """rapidocr_validator.py:110-113 role distribution over the staged
-    element pipeline (parse → grouped-map layout analysis → groupBy role)."""
-    from ..operators.stages import analyze_layout, parse_elements
+    """rapidocr_validator.py:110-113 role distribution over the layout
+    documents of the CC-style corpus."""
     from ..sources.documents import read_cc_documents
 
-    docs = read_cc_documents(spark, sf_dir).filter(F.col("url").contains("/layout/"))
-    analyzed = analyze_layout(parse_elements(docs))
-    return analyzed.groupBy("semantic_role").agg(F.count("*").alias("n")).orderBy("semantic_role")
+    return _role_counts(read_cc_documents(spark, sf_dir).filter(F.col("url").contains("/layout/")))
 
 
 @query("extract_method_routing")  # rows-only: router runs inside the parse UDF

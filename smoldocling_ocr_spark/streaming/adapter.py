@@ -2,9 +2,14 @@
 
 ``readStream`` on a documents-shaped source → the same fused extraction
 stage → ``foreachBatch`` sink. Because extraction is stateless per url, no
-watermark or state store is required; exactly-once lands on the sink's
-idempotent write (append by url + downstream MERGE/anti-join, the same
-resume contract as batch).
+watermark or state store is required.
+
+Delivery is at-least-once. The checkpoint keeps a clean restart from
+re-reading source files an earlier run committed, but the sink is a plain
+``mode("append")`` parquet write: a microbatch replayed after a failure
+between its write and its checkpoint commit appends its rows a second
+time. Nothing de-duplicates the output; a reader that needs one row per
+url must de-duplicate on ``url``.
 """
 
 from __future__ import annotations

@@ -1,4 +1,4 @@
-"""Spark operator tests: staged element pipeline, streaming adapter,
+"""Spark operator tests: layout role counts, streaming adapter,
 multimodal plumbing, figure detection, resume, lineage and payload tiers."""
 
 from __future__ import annotations
@@ -13,24 +13,36 @@ from pyspark.sql import Row, functions as F
 # cc_docs fixture lives in conftest.py (shared with test_job_cli.py)
 
 
-def test_parse_elements_relation(spark, cc_docs):
-    from smoldocling_ocr_spark.operators.stages import parse_elements
+def test_role_distribution_matches_plain_python(spark, cc_docs):
+    """The catalog's role counts equal a plain-Python Counter of
+    ``analyze_page`` roles over the decoded /layout/ payloads, and each
+    page's reading order starts at 1 and stays within n + 1 (the
+    low-confidence postfix may share rank n + 1)."""
+    from collections import Counter
 
-    elements = parse_elements(cc_docs).cache()
-    assert elements.count() > 100
-    kinds = {r["type"] for r in elements.select("type").distinct().collect()}
-    assert "text" in kinds and "table" in kinds
-    # layout payloads carry full bboxes
-    with_bbox = elements.filter(F.col("x0").isNotNull())
-    assert with_bbox.count() > 0
+    from smoldocling_ocr_spark.functions.extract import decode_payload
+    from smoldocling_ocr_spark.functions.layout import analyze_page
+    from smoldocling_ocr_spark.plans.catalog import spark_queries
+
+    want = Counter()
+    for row in cc_docs.filter(F.col("url").contains("/layout/")).select("html", "text").collect():
+        pages, _, _, _ = decode_payload(bytes(row["html"]), row["text"])
+        for page in pages:
+            elements = analyze_page(page)["elements"]
+            want.update(e["semantic_role"] for e in elements)
+            ranks = [e["reading_order"] for e in elements]
+            assert min(ranks) == 1 and max(ranks) <= len(ranks) + 1
+    assert "paragraph" in want and "heading" in want
+
+    got = {r["semantic_role"]: r["n"] for r in spark_queries()["role_distribution"](spark, "/root/testdata/sf0.001").collect()}
+    assert got == dict(want)
 
 
-def test_staged_path_reads_malformed_confidence(spark):
-    """parse_elements writes every confidence through the shared helper, so
-    its double column takes "0.9", "abc", True and None (as 0.9, 1.0, 1.0,
-    1.0) and the grouped layout pass completes over them."""
+def test_role_distribution_reads_malformed_confidence(spark):
+    """Confidences "0.9", "abc", True and None read through the shared
+    helper, so the role pass completes over them and counts every element."""
     from smoldocling_ocr_spark.functions.layoutcodec import encode_layout
-    from smoldocling_ocr_spark.operators.stages import analyze_layout, parse_elements
+    from smoldocling_ocr_spark.plans.catalog import _role_counts
 
     elements = [
         {"type": "text", "content": f"line {i} of the page", "bbox": [60, 100 + 40 * i, 400, 120 + 40 * i], "confidence": c}
@@ -38,43 +50,7 @@ def test_staged_path_reads_malformed_confidence(spark):
     ]
     payload = encode_layout({"meta": {}, "pages": [{"width": 612, "height": 792, "elements": elements}]})
     docs = spark.createDataFrame([Row(url="https://x/conf", html=bytearray(payload), text=None)], "url string, html binary, text string")
-    rows = analyze_layout(parse_elements(docs)).orderBy("elem_idx").collect()
-    assert [r["confidence"] for r in rows] == [0.9, 1.0, 1.0, 1.0]
-    assert not any(r["uncertain"] for r in rows)
-
-
-def test_analyze_layout_keeps_y0_without_bbox(spark):
-    """Elements without a bbox (text layer, HTML) carry only a y0 into the
-    grouped layout pass; it comes out unchanged, not None."""
-    from smoldocling_ocr_spark.operators.stages import analyze_layout, parse_elements
-
-    docs = spark.createDataFrame(
-        [Row(url="https://x/plain", html=bytearray(b""), text="First para.\n\nSecond para.\n\nThird para.")],
-        "url string, html binary, text string",
-    )
-    elements = parse_elements(docs)
-    parsed = {r["elem_idx"]: r["y0"] for r in elements.collect()}
-    analyzed = {r["elem_idx"]: (r["x0"], r["y0"]) for r in analyze_layout(elements).collect()}
-    assert len(parsed) == 3 and all(y is not None for y in parsed.values())
-    assert analyzed == {i: (None, y) for i, y in parsed.items()}
-
-
-def test_analyze_layout_grouped_map(spark, cc_docs):
-    from smoldocling_ocr_spark.operators.stages import analyze_layout, parse_elements
-
-    layout_docs = cc_docs.filter(F.col("url").contains("/layout/")).limit(3)
-    elements = parse_elements(layout_docs)
-    analyzed = analyze_layout(elements).cache()
-    assert analyzed.count() == elements.count()
-    roles = {r["semantic_role"] for r in analyzed.select("semantic_role").distinct().collect()}
-    assert "paragraph" in roles
-    # reading order is 1..N per page
-    per_page = analyzed.groupBy("url", "page").agg(
-        F.min("reading_order").alias("lo"), F.max("reading_order").alias("hi"), F.count("*").alias("n")
-    )
-    for r in per_page.collect():
-        assert r["lo"] == 1
-        assert r["hi"] <= r["n"] + 1  # low-conf postfix may share rank N+1
+    assert sum(r["n"] for r in _role_counts(docs).collect()) == 4
 
 
 def test_streaming_foreachbatch(spark, cc_docs, tmp_path):

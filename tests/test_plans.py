@@ -202,23 +202,6 @@ def test_no_unpartitioned_windows_anywhere(catalog_plans):
     assert not offenders, f"unpartitioned Window in: {offenders}"
 
 
-def test_staged_layout_single_exchange_on_url_page(spark):
-    """The staged path (parse_elements → analyze_layout) must carry exactly
-    one Exchange, and its partitioning key must be (url, page) — the
-    grouped-map layout pass shuffles element rows once, never twice. The
-    fused pipeline avoids even this (element rows never shuffle); the
-    measured fused-vs-staged gap is recorded in BENCH/BASELINE.md."""
-    from smoldocling_ocr_spark.operators.stages import analyze_layout, parse_elements
-    from smoldocling_ocr_spark.sources.documents import read_cc_documents
-
-    docs = read_cc_documents(spark, SF_DIR)
-    plan = _plan(analyze_layout(parse_elements(docs)))
-    assert plan.count(") Exchange") == 1
-    exchange_line = next(l for l in plan.splitlines() if "Arguments: hashpartitioning" in l)
-    assert "url" in exchange_line and "page" in exchange_line
-    assert "FlatMapGroupsInPandas" in plan or "FlatMapGroupsIn" in plan
-
-
 def test_aqe_skew_join_splits_hot_domain(spark):
     """The hot-domain skew story is executable, not aspirational: with the
     skew thresholds scaled down to test-size data, AQE splits the hot
@@ -598,7 +581,7 @@ _PINNED_EXCHANGES = {
     "repeater_detection": 2,
     "repeater_semi_join": 2,
     "revenue_forecast": 1,
-    "role_distribution": 3,
+    "role_distribution": 2,  # groupBy + orderBy; element rows no longer shuffle on (url, page)
     "sequence_packing": 2,
     "sequentiality_check": 2,
     "shipping_priority": 1,
