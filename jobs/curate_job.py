@@ -50,6 +50,7 @@ def main(argv: list[str] | None = None) -> None:
     parser.add_argument("--cores", default=None, help="local[N] cores (local mode only)")
     args = parser.parse_args(argv)
 
+    from pyspark.sql import Observation
     from pyspark.sql import functions as F
 
     from smoldocling_ocr_spark.operators.corpusops import (
@@ -67,17 +68,19 @@ def main(argv: list[str] | None = None) -> None:
 
     def write_table(df, name: str, *partition_cols: str):
         """Write one stage's table and read it back with the written schema
-        (a partitionBy directory holding no files has none to infer)."""
-        writer = df.write.mode("overwrite")
+        (a partitionBy directory holding no files has none to infer), and
+        the row count observed on the write."""
+        rows = Observation()
+        writer = df.observe(rows, F.count(F.lit(1)).alias("rows")).write.mode("overwrite")
         if partition_cols:
             writer = writer.partitionBy(*partition_cols)
         writer.parquet(f"{out}/{name}")
-        return spark.read.schema(df.schema).parquet(f"{out}/{name}")
+        return spark.read.schema(df.schema).parquet(f"{out}/{name}"), rows.get["rows"]
 
     # 1. duplicate clustering -> keep the component-min doc (the survivor);
     # the write is the action that reads clustering's checkpoints
     with owned_blocks(spark):
-        comps = write_table(connected_components(docs), "components")
+        comps, _ = write_table(connected_components(docs), "components")
     survivors = docs.join(
         comps.filter(F.col("doc_id") == F.col("component")).select("doc_id"), "doc_id"
     )
@@ -101,15 +104,17 @@ def main(argv: list[str] | None = None) -> None:
     if not args.skip_sampling:
         survivors = stratified_sample(survivors)
 
-    curated = write_table(survivors, "curated")
+    curated, curated_docs = write_table(survivors, "curated")
 
     # 5. chunk + pack into training sequences
-    sequences = write_table(packed_chunks(curated), "sequences", "shard")
+    _, sequences_rows = write_table(packed_chunks(curated), "sequences", "shard")
 
+    # input_docs counts the input, not components: a null doc_id drops out
+    # of clustering
     counts = {
         "input_docs": docs.count(),
-        "curated_docs": curated.count(),
-        "sequences_rows": sequences.count(),
+        "curated_docs": curated_docs,
+        "sequences_rows": sequences_rows,
     }
     print(counts)
     spark.stop()

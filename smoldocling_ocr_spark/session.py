@@ -32,6 +32,10 @@ _SQL_CONF = {
     "spark.sql.execution.arrow.pyspark.enabled": "true",
     "spark.sql.execution.arrow.maxRecordsPerBatch": str(ARROW_BATCH_ROWS),
     "spark.sql.session.timeZone": "UTC",
+    # one curate_job run alone touches about 110 generated classes, and the
+    # default LRU cache of 100 evicts what the next run needs (static conf:
+    # builder or spark-submit --conf only, never spark.conf.set)
+    "spark.sql.codegen.cache.maxEntries": "1000",
 }
 
 
@@ -117,6 +121,8 @@ def cluster_conf(executors: int = 1000, executor_cores: int = 8) -> dict[str, st
     * 64 MB scan splits: html-heavy rows make row-count per split the memory
       unit, not bytes; smaller splits bound Arrow batch memory per task
     * maxRecordsPerBatch matches session default (binary payloads are large)
+    * codegen cache of 1000 classes: executors compile generated code per
+      task too, and one curate run touches more classes than the default 100
     * speculation on: a straggling host re-runs tail extraction tasks — the
       fused stage is idempotent per partition
     * kryo + 128m buffer: element structs and markdown strings serialize hot

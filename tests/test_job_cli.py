@@ -6,8 +6,9 @@ same input, which must anti-join every url away and append nothing. This
 is the checkpoint-resume contract from the north rule at job level.
 In-process runs (``SparkSession.stop`` held off) cover the resume over an
 older package version's output and after a crash between the two passes,
-pin the job's Spark-job count, and show that a curate_job run leaves no
-persisted block behind in the session.
+pin both jobs' Spark-job counts, curate_job's printed row counts and the
+generated classes its warm runs compile, and show that a curate_job run
+leaves no persisted block behind in the session.
 """
 
 from __future__ import annotations
@@ -338,6 +339,41 @@ def test_spark_submit_shuffle_partitions_are_honoured(tmp_path):
     assert got == "MASTER local[2] 2 64"
 
 
+def test_bench_workers_import_package_outside_repo(tmp_path):
+    """bench.py launched from another directory, with no PYTHONPATH: the
+    repo root reaches the Python workers' PYTHONPATH, so a worker imports
+    the package (before, only the driver's sys.path had it, and the first
+    Python task failed with ``ModuleNotFoundError``)."""
+    script = tmp_path / "probe.py"
+    script.write_text(
+        "import importlib.util, os\n"
+        f"spec = importlib.util.spec_from_file_location('bench', {os.path.join(ROOT, 'bench.py')!r})\n"
+        "spec.loader.exec_module(importlib.util.module_from_spec(spec))\n"
+        "print('PYTHONPATH', os.environ.get('PYTHONPATH', '').split(os.pathsep)[0])\n"
+        "from smoldocling_ocr_spark.session import get_spark\n"
+        "spark = get_spark(cores=1)\n"
+        "def where(_):\n"
+        "    import smoldocling_ocr_spark\n"
+        "    return os.path.dirname(os.path.dirname(smoldocling_ocr_spark.__file__))\n"
+        "print('WORKER', spark.sparkContext.parallelize([0], 1).map(where).first())\n"
+        "spark.stop()\n"
+    )
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    env["PYSPARK_PYTHON"] = sys.executable
+    proc = subprocess.run(
+        [sys.executable, str(script)],
+        capture_output=True,
+        text=True,
+        timeout=300,
+        env=env,
+        cwd=str(tmp_path),
+    )
+    assert proc.returncode == 0, proc.stderr[-3000:]
+    lines = proc.stdout.splitlines()
+    assert f"PYTHONPATH {ROOT}" in lines
+    assert f"WORKER {ROOT}" in lines
+
+
 def _run_curate(args: list[str]) -> None:
     env = dict(os.environ, PYTHONPATH=ROOT)
     proc = subprocess.run(
@@ -419,17 +455,16 @@ def test_curate_job_benchmark_duplicate_contaminates_twin(spark, tmp_path):
     assert 2 in curated_ids
 
 
+# every doc fails the word-count gate; doc 3 is an exact duplicate of doc 1
+_SHORT_DOCS = [(1, "ok", "en", "s", 2), (2, "two words", "en", "s", 9), (3, "ok", "en", "s", 2)]
+
+
 def test_curate_job_empty_sequences(spark, tmp_path):
     """An input whose every doc fails the word-count gate leaves `curated`
     and `sequences` empty. The partitioned `sequences` directory then holds
     no parquet file, and the job must still finish: it reads its tables
     back with the written schema instead of inferring one."""
-    rows = [
-        (1, "ok", "en", "s", 2),
-        (2, "two words", "en", "s", 9),
-        (3, "ok", "en", "s", 2),  # exact duplicate of doc 1
-    ]
-    docs = spark.createDataFrame(rows, ["doc_id", "text", "lang", "source", "n_chars"])
+    docs = spark.createDataFrame(_SHORT_DOCS, ["doc_id", "text", "lang", "source", "n_chars"])
     inp = str(tmp_path / "docs")
     docs.write.parquet(inp)
     out = str(tmp_path / "curated")
@@ -459,3 +494,78 @@ def test_curate_job_in_process(spark, tmp_path, curate_main):
     curated = spark.read.parquet(f"{out}/curated")
     assert 0 < curated.count() < docs.count()
     assert curated.join(heads, "doc_id", "left_anti").count() == 0
+
+
+_NULL_ID_DOCS = [
+    (1, "alpha beta gamma delta", "en", "s", 22),
+    (None, "alpha beta gamma delta", "en", "s", 22),
+    (2, "one two three four five", "en", "s", 23),
+]
+
+
+@pytest.mark.parametrize(
+    "rows, flags, want",
+    [
+        (None, [], (500, 290, 805)),
+        (None, ["--skip-sampling"], (500, 464, 1287)),
+        (_SHORT_DOCS, [], (3, 0, 0)),
+        (_NULL_ID_DOCS, ["--skip-sampling"], (3, 2, 2)),
+    ],
+    ids=["sf0.001", "sf0.001_skip_sampling", "empty_sequences", "null_doc_id"],
+)
+def test_curate_job_printed_counts(spark, tmp_path, curate_main, capsys, rows, flags, want):
+    """The counts curate_job prints, the values of the job that re-counted
+    its written tables: ``curated_docs`` and ``sequences_rows`` come from
+    observations on the writes (an empty, partitioned write included), and
+    ``input_docs`` counts the input, so a null doc_id, which drops out of
+    ``components``, is still counted. ``rows`` None is the sf0.001
+    documents."""
+    import ast
+
+    inp = "/root/testdata/sf0.001/documents.parquet"
+    if rows is not None:
+        inp = str(tmp_path / "docs")
+        spark.createDataFrame(rows, "doc_id long, text string, lang string, source string, n_chars long").write.parquet(inp)
+    capsys.readouterr()
+    curate_main(["--input", inp, "--output", str(tmp_path / "out"), *flags])
+    printed = ast.literal_eval(capsys.readouterr().out.strip().splitlines()[-1])
+    assert printed == dict(zip(("input_docs", "curated_docs", "sequences_rows"), want))
+
+
+def test_curate_job_spark_job_count(spark, tmp_path, curate_main):
+    """Pins the number of Spark jobs one curate_job run starts on the
+    sf0.001 documents: 40. It was 44 when the job re-counted its
+    ``curated`` and ``sequences`` tables after writing them (two jobs per
+    count); the observations on those writes add none. ``input_docs``
+    stays a count of the input (its two jobs are in the 40): the
+    ``components`` rows would miss a null doc_id."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"curate_job_count_{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "curate_job job count")
+    try:
+        curate_main(
+            ["--input", "/root/testdata/sf0.001/documents.parquet", "--output", str(tmp_path / "out")]
+        )
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 40
+
+
+def test_curate_job_warm_runs_reuse_generated_code(spark, tmp_path, curate_main):
+    """A warm curate_job run compiles (almost) no whole-stage-codegen class:
+    one run touches about 110 generated classes, more than Spark's default
+    codegen cache of 100 holds, so with the default every run evicted what
+    the next one needed and the third run compiled 83 classes again.
+    ``spark.sql.codegen.cache.maxEntries`` (``session._SQL_CONF``) keeps
+    them."""
+    compiled = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME()
+    inp = "/root/testdata/sf0.001/documents.parquet"
+    per_run = []
+    for i in range(3):
+        before = compiled.getCount()
+        curate_main(["--input", inp, "--output", str(tmp_path / f"out{i}")])
+        per_run.append(compiled.getCount() - before)
+    assert per_run[2] < 10, f"classes compiled per run: {per_run}"

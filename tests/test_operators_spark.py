@@ -473,6 +473,8 @@ def test_cluster_conf_profile():
     assert conf["spark.sql.shuffle.partitions"] == str(2 * 1000 * 8)
     assert conf["spark.sql.adaptive.enabled"] == "true"
     assert conf["spark.speculation"] == "true"
+    # a static SQL conf: it must reach executors through the launcher
+    assert conf["spark.sql.codegen.cache.maxEntries"] == "1000"
     # every value must be a string (spark-submit --conf k=v form)
     assert all(isinstance(v, str) for v in conf.values())
 
