@@ -67,9 +67,9 @@ def main(argv: list[str] | None = None) -> None:
     out = args.output.rstrip("/")
 
     def write_table(df, name: str, *partition_cols: str):
-        """Write one stage's table and read it back with the written schema
-        (a partitionBy directory holding no files has none to infer), and
-        the row count observed on the write."""
+        """Write one stage's table; return it read back with the written
+        schema (a partitionBy directory holding no files has none to infer)
+        and the row count observed on the write."""
         rows = Observation()
         writer = df.observe(rows, F.count(F.lit(1)).alias("rows")).write.mode("overwrite")
         if partition_cols:
